@@ -278,12 +278,6 @@ object Bench {
     val canaryJson = canaries.map(c => f"$c%.3f").mkString("[", ",", "]")
     val canaryVsJson = canaryVsFloor.map(r => f"$r%.3f").getOrElse("null")
     val line = s"""{"metric":"total","value":$total,"unit":"sec","failed":$failedMedians,"reps":$reps,"reps_done":$repsDone,"partial":$partial,"budget_stop":$budgetStopped,"elapsed_s":${f"$elapsedRun%.1f"},"rep_totals":$repsJson,"idle":$idle,"floor_total":${f"$floorTotal%.1f"},"vs_floor":${f"$vsFloor%.3f"},"contended":$contended,"floor_reset":$floorReset,"canary":$canaryJson,"canary_min":${f"$canaryMin%.3f"},"canary_vs_floor":$canaryVsJson,"commit":${jstr(RunStamp.commit)},"ts":${jstr(RunStamp.ts)},"errors":$errJson,"counters":$countersJson,"queries":$qs,"sf":"$sfDir"}"""
-    // The harness records only the TAIL of the output, so the full ~4KB
-    // per-query line gets truncated at the start and fails to parse. Emit
-    // the full line first (archive: also written to BENCH_LOCAL.json),
-    // then a compact line (top-40 slowest, 2dp) LAST so a complete
-    // parseable JSON object always sits inside the tail window. Both go to
-    // stderr too — sbt's "[info] " stdout prefix breaks line parses.
     // archive per sf (BENCH_LOCAL_sf0.1.json etc.): a run at a different
     // SPARK_GRAFT_SF_DIR must not clobber another scale's baseline — the
     // round-3 archive regenerated at sf0.01 looked like a 2x speedup.

@@ -26,19 +26,20 @@ object PyApi {
     SparkEntry.oracleSql.getOrElse(name, "")
 
   /** Smallest-k eigenvalues of a symmetric COO matrix (row, col, value)
-    * via the sharded-basis thick-restart Lanczos; returns (i, eig) rows.
+    * via the one sharded Lanczos loop (SolverOps.eigshSharded) at block
+    * width 1 with thick restart; returns (i, eig) rows.
     * pylibraft analog: pylibraft.sparse.linalg.eigsh. */
   def eigsh(coo: DataFrame, n: Long, k: Int, m: Int): DataFrame = {
     val spark = coo.sparkSession
-    val ev = graft.operators.SolverOps.eigshSmallestSharded(coo, n, k, m)
+    val (ev, _) = graft.operators.SolverOps.eigshSharded(coo, n, k, m, b = 1)
     spark.createDataFrame(ev.zipWithIndex.map { case (v, i) => (i, v) })
       .toDF("i", "eig")
   }
 
-  /** [[eigsh]] plus Ritz vectors: returns the distributed (i, v) frame of
-    * k-coordinate spectral embeddings. */
+  /** [[eigsh]] plus Ritz vectors from the same loop: returns the
+    * distributed (i, v) frame of k-coordinate spectral embeddings. */
   def eigshVectors(coo: DataFrame, n: Long, k: Int, m: Int): DataFrame =
-    graft.operators.SolverOps.eigshShardedRitz(coo, n, k, m)._2
+    graft.operators.SolverOps.eigshSharded(coo, n, k, m, b = 1)._2
 
   /** Top-/bottom-k lanes per row of a dense (id, vec ARRAY<DOUBLE>) frame;
     * returns (id, pos, v, rnk). Reference: matrix/select_k.cuh. */

@@ -1,20 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the canonical session (the one the benchmark measures), so the
+    // correctness gate runs under the same configuration
+    val spark = GraftSession.create(
+      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
     // local iteration aid (mirrors Bench): SPARK_GRAFT_ONLY=q1,q2 restricts
     // the dump; tokens trimmed, unknown names warned — a misspelled filter

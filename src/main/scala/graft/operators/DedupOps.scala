@@ -23,15 +23,8 @@ object DedupOps {
       countDistinct(md5(col("text"))).as("n_unique"))
 
   /** Distinct 3-token shingles per doc: (doc_id, hs = h32(shingle)). */
-  def shingles(docs: DataFrame): DataFrame =
-    shinglesOf(TextOps.tokenize(docs))
-
-  /** [[shingles]] over an already-tokenized (doc_id, tokens) table — so a
-    * caller that needs BOTH the token arrays and the shingles (SNM's sort
-    * key + verify) tokenizes once (r15, guide §1.2; the bigramNll
-    * lesson). */
-  def shinglesOf(toksIn: DataFrame): DataFrame = {
-    val toks = toksIn.where(size(col("tokens")) >= 3)
+  def shingles(docs: DataFrame): DataFrame = {
+    val toks = TextOps.tokenize(docs).where(size(col("tokens")) >= 3)
     toks.select(col("doc_id"), explode(
         transform(sequence(lit(0), size(col("tokens")) - 3),
           i => concat_ws(" ", element_at(col("tokens"), i + 1),

@@ -263,42 +263,24 @@ object SolverOps {
 
   /** eigsh: k smallest eigenpairs of a sparse symmetric matrix via Lanczos
     * with full reorthogonalization — reference: sparse/solver/lanczos.cuh:35
-    * (lanczos_compute_eigenpairs; detail lanczos_smallest:402). The Spark
-    * shape mirrors SURVEY §3.1: each iteration's SpMV is a broadcast-join of
-    * the COO table against the current basis vector; the m×m tridiagonal
-    * eig is local. Basis vectors live on the driver (n ≤ ~1e6 per vector;
-    * restart-style variants shard them — documented future work).
+    * (lanczos_compute_eigenpairs; detail lanczos_smallest:402). This is the
+    * DRIVER-LOCAL tier: the COO table is collected once and every SpMV runs
+    * on the driver (no Spark job per step), as do the basis vectors and the
+    * m×m tridiagonal eig. Callers past driver memory go through
+    * [[eigshSmallestAuto]] (which holds the nnz dispatch) or straight to
+    * the sharded loop, [[eigshSharded]].
     */
   def eigshSmallest(coo: DataFrame, n: Int, k: Int, m: Int = 40,
       seed: Long = 3): Seq[Double] = {
-    val spark = coo.sparkSession
-    val edges = coo.select(col("row"), col("col"), col("value")).cache()
-    val nnz = edges.count()
-    // size-based dispatch (the reference's kAuto-style heuristic,
-    // matrix/detail/select_k-inl.cuh:38): per-iteration job overhead
-    // dominates below ~1e6 nnz, so small matrices run the SpMV locally;
-    // large ones use the distributed treeAggregate.
-    val localEdges: Array[(Int, Int, Double)] =
-      if (nnz <= 1000000L)
-        edges.collect().map(r => (r.getLong(0).toInt, r.getLong(1).toInt, r.getDouble(2)))
-      else null
+    val edges = coo.select(col("row"), col("col"), col("value")).collect()
+      .map(r => (r.getLong(0).toInt, r.getLong(1).toInt, r.getDouble(2)))
     def spmv(v: Array[Double]): Array[Double] = {
-      if (localEdges != null) {
-        val out = new Array[Double](n)
-        var i = 0
-        while (i < localEdges.length) {
-          val e = localEdges(i); out(e._1) += e._3 * v(e._2); i += 1
-        }
-        out
-      } else {
-        val bv = spark.sparkContext.broadcast(v)
-        val out = edges.rdd.treeAggregate(new Array[Double](n))(
-          seqOp = (a, r) => {
-            a(r.getLong(0).toInt) += r.getDouble(2) * bv.value(r.getLong(1).toInt); a
-          },
-          combOp = (a, b) => { var i = 0; while (i < n) { a(i) += b(i); i += 1 }; a })
-        bv.destroy(); out
+      val out = new Array[Double](n)
+      var i = 0
+      while (i < edges.length) {
+        val e = edges(i); out(e._1) += e._3 * v(e._2); i += 1
       }
+      out
     }
     val steps = math.min(m, n)
     val q = Array.ofDim[Double](steps + 1, n)
@@ -323,7 +305,6 @@ object SolverOps {
       if (beta(j) < 1e-12) { actual = j + 1; j = steps }
       else { q(j + 1) = w.map(_ / beta(j)); j += 1 }
     }
-    edges.unpersist()
     val t = breeze.linalg.DenseMatrix.zeros[Double](actual, actual)
     for (i <- 0 until actual) {
       t(i, i) = alpha(i)
@@ -333,288 +314,99 @@ object SolverOps {
   }
 
   /** eigsh with the basis SHARDED across the cluster — the scale-out form
-    * of [[eigshSmallest]] for n beyond driver memory; reference:
-    * sparse/solver/detail/lanczos.cuh:402 (thick-restart lanczos_smallest).
+    * of [[eigshSmallest]] for n beyond driver memory, and the one sharded
+    * Lanczos loop: each step expands a block of `b` lanes (b=1 is the
+    * reference's single-vector thick-restart lanczos_smallest,
+    * sparse/solver/detail/lanczos.cuh:402; b>1 the block Lanczos of
+    * Golub/Underwood, `b`× fewer driver round-trips for the same Krylov
+    * dimension).
+    *
     * Layout: the basis V lives as a DataFrame (i, qs ARRAY<DOUBLE>) — row i
-    * holds coordinate i of every basis vector; the driver holds only the
-    * m×m projected matrix H = VᵀAV and per-step coefficient vectors (m
-    * doubles), never an n-vector. Each expansion step is two keyed
-    * distributed jobs: the SpMV (join on col + sum) feeding the first
-    * Gram-Schmidt pass (ONE hash aggregate computes every ⟨q_t, w⟩ as a
-    * per-lane codegen'd sum), then the second pass re-MEASURING
-    * ⟨q_t, w₁⟩ from the subtracted data plus ‖w₁‖² so the residual norm
-    * comes from Pythagoras. The second pass must read the subtracted
-    * vector, not be derived from a driver-held Gram: c₂ ≈ (I−VᵀV)c₁ ≈ 0
-    * only corrects the measurement error in c₁, while the orthogonality
-    * drift CGS2 exists to kill is the CANCELLATION rounding in
-    * fl(w − Vc₁) itself — the Gram shortcut is CGS1 in disguise and
-    * produces ghost eigenvalues (observed: a duplicate zero on the chain
-    * fixture under a plan-order perturbation). Restart compresses the
-    * basis to the l best Ritz vectors (a per-row broadcast matvec) plus
-    * the residual lane, resets H to diag(θ) and continues — the
-    * thick-restart scheme, with the coupling block re-measured exactly by
-    * the full-reorth coefficients.
+    * holds coordinate i of every lane; the driver holds only the projected
+    * matrix H = VᵀAV and per-step coefficient vectors, never an n-vector.
+    *
+    * Step: ONE action. The SpMV (b matvecs ride one join, so the edge table
+    * is touched once per block) feeds the first classical Gram-Schmidt pass;
+    * its coefficients C₁ come back into the same plan as a broadcast row,
+    * and the second pass re-MEASURES ⟨q_t, w₁⟩ from the subtracted data
+    * along with the b×b Gram of W₁. The second pass must read the
+    * subtracted vectors, not be derived from a driver-held Gram: C₂ only
+    * corrects the measurement error in C₁, while the orthogonality drift
+    * CGS2 exists to kill is the cancellation rounding in fl(W − VC₁) itself
+    * — the Gram shortcut is CGS1 in disguise and produces ghost eigenvalues.
+    * The new block is orthonormalized on the driver from
+    * G(W′) = G(W₁) − C₂ᵀC₂ (W₁ = W′ + V·C₂ with W′ ⊥ V), by a rank-revealing
+    * eigen-decomposition; a rank-deficient Gram deflates, and a fully
+    * deflated block means the Krylov space is exhausted (invariant
+    * subspace), where Rayleigh-Ritz is exact.
+    *
+    * Certificates: for a Ritz pair (θ, y) of the measured H,
+    * ‖A·Vy − θ·Vy‖ = ‖R·y_tail‖ (R the block coupling, y_tail the last
+    * block's components) plus at most √(dropped λ)·‖y_tail‖ for deflated
+    * directions. Once every wanted pair is under `tol` the values return.
+    * `tol` is the RESIDUAL bound; the eigenvalue error obeys Kato-Temple
+    * |θ − λ| ≤ tol²/gap, so a caller that knows its spectral gap may pass
+    * a looser tol with a still-certified value.
+    *
+    * Thick restart: when the lane budget `m` runs out first, the basis is
+    * compressed to the min(k+2, lanes) best Ritz vectors (a per-row
+    * broadcast matvec) plus the newest orthonormal block, H is reset to
+    * diag(θ), and the next step's full reorthogonalization re-measures the
+    * coupling between the two. Up to `maxRestarts` restarts, stopping early
+    * once the wanted Ritz values repeat to 1e-9 across a restart;
+    * `maxRestarts = 0` is the single-phase block form.
+    *
+    * Returns (eigenvalues, Ritz vectors): the vectors are ONE lazy
+    * distributed per-row matvec over the final basis, (i, v ARRAY<DOUBLE>
+    * of k coords), row i of V·Y for the driver-held subspace eigenvectors
+    * Y — nothing runs unless the caller consumes it.
     */
-  def eigshSmallestSharded(coo: DataFrame, n: Long, k: Int, m: Int = 25,
-      maxRestarts: Int = 3, seed: Long = 3): Seq[Double] =
-    eigshShardedCore(coo, n, k, m, maxRestarts, seed)._1
-
-  /** [[eigshSmallestSharded]] plus the RITZ VECTORS — the factor output a
-    * pipeline consumes (spectral embeddings), not just the spectrum. The
-    * k eigenvectors come out as ONE distributed per-row matvec over the
-    * sharded basis: row i of V_k is ⟨qs_i, y_c⟩ for the m-dim subspace
-    * eigenvectors y_c (driver-held, m·k doubles) — no n-sized driver
-    * state, same shape as the basis itself. Returns (eigenvalues,
-    * DataFrame (i, v ARRAY<DOUBLE> of k coords)). */
-  def eigshShardedRitz(coo: DataFrame, n: Long, k: Int, m: Int = 25,
-      maxRestarts: Int = 3, seed: Long = 3): (Seq[Double], DataFrame) = {
-    val (vals, basis, ys, dim) = eigshShardedCore(coo, n, k, m, maxRestarts, seed)
-    val vecs = basis.select(col("i"),
-      array(ys.toIndexedSeq.map { y =>
-        graft.functions.ArrayMath.dot(
-          org.apache.spark.sql.functions.slice(col("qs"), lit(1), lit(dim)),
-          typedLit(y.toSeq))
-      }: _*).as("v"))
-    (vals, vecs)
-  }
-
-  private def eigshShardedCore(coo: DataFrame, n: Long, k: Int, m: Int,
-      maxRestarts: Int, seed: Long): (Seq[Double], DataFrame, Array[Array[Double]], Int) = {
-    import breeze.linalg.{eigSym, DenseMatrix}
-    import graft.functions.{ArrayMath, VectorAgg}
-    val spark = coo.sparkSession
-    // partition count tracks the per-row WORK, not just n (r15, same
-    // cells-per-task model as the block path): each step's jobs do
-    // interpreted lane math over the m-wide basis arrays, so size by
-    // n·m cells / 25k — tiny fixtures still run single-task jobs (the
-    // per-step driver loop is job-latency bound there), compute-bound
-    // n reaches full parallelism 25× earlier (measured on the n=1e5
-    // block fixture: 4 → 25-32 partitions halves the step).
-    val parts = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong, n * m / 25000L)).toInt
-    // shuffle width must track n too: the driver loop issues ~2 jobs per
-    // step, and at the default width every 30-row exchange schedules a
-    // full-width task wave — pure scheduler overhead at small n, the right
-    // width at large n. Restored on exit. NOTE: spark.sql.shuffle.partitions
-    // is session-global, so a concurrent query on the SAME SparkSession runs
-    // at this width while the solve is in flight (performance-only skew; the
-    // driver-loop solvers assume the single-threaded session the harness
-    // provides — there is no per-DataFrame equivalent of this knob).
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    // AQE re-plans every exchange stage-by-stage; at the already-chosen
-    // width that is pure per-step planning latency in a ~steps-long driver
-    // loop (measured ~30% of wall time on the n=30 fixture). Restored on
-    // exit, same session-global caveat as the width knob above.
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val prevBcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    // every step's plan embeds the step counter as a primitive literal
-    // (element_at(qs, lanes)), so no generated class is ever reused — the
-    // janino compile (~2 stages × ~steps jobs) dominates until the per-row
-    // lane math is tens of millions of rows per step; interpreted execution
-    // of a ≤2M-row job is faster than compiling its codegen. Truly large n
-    // keeps codegen: there the per-row work amortizes the compile.
-    val prevWscg = spark.conf.get("spark.sql.codegen.wholeStage")
-    val prevFactory = spark.conf.get("spark.sql.codegen.factoryMode")
-    if (n <= 2000000L) {
-      spark.conf.set("spark.sql.codegen.wholeStage", "false")
-      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    }
-    try {
-    // hash-distribute the edge table on the join key ONCE and record the
-    // sort order in the checkpoint: LogicalRDD carries outputPartitioning/
-    // outputOrdering, so every step's edges⋈qj sort-merge join plans ZERO
-    // exchange and ZERO sort on the (nnz-sized) edge side — the per-step
-    // shuffles left are qj (n rows) and the row-keyed partial aggregate.
-    val edges = coo.select(col("row"), col("col"), col("value"))
-      .repartition(parts, col("col")).sortWithinPartitions("col")
-      .localCheckpoint(true)
-    // n+1 cap: when m ≥ n the basis can reach the full space, the residual
-    // vanishes and ONE phase returns the exact spectrum (no restart cycles)
-    val steps = math.min(m, n.toInt + 1)
-    // deterministic hash-gaussian start vector, normalized
-    // basis invariant: hash-partitioned on i (width = parts) and sorted by
-    // i — projections are alias-aware, so qj (i→col) arrives at the edge
-    // join already distributed on the join key, and the basis⋈w0 join needs
-    // no exchange either (w0's aggregate inherits HashPartitioning(row→i)).
-    // Every basis update below is a projection, so the invariant survives
-    // each localCheckpoint (LogicalRDD preserves partitioning + ordering).
-    val raw = spark.range(n).select(col("id").as("i"),
-      RandomOps.normal(col("id"), seed, "lz").as("x"))
-      .repartition(parts, col("i")).sortWithinPartitions("i")
-    val n0 = math.sqrt(raw.agg(sum(col("x") * col("x"))).head().getDouble(0))
-    var basis = raw.select(col("i"), array(col("x") / n0).as("qs")).localCheckpoint(true)
-    var h = DenseMatrix.zeros[Double](steps + 1, steps + 1)
-    var lanes = 1
-    var prevRitz: Option[Seq[Double]] = None
-    var result: Seq[Double] = null
-    // subspace eigenvectors + dimension captured at whichever exit fired,
-    // so Ritz vectors can be materialized as one basis matvec afterwards
-    var vecY: Array[Array[Double]] = null
-    var vecDim = 0
-    var restart = 0
-    while (result == null && restart <= maxRestarts) {
-      var invariant = false
-      while (lanes < steps && !invariant && result == null) {
-        val j = lanes - 1 // expand the newest lane
-        val qj = basis.select(col("i").as("col"), element_at(col("qs"), lanes).as("x"))
-        val w0 = edges.join(qj, Seq("col"))
-          .groupBy(col("row").as("i")).agg(sum(col("value") * col("x")).as("w"))
-        // lazy checkpoint: materialized by the c1 aggregate's job (saves a
-        // dedicated eager-materialization job per step), then reused by the
-        // second CGS pass and the basis update
-        val df = basis.join(w0, Seq("i"), "left")
-          .select(col("i"), col("qs"), coalesce(col("w"), lit(0.0)).as("w"))
-          .localCheckpoint(false)
-        // all ⟨q_t, w⟩ in one aggregate; two Gram-Schmidt passes ("twice is
-        // enough") — a single CGS pass loses orthogonality across restarts
-        // and produces ghost eigenvalues. The second pass ALSO returns ‖w₁‖²
-        // so the residual norm comes from Pythagoras (w₁ = wp + V·c₂ with
-        // wp ⊥ V): one fewer job per step.
-        val c1 = df.agg(VectorAgg.axpySum(col("qs"), col("w")).as("c"))
-          .head().getSeq[Double](0)
-        val w1 = df.select(col("i"), col("qs"),
-          (col("w") - ArrayMath.dot(col("qs"), typedLit(c1))).as("w"))
-        val r2 = w1.agg(VectorAgg.axpySum(col("qs"), col("w")).as("c"),
-          sum(col("w") * col("w")).as("n2")).head()
-        val c2 = r2.getSeq[Double](0)
-        val coefs = c1.zip(c2).map { case (a, b) => a + b }
-        (0 until lanes).foreach { t => h(t, j) = coefs(t); h(j, t) = coefs(t) }
-        val wp = w1.select(col("i"), col("qs"),
-          (col("w") - ArrayMath.dot(col("qs"), typedLit(c2))).as("wp"))
-        val b2 = r2.getDouble(1) - c2.map(x => x * x).sum
-        val beta = math.sqrt(math.max(b2, 0.0))
-        if (beta < 1e-10) invariant = true
-        else {
-          h(j + 1, j) = beta; h(j, j + 1) = beta
-          // lazy: the next step's first aggregate materializes it
-          basis = wp.select(col("i"),
-            concat(col("qs"), array(col("wp") / beta)).as("qs")).localCheckpoint(false)
-          lanes += 1
-          // per-step Ritz residual certificate: for an eigenpair (θ, y) of
-          // the lanes×lanes projected block, ‖A·Vy − θ·Vy‖ = β·|y_last|
-          // (the classic Lanczos bound) — once every wanted pair is under
-          // tol the values are certified and no confirmation phase (or
-          // restart) is needed. Driver-local m×m eig, no cluster work.
-          val dim = lanes - 1
-          if (dim >= k + 2) {
-            val es0 = eigSym(h(0 until dim, 0 until dim).copy)
-            val ord = es0.eigenvalues.toArray.zipWithIndex.sortBy(_._1).take(k)
-            val maxBound = ord.map { case (_, c) =>
-              beta * math.abs(es0.eigenvectors(dim - 1, c)) }.max
-            if (maxBound < 1e-9) {
-              result = ord.map(_._1).toSeq
-              vecY = ord.map { case (_, c) =>
-                (0 until dim).map(t => es0.eigenvectors(t, c)).toArray }.toArray
-              vecDim = dim
-            }
-          }
-        }
-      }
-      // Rayleigh-Ritz over the expanded block (skipped when the per-step
-      // certificate already returned)
-      if (result == null) {
-      val big = lanes - (if (invariant) 0 else 1)
-      val es = eigSym(h(0 until big, 0 until big).copy)
-      val order = es.eigenvalues.toArray.zipWithIndex.sortBy(_._1)
-      val ritz = order.take(k).map(_._1).toSeq
-      val converged = prevRitz.exists(p =>
-        p.zip(ritz).map { case (a, b) => math.abs(a - b) }.max < 1e-9)
-      if (invariant || converged || restart == maxRestarts) {
-        result = ritz
-        vecY = order.take(k).map { case (_, c) =>
-          (0 until big).map(t => es.eigenvectors(t, c)).toArray }.toArray
-        vecDim = big
-      } else {
-        // thick restart: compress to l best Ritz vectors + residual lane
-        prevRitz = Some(ritz)
-        val l = math.min(k + 2, big)
-        val yCols = order.take(l).map(_._2)
-        val newLanes = (yCols.map { c =>
-          val yc = (0 until big).map(t => es.eigenvectors(t, c))
-          ArrayMath.dot(org.apache.spark.sql.functions.slice(
-            col("qs"), lit(1), lit(big)), typedLit(yc))
-        } :+ element_at(col("qs"), lanes)).toIndexedSeq
-        basis = basis.select(col("i"), array(newLanes: _*).as("qs")).localCheckpoint(true)
-        h = DenseMatrix.zeros[Double](steps + 1, steps + 1)
-        order.take(l).zipWithIndex.foreach { case ((th, _), t) => h(t, t) = th }
-        lanes = l + 1
-        restart += 1
-      }
-      }
-    }
-    (result, basis, vecY, vecDim)
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBcast)
-      spark.conf.set("spark.sql.codegen.wholeStage", prevWscg)
-      spark.conf.set("spark.sql.codegen.factoryMode", prevFactory)
-    }
-  }
-
-  /** BLOCK-Lanczos variant of [[eigshSmallestSharded]] — expands a block of
-    * `b` lanes per driver round-trip, so the job-latency-bound driver loop
-    * runs `b`× fewer steps for the same Krylov dimension (the classic block
-    * Lanczos of Golub/Underwood; reference lanczos.cuh is the b=1 form).
-    * Same sharded layout (basis rows hold coordinate i of every lane,
-    * driver holds only the m×m projected matrix) and the same 2-job step:
-    * one SpMV+first-CGS-pass aggregate (b matvecs ride ONE join — the edge
-    * table is touched once per BLOCK, not once per lane), one
-    * second-pass+block-Gram aggregate. CGS2 full reorthogonalization
-    * exactly as the b=1 path (the ghost-eigenvalue lesson); the new block
-    * is intra-orthonormalized by driver-side Cholesky QR of the b×b Gram,
-    * derived from the pass-2 aggregate without a third job
-    * (G(W′) = G(W₁) − C₂ᵀC₂, since W₁ = W′ + V·C₂ with W′ ⊥ V). The
-    * per-step Ritz certificate generalizes: for an eigenpair (θ, y) of the
-    * measured H, ‖A·Vy − θ·Vy‖ = ‖R·y_tail‖ with R the block coupling and
-    * y_tail the last b components. A rank-deficient block Gram means the
-    * Krylov space is exhausted (invariant subspace) — Rayleigh-Ritz is
-    * then exact. Single phase (no thick restart): the block form exists
-    * for the large-n certificate-terminated regime where restarts never
-    * fire; [[eigshSmallestSharded]] remains the restart-capable path.
-    */
-  def eigshSmallestShardedBlock(coo: DataFrame, n: Long, k: Int, m: Int = 25,
-      seed: Long = 3, b: Int = 2, tol: Double = 1e-9): Seq[Double] = {
+  def eigshSharded(coo: DataFrame, n: Long, k: Int, m: Int = 25, b: Int = 2,
+      maxRestarts: Int = 3, tol: Double = 1e-9,
+      seed: Long = 3): (Seq[Double], DataFrame) = {
     import breeze.linalg.{eigSym, norm, DenseMatrix, DenseVector}
     import graft.functions.{ArrayMath, VectorAgg}
     val spark = coo.sparkSession
-    // cells-per-task divisor (r15, VERDICT r14 item 1): the loop's per-row
-    // work is lanes-wide array math (CGS folds + axpy buffers), so the
-    // width heuristic sizes by CELLS (rows × basis width m+b), not rows —
-    // rows/25000 undersized the compute-bound step 8× at n=1e5 (probed:
-    // 4 partitions ≈ 650 ms/step r1, 25-32 partitions ≈ 300-430 ms/step;
-    // 1 partition 2.3× worse, so this is CPU row work, not scheduling).
-    // Still capped at cluster parallelism — not a local-core constant.
-    // Probe knob (SPARK_GRAFT_EIGSH_ROWS_PER_TASK, cells/task) kept so
-    // the trade stays measurable without a rebuild.
-    val cellsPerTask = sys.env.get("SPARK_GRAFT_EIGSH_ROWS_PER_TASK")
-      .map(_.toLong).getOrElse(25000L)
+    // partition count tracks the per-row WORK, not just n: the loop's
+    // per-row work is lanes-wide array math (CGS folds + axpy buffers), so
+    // the width sizes by CELLS (rows × basis width m+b) at 25k cells per
+    // task, capped at cluster parallelism. rows/25000 undersized the
+    // compute-bound step 8× at n=1e5 (probed: 4 partitions ≈ 650 ms/step,
+    // 25-32 partitions ≈ 300-430 ms/step; 1 partition 2.3× worse, so this
+    // is CPU row work, not scheduling); tiny fixtures still run
+    // single-task jobs, where the driver loop is job-latency bound.
     val parts = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong,
-      n * (m + b) / cellsPerTask)).toInt
-    // same knob rationale as eigshShardedCore: width tracks n, AQE off in
-    // the step loop, interpreted execution below the janino crossover
-    val codegenOff = sys.env.get("SPARK_GRAFT_EIGSH_CODEGEN")
-      .map(_ != "1").getOrElse(n <= 2000000L)
-    val codegenKnobs = if (codegenOff) Seq(
+      spark.sparkContext.defaultParallelism.toLong, n * (m + b) / 25000L)).toInt
+    // Loop knobs, session-global while the solve runs (see withConfs).
+    // Shuffle width tracks n: at the default width every small exchange
+    // schedules a full-width task wave. AQE off: it re-plans every exchange
+    // stage by stage, pure per-step planning latency at an already-chosen
+    // width (measured ~30% of wall time on the n=30 fixture). Interpreted
+    // execution up to n = 2e6: every step's plan embeds fresh lane counts
+    // and coefficient literals, so no generated class is ever reused and
+    // the janino compile dominates until the per-row lane math amortizes it.
+    val codegenKnobs = if (n <= 2000000L) Seq(
       "spark.sql.codegen.wholeStage" -> "false",
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") else Seq.empty
     graft.GraftSession.withConfs(spark, (Seq(
       "spark.sql.shuffle.partitions" -> parts.toString,
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1") ++ codegenKnobs): _*) {
+      // hash-distribute the edge table on the join key ONCE and record the
+      // sort order in the checkpoint: LogicalRDD carries outputPartitioning/
+      // outputOrdering, so every step's edges⋈qj join plans ZERO exchange
+      // and ZERO sort on the (nnz-sized) edge side. The basis keeps the
+      // matching invariant (hash-partitioned on i, sorted by i; every
+      // update is a projection, and projections are alias-aware), so qj
+      // (i→col) arrives at the edge join already distributed on the key.
       val edges = coo.select(col("row"), col("col"), col("value"))
         .repartition(parts, col("col")).sortWithinPartitions("col")
         .localCheckpoint(true)
       val cap = m // lane budget; space exhaustion is caught by deflation
       // relative floor reveals rank loss inside a healthy block; the
-      // absolute floor (λ = 1e-20 ⇔ remainder norm 1e-10) matches the b=1
-      // path's beta < 1e-10 invariant cutoff, so small-norm matrices keep
-      // their genuinely nonzero remainders instead of deflating to a
-      // falsely-certified start space
+      // absolute floor (λ = 1e-20 ⇔ remainder norm 1e-10) keeps the
+      // genuinely nonzero remainders of small-norm matrices instead of
+      // deflating to a falsely-certified start space
       val rankTol = 1e-14
       val absFloor = 1e-20
       // b deterministic hash-gaussian streams, eigen-orthonormalized (the
@@ -635,7 +427,7 @@ object SolverOps {
         * also returns R_eff = Λ_r^{1/2}·U_rᵀ (r×w), the block coupling,
         * and √(max dropped λ) — the residual norm a deflated direction can
         * still carry, which the certificate must add to its bound. */
-    def orthMap(g: DenseMatrix[Double]):
+      def orthMap(g: DenseMatrix[Double]):
           (DenseMatrix[Double], DenseMatrix[Double], Int, Double) = {
         val es = eigSym((g + g.t) *:* 0.5)
         val lam = es.eigenvalues
@@ -666,10 +458,14 @@ object SolverOps {
       var lanes = b0 // total lanes; the newest curB of them are unmeasured
       var curB = b0
       graft.Instrument.inc("eigsh.ms_setup", (System.nanoTime() - tSetup0) / 1000000L)
-      val h = DenseMatrix.zeros[Double](cap + b, cap + b)
+      // a restart keeps min(k+2, lanes) Ritz lanes plus one block, which
+      // may exceed a budget m < k+2
+      val h = DenseMatrix.zeros[Double](math.max(cap, k + 2) + b, math.max(cap, k + 2) + b)
       var result: Seq[Double] = null
-      var done = false
-      while (!done) {
+      var ys: Seq[Array[Double]] = null // subspace eigenvectors of `result`
+      var prevRitz: Seq[Double] = Nil
+      var restarts = 0
+      while (result == null) {
         graft.Instrument.inc("eigsh.block_steps")
         val tStep0 = System.nanoTime()
         // ---- measure the newest block [lanes-curB, lanes) ----
@@ -679,22 +475,20 @@ object SolverOps {
         val wAggs = (0 until curB).map(t => sum(col("value") * col(s"x$t")).as(s"w$t"))
         val w0 = edges.join(qj, Seq("col")).groupBy(col("row").as("i"))
           .agg(wAggs.head, wAggs.tail: _*)
+        // lazy checkpoint: materialized by this step's action, then read
+        // by the next basis update as a one-level lineage leaf
         val df = basis.join(w0, Seq("i"), "left")
           .select(col("i") +: col("qs") +: (0 until curB).map(t =>
             coalesce(col(s"w$t"), lit(0.0)).as(s"w$t")): _*)
           .localCheckpoint(false)
-        // ONE action per step (r15, VERDICT r14 item 1 — batch r1+r2 into
-        // one job chain): the CGS1 coefficients c1 = Σ qs·w are computed
-        // as a 1-row broadcast subtree and crossJoined back, so the CGS2
-        // pass consumes them WITHOUT a driver round-trip — per step this
-        // drops one action submission + one Catalyst pass (measured
-        // ~100-170 ms/step of the ~400-700 ms step at n=1e5). The per-row
-        // arithmetic is unchanged: w − ArrayDot(qs, c1_t) over the SAME
-        // c1 values, same row order (BroadcastNestedLoopJoin streams the
-        // probe side in place), so partial-aggregate folds are
-        // bit-identical to the two-action form. c1 itself rides back on
-        // the same collected row via first() (every joined row carries
-        // the identical broadcast array).
+        // ONE action per step: the CGS1 coefficients c1 = Σ qs·w are a
+        // 1-row broadcast subtree crossJoined back, so the CGS2 pass
+        // consumes them WITHOUT a driver round-trip (measured ~100-170 ms
+        // of a ~400-700 ms step at n=1e5). BroadcastNestedLoopJoin streams
+        // the probe side in place, so the partial-aggregate folds see the
+        // same rows in the same order as a two-action form. c1 itself
+        // rides back on the collected row via first() (every joined row
+        // carries the identical broadcast array).
         val c1Aggs = (0 until curB).map(t =>
           VectorAgg.axpySum(col("qs"), col(s"w$t")).as(s"c1_$t"))
         val c1Row = df.agg(c1Aggs.head, c1Aggs.tail: _*)
@@ -707,7 +501,7 @@ object SolverOps {
           VectorAgg.axpySum(col("qs"), col(s"w$t")).as(s"c$t")) ++
           gPairs.map { case (a, c) => sum(col(s"w$a") * col(s"w$c")).as(s"g${a}_$c") } ++
           (0 until curB).map(t => first(col(s"c1_$t")).as(s"c1f_$t"))
-        // plan-vs-execute attribution (r15): force the action's own
+        // plan-vs-execute attribution: force the action's own
         // QueryExecution first, so ms_r1_plan isolates driver-side
         // Catalyst work from the jobs. collect()(0) (not head()) keeps
         // the forced plan the one the action runs — head() builds a
@@ -726,76 +520,91 @@ object SolverOps {
             h(s, j0 + t) = v; h(j0 + t, s) = v
           }
         }
-        // Gram of the orthogonalized remainder, derived without a third
-        // job: W₁ = W′ + V·C₂ with W′ ⊥ V ⇒ G(W′) = G(W₁) − C₂ᵀC₂
         val gW1 = gramOf(r2, curB, curB)
         val gPrime = DenseMatrix.tabulate[Double](curB, curB) { (a, c) =>
           gW1(a, c) - (0 until lanes).map(s => c2(a)(s) * c2(c)(s)).sum }
         val (mMap, rEff, rNew, dropBound) = orthMap(gPrime)
-        // certificate over the fully-measured H[0:lanes]: residual of a
-        // Ritz pair (θ, y) is ‖R_eff·y_tail‖ plus at most √(dropped λ)
-        // per deflated direction — the deflation cut must show up in the
-        // bound, not silently vanish from it
+        // Ritz pairs of the fully-measured H[0:lanes], smallest first
+        lazy val es = eigSym(h(0 until lanes, 0 until lanes).copy)
+        def ritz(cnt: Int) = es.eigenvalues.toArray.zipWithIndex.sortBy(_._1).take(cnt)
+        def finish(): Unit = {
+          val ord = ritz(k)
+          result = ord.map(_._1).toSeq
+          ys = ord.map { case (_, c) => (0 until lanes).map(t => es.eigenvectors(t, c)).toArray }
+        }
+        // certificate: residual of a Ritz pair (θ, y) is ‖R_eff·y_tail‖
+        // plus at most √(dropped λ) per deflated direction — the deflation
+        // cut must show up in the bound, not silently vanish from it
         if (lanes >= k + 2 || rNew == 0) {
-          val es = eigSym(h(0 until lanes, 0 until lanes).copy)
-          val ord = es.eigenvalues.toArray.zipWithIndex.sortBy(_._1).take(k)
-          val maxBound = ord.map { case (_, cIdx) =>
+          val maxBound = ritz(k).map { case (_, cIdx) =>
             val yTail = DenseVector((j0 until lanes)
               .map(s => es.eigenvectors(s, cIdx)).toArray)
             val kept = if (rNew == 0) 0.0 else norm(rEff * yTail)
             kept + dropBound * norm(yTail)
           }.max
-          // tol is the RESIDUAL bound ‖A·Vy − θ·Vy‖; the eigenvalue error
-          // obeys Kato-Temple |θ − λ| ≤ bound²/gap, so a caller that knows
-          // its spectral gap may pass a looser tol with a still-certified
-          // value (measured on the n=1e5 diag fixture the bound decays
-          // ~250× per block step — tol 1e-5 saves 2 of ~9 steps)
-          if (maxBound < tol) { result = ord.map(_._1).toSeq; done = true }
+          if (maxBound < tol) finish()
         }
-        if (!done) {
-          if (rNew == 0 || lanes + rNew > cap) done = true // RR fallback below
+        if (result == null) {
+          val restart = lanes + rNew > cap
+          def settled = prevRitz.nonEmpty &&
+            prevRitz.zip(ritz(k)).map { case (a, (c, _)) => math.abs(a - c) }.max < 1e-9
+          if (rNew == 0 || (restart && (restarts == maxRestarts || settled))) finish()
           else {
-            // deflation-aware expansion: r ≤ curB new orthonormal lanes
-            // from Q_new = (W₁ − V·C₂)·M, derived from the CHECKPOINTED
-            // df with c1/c2 as literals (NOT from w1 — its broadcast-c1
-            // subtree would re-execute the c1 aggregate when the next
-            // step materializes the basis). Arithmetic order identical
-            // to the in-plan form: (w − dot(qs,c1)) − dot(qs,c2).
-            // The w2 columns are ALIASED in their own projection level
-            // (r15): inlined as expressions they were re-evaluated once
-            // per NEW lane (curB·rNew dot folds per row instead of curB —
-            // the b=4 path paid 16 where 4 suffice; CollapseProject
-            // leaves multi-use non-cheap aliases alone, so the level
-            // survives optimization). Evaluated once per lane.
+            // the next block Q_new = (W₁ − V·C₂)·M, derived from the
+            // CHECKPOINTED df with c1/c2 as literals (NOT from w1 — its
+            // broadcast-c1 subtree would re-execute the c1 aggregate when
+            // the next step materializes the basis). Arithmetic order
+            // identical to the in-plan form: (w − dot(qs,c1)) − dot(qs,c2).
+            // The w2 columns are aliased in their own projection level so
+            // they are evaluated once per lane, not once per NEW lane
+            // (CollapseProject leaves multi-use non-cheap aliases alone).
             val w2d = df.select(col("i") +: col("qs") +: (0 until curB).map(t =>
               ((col(s"w$t") - ArrayMath.dot(col("qs"), typedLit(c1(t).toSeq)))
                 - ArrayMath.dot(col("qs"), typedLit(c2(t).toSeq)))
                 .as(s"w2_$t")): _*)
             val newLanes = (0 until rNew).map(u =>
               (0 until curB).map(t => col(s"w2_$t") * mMap(t, u)).reduce(_ + _))
-            // NO checkpoint on the expanded basis (r15): it is a cheap
-            // projection over the CHECKPOINTED df, so next step's two
-            // consumers (qj — column-pruned to just the new lanes — and
-            // the full concat feeding df_{t+1}) recompute ~2·curB dot
-            // folds per row instead of paying an n×lanes serialize +
-            // storage churn per step. Lineage stays one level (df is a
-            // LogicalRDD leaf).
-            basis = w2d.select(col("i"),
-              concat(col("qs"), array(newLanes: _*)).as("qs"))
-            lanes += rNew
+            if (restart) {
+              // thick restart: the l best Ritz vectors V·y plus Q_new;
+              // H restarts as diag(θ) and the next step measures the
+              // Ritz/Q_new coupling through its full reorthogonalization
+              val l = math.min(k + 2, lanes)
+              val kept = ritz(l)
+              prevRitz = kept.take(k).map(_._1).toSeq
+              val ritzLanes = kept.map { case (_, c) =>
+                ArrayMath.dot(col("qs"),
+                  typedLit((0 until lanes).map(t => es.eigenvectors(t, c))))
+              }
+              basis = w2d.select(col("i"),
+                array(ritzLanes.toIndexedSeq ++ newLanes: _*).as("qs")).localCheckpoint(true)
+              h := 0.0
+              kept.zipWithIndex.foreach { case ((th, _), t) => h(t, t) = th }
+              lanes = l + rNew
+              restarts += 1
+              graft.Instrument.inc("eigsh.restarts")
+            } else {
+              // NO checkpoint on the expanded basis: it is a cheap
+              // projection over the checkpointed df, so the next step's
+              // two consumers (qj — column-pruned to the new lanes — and
+              // the concat feeding the next df) recompute ~2·curB dot
+              // folds per row instead of paying an n×lanes serialize per
+              // step. Lineage stays one level (df is a LogicalRDD leaf).
+              basis = w2d.select(col("i"),
+                concat(col("qs"), array(newLanes: _*)).as("qs"))
+              lanes += rNew
+            }
             curB = rNew
           }
         }
       }
-      if (result == null) {
-        val es = eigSym(h(0 until lanes, 0 until lanes).copy)
-        result = es.eigenvalues.toArray.sorted.take(k).toSeq
-      }
-      result
+      val vecs = basis.select(col("i"), array(ys.map { y =>
+        ArrayMath.dot(col("qs"), typedLit(y.toSeq))
+      }: _*).as("v"))
+      (result, vecs)
     }
   }
 
-  /** kAuto-style block-width dispatch for the sharded block-Lanczos path
+  /** kAuto-style block-width dispatch for [[eigshSharded]]
     * (VERDICT r10 item 3; the reference's measured-crossover pattern,
     * matrix/detail/select_k-inl.cuh:38). Pinned by the round-11 FLOOR
     * measurements (SCALE.md): on the diag fixture the per-cell idle floors
@@ -803,33 +612,32 @@ object SolverOps {
     * at 4e6 — so the lever does NOT invert with n (the round-10 "b=4
     * slower than b=1" reading was suite contention; their floors differ
     * by 0.01 s): b=2 is floor-best at every probed size. Cost model for
-    * why, and for the regime bounds: a step adds b lanes with 2 exchanges
-    * (latency ∝ L/b) while its re-orth/Gram aggregates move b·n extra
-    * volume per lane (∝ L·b·n) on top of the b-invariant SpMV (∝ L·nnz)
-    * — so width buys latency until b·n rivals nnz + stage cost, and on
-    * everything probed (nnz = n) that point is past b=4. The k/m clamp is
-    * structural, not measured: the certificate needs fully-measured lanes
-    * past k before the cap, so width must fit in the basis room.
+    * why, and for the regime bounds: a step adds b lanes (latency ∝ L/b)
+    * while its re-orth/Gram aggregates move b·n extra volume per lane
+    * (∝ L·b·n) on top of the b-invariant SpMV (∝ L·nnz) — so width buys
+    * latency until b·n rivals nnz + stage cost, and on everything probed
+    * (nnz = n) that point is past b=4. The k/m clamp is structural, not
+    * measured: the certificate needs fully-measured lanes past k before
+    * the cap, so width must fit in the basis room.
     */
   def eigshBlockAuto(n: Long, nnz: Long, k: Int, m: Int): Int = {
     val room = math.max(1, m - k - 2)
     math.min(2, room)
   }
 
-  /** Size-dispatched eigsh entry (the kAuto composition): driver-local
-    * SpMV below ~1e6 nnz (same tier [[eigshSmallest]] already uses),
-    * sharded BLOCK Lanczos above with [[eigshBlockAuto]] width. The
-    * restart-capable single-vector [[eigshSmallestSharded]] remains the
-    * manual escape hatch for spectra the restartless certificate path
-    * can't close. */
+  /** Size-dispatched eigsh entry (the kAuto composition) and the one place
+    * that counts nnz: driver-local [[eigshSmallest]] up to 1e6 nnz, where
+    * per-step job overhead would dominate, the sharded block loop
+    * [[eigshSharded]] above it with [[eigshBlockAuto]] width and no
+    * restart (the certificate-terminated large-n regime). */
   def eigshSmallestAuto(coo: DataFrame, n: Long, k: Int, m: Int = 25,
       seed: Long = 3): Seq[Double] = {
     val nnz = coo.count()
     if (nnz <= 1000000L && n <= Int.MaxValue)
       eigshSmallest(coo, n.toInt, k, m, seed)
     else
-      eigshSmallestShardedBlock(coo, n, k, m, seed,
-        b = eigshBlockAuto(n, nnz, k, m))
+      eigshSharded(coo, n, k, m, b = eigshBlockAuto(n, nnz, k, m),
+        maxRestarts = 0, seed = seed)._1
   }
 
   /** tsvd transform + inverse_transform + reconstruction error —
@@ -1885,7 +1693,7 @@ object SolverOps {
     // the per-iteration join+aggregates were scheduling 32-task waves with
     // AQE replanning for a fixture-sized state table. LAZY checkpoints:
     // each is materialized by the dot-product aggregate that consumes it
-    // (the eigshShardedCore trick), saving 3 dedicated jobs per iteration.
+    // (the eigshSharded trick), saving 3 dedicated jobs per iteration.
     graft.GraftSession.withLoopKnobs(spark, math.max(n, und.count())) {
     val deg = und.groupBy(col("u").as("i")).agg(count(lit(1)).as("dg"))
     val bv = (pmod(TextOps.h32(concat_ws(":", col("i"), lit("cg"))),

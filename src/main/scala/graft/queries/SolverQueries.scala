@@ -183,10 +183,7 @@ object SolverQueries extends QueryGroup {
     }),
     "solver_eigsh" -> ((s, d) => {
       // symmetric Laplacian of the 30-node chain graph (known spectrum)
-      val ev = SolverOps.eigshSmallest(chainLaplacian(s, 30), 30, 3)
-      s.createDataFrame(ev.zipWithIndex.map { case (v, i) =>
-        (i, BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble) })
-        .toDF("i", "eig")
+      eigsDf(s, SolverOps.eigshSmallest(chainLaplacian(s, 30), 30, 3))
     }),
     "solver_eigsh_sharded" -> ((s, d) => {
       // chain Laplacian through the sharded-basis thick-restart path;
@@ -195,11 +192,8 @@ object SolverQueries extends QueryGroup {
       // returns the exact spectrum — no restart cycles. n=20 keeps the
       // driver loop at 20 steps; same-matrix agreement with the
       // driver-basis path stays pinned at n=30 in Solver2Spec.
-      val ev = SolverOps.eigshSmallestSharded(chainLaplacian(s, 20), 20, 3,
-        m = 25, maxRestarts = 4)
-      s.createDataFrame(ev.zipWithIndex.map { case (v, i) =>
-        (i, BigDecimal(v).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble) })
-        .toDF("i", "eig")
+      eigsDf(s, SolverOps.eigshSharded(chainLaplacian(s, 20), 20, 3,
+        m = 25, b = 1, maxRestarts = 4)._1)
     }),
     "solver_eigsh_vectors" -> ((s, d) => {
       // Ritz VECTORS from the sharded basis (factor output, not just the
@@ -209,8 +203,8 @@ object SolverQueries extends QueryGroup {
       // n=16 (not the n=30 the value queries use): the extraction path is
       // identical, the driver loop is half the steps — the bench row pays
       // for the factor demonstration, not for a second spectrum solve
-      val (_, vecs) = SolverOps.eigshShardedRitz(chainLaplacian(s, 16), 16, 3,
-        m = 20, maxRestarts = 4)
+      val (_, vecs) = SolverOps.eigshSharded(chainLaplacian(s, 16), 16, 3,
+        m = 20, b = 1, maxRestarts = 4)
       vecs.select(col("i"), posexplode(col("v")).as(Seq("q", "x")))
         .select(col("i"), col("q").cast("long").as("q"),
           (round(col("x") * col("x"), 4) + 0.0).as("v2"))
@@ -229,19 +223,19 @@ object SolverQueries extends QueryGroup {
       // with unit gaps, so Kato-Temple gives |θ−λ| ≤ tol²/gap = 1e-10 —
       // five orders inside the 6-dp oracle rounding; saves ~2 of ~9
       // certificate steps (the bound decays ~250×/step once converging)
-      eigsDf(s, SolverOps.eigshSmallestShardedBlock(
-        bigDiagFixture(s), 100000L, 3, m = 25, b = 2, tol = 1e-5))
+      eigsDf(s, SolverOps.eigshSharded(bigDiagFixture(s), 100000L, 3,
+        m = 25, b = 2, maxRestarts = 0, tol = 1e-5)._1)
     }),
     // b-scaling evidence rows (VERDICT r5 #8): the SAME n=1e5 fixture at
     // b=1 and b=4 so BENCH carries wall-clock numbers for the block-width
     // tradeoff next to the b=2 row above (round-trips ∝ m/b; per-step
     // shuffle volume ∝ b). Job-count proof lives in Solver2Spec.
     "solver_eigsh_b1" -> ((s, d) =>
-      eigsDf(s, SolverOps.eigshSmallestShardedBlock(
-        bigDiagFixture(s), 100000L, 3, m = 25, b = 1, tol = 1e-5))),
+      eigsDf(s, SolverOps.eigshSharded(bigDiagFixture(s), 100000L, 3,
+        m = 25, b = 1, maxRestarts = 0, tol = 1e-5)._1)),
     "solver_eigsh_b4" -> ((s, d) =>
-      eigsDf(s, SolverOps.eigshSmallestShardedBlock(
-        bigDiagFixture(s), 100000L, 3, m = 25, b = 4, tol = 1e-5))),
+      eigsDf(s, SolverOps.eigshSharded(bigDiagFixture(s), 100000L, 3,
+        m = 25, b = 4, maxRestarts = 0, tol = 1e-5)._1)),
     // summary form: the optimal TOTAL is unique (the permutation may not
     // be), so the oracle is the independently-computed optimum — 115
     // integer units for the n=50 modular fixture (verified with an

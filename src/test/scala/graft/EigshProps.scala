@@ -51,10 +51,11 @@ object EigshProps extends Properties("LanczosEigsh") {
     }
 
   property("BLOCK sharded Lanczos matches Breeze for random symmetric matrices") =
-    forAll(caseGen) { case (n, k, density, seed) =>
-      // same contract as above through the b=2 block path: with the lane
-      // budget ≥ n the block Krylov space exhausts, the rank-deficient
-      // block Gram fires the invariant exit, and Rayleigh-Ritz is exact
+    forAll(caseGen, Gen.oneOf(1, 2)) { case ((n, k, density, seed), b) =>
+      // same contract as above through the sharded loop at block width
+      // b ∈ {1, 2}: with the lane budget ≥ n the Krylov space exhausts, the
+      // rank-deficient block Gram fires the invariant exit, and
+      // Rayleigh-Ritz is exact
       val rng = new scala.util.Random(seed)
       val dense = DenseMatrix.zeros[Double](n, n)
       for (i <- 0 until n; j <- i until n) {
@@ -69,11 +70,11 @@ object EigshProps extends Properties("LanczosEigsh") {
         i <- 0 until n; j <- 0 until n if dense(i, j) != 0.0
       } yield (i.toLong, j.toLong, dense(i, j))
       val coo = entries.toDF("row", "col", "value")
-      val got = SolverOps.eigshSmallestShardedBlock(coo, n, k, m = n + 4, b = 2)
+      val (got, _) = SolverOps.eigshSharded(coo, n, k, m = n + 4, b = b, maxRestarts = 0)
       val exact = eigSym(dense).eigenvalues.toArray.sorted.take(k)
       val ok = got.zip(exact).forall { case (g, e) =>
         math.abs(g - e) < 1e-7 * math.max(1.0, math.abs(e))
       }
-      Prop(ok) :| s"n=$n k=$k got=${got.toList} exact=${exact.toList}"
+      Prop(ok) :| s"n=$n k=$k b=$b got=${got.toList} exact=${exact.toList}"
     }
 }

@@ -132,7 +132,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("sharded-Lanczos step plans exactly 2 exchanges (edge/basis invariant holds)") {
-    // eigshShardedCore hash-distributes the checkpointed edge table on the
+    // eigshSharded hash-distributes the checkpointed edge table on the
     // contraction key and keeps the basis hash-partitioned+sorted on i, so
     // a step's SpMV-aggregate job must shuffle ONLY at the row-keyed
     // aggregate and the final single-partition reduce. A third exchange

@@ -298,7 +298,7 @@ class Solver2Spec extends AnyFunSuite {
       when(col("id") === 0, 1.0).when(col("id") === 1, 5.0)
         .when(col("id") === 2, 9.0)
         .otherwise(pmod(col("id"), lit(7)).cast("double") + 100.0).as("value"))
-    val got = SolverOps.eigshSmallestSharded(diag, n, 3, m = 20, maxRestarts = 2)
+    val got = SolverOps.eigshSharded(diag, n, 3, m = 20, b = 1, maxRestarts = 2)._1
     got.zip(Seq(1.0, 5.0, 9.0)).foreach { case (g, e) =>
       assert(math.abs(g - e) < 1e-6, s"sharded eigsh $g vs $e")
     }
@@ -313,7 +313,7 @@ class Solver2Spec extends AnyFunSuite {
     val deg = spark.range(30).select(col("id").as("row"), col("id").as("col"),
       when(col("id") === 0 || col("id") === 29, 1.0).otherwise(2.0).as("value"))
     val lap = sym.unionByName(deg)
-    val sharded = SolverOps.eigshSmallestSharded(lap, 30, 3, m = 30, maxRestarts = 4)
+    val sharded = SolverOps.eigshSharded(lap, 30, 3, m = 30, b = 1, maxRestarts = 4)._1
     val exact = (0 until 3).map(q => 2.0 - 2.0 * math.cos(math.Pi * q / 30))
     sharded.zip(exact).foreach { case (g, e) =>
       assert(math.abs(g - e) < 1e-6, s"sharded $g vs closed form $e")
@@ -329,7 +329,7 @@ class Solver2Spec extends AnyFunSuite {
       when(col("id") === 0, 1.0).when(col("id") === 1, 5.0)
         .when(col("id") === 2, 9.0)
         .otherwise(pmod(col("id"), lit(7)).cast("double") + 100.0).as("value"))
-    val got = SolverOps.eigshSmallestShardedBlock(diag, n, 3, m = 20, b = 2)
+    val got = SolverOps.eigshSharded(diag, n, 3, m = 20, b = 2, maxRestarts = 0)._1
     got.zip(Seq(1.0, 5.0, 9.0)).foreach { case (g, e) =>
       assert(math.abs(g - e) < 1e-6, s"block sharded eigsh $g vs $e")
     }
@@ -343,10 +343,35 @@ class Solver2Spec extends AnyFunSuite {
     val deg = spark.range(21).select(col("id").as("row"), col("id").as("col"),
       when(col("id") === 0 || col("id") === 20, 1.0).otherwise(2.0).as("value"))
     val lap = sym.unionByName(deg)
-    val blockGot = SolverOps.eigshSmallestShardedBlock(lap, 21, 3, m = 25, b = 2)
+    val blockGot = SolverOps.eigshSharded(lap, 21, 3, m = 25, b = 2, maxRestarts = 0)._1
     val exact = (0 until 3).map(q => 2.0 - 2.0 * math.cos(math.Pi * q / 21))
     blockGot.zip(exact).foreach { case (g, e) =>
       assert(math.abs(g - e) < 1e-6, s"block chain $g vs closed form $e")
+    }
+  }
+
+  test("thick restart: lane budget runs out before the certificate, restarts converge") {
+    // chain Laplacian (closed-form spectrum, small relative gaps) with a
+    // lane budget far below n: no single phase can certify the smallest
+    // three pairs, so the values must come out of thick restarts — at
+    // the single-vector width and at block width 2 alike
+    val n = 40
+    def lap = {
+      val e = spark.range(n - 1).select(col("id").as("row"), (col("id") + 1).as("col"),
+        lit(-1.0).as("value"))
+      e.unionByName(e.select(col("col").as("row"), col("row").as("col"), col("value")))
+        .unionByName(spark.range(n).select(col("id").as("row"), col("id").as("col"),
+          when(col("id") === 0 || col("id") === n - 1, 1.0).otherwise(2.0).as("value")))
+    }
+    val exact = (0 until 3).map(q => 2.0 - 2.0 * math.cos(math.Pi * q / n))
+    for (b <- Seq(1, 2)) graft.Instrument.withExclusive {
+      graft.Instrument.reset()
+      val (got, _) = SolverOps.eigshSharded(lap, n, 3, m = 12, b = b, maxRestarts = 60)
+      val restarts = graft.Instrument.snapshot().getOrElse("eigsh.restarts", 0L)
+      assert(restarts > 0, s"b=$b: the lane budget should force a restart")
+      got.zip(exact).foreach { case (g, e) =>
+        assert(math.abs(g - e) < 1e-6, s"b=$b restarted $g vs closed form $e")
+      }
     }
   }
 
@@ -382,9 +407,9 @@ class Solver2Spec extends AnyFunSuite {
         when(col("id") === 0 || col("id") === 29, 1.0).otherwise(2.0).as("value")))
     }
     val single = jobsOf {
-      SolverOps.eigshSmallestSharded(chain, 30, 3, m = 16, maxRestarts = 0) }
+      SolverOps.eigshSharded(chain, 30, 3, m = 16, b = 1, maxRestarts = 0) }
     val block = jobsOf {
-      SolverOps.eigshSmallestShardedBlock(chain, 30, 3, m = 16, b = 2) }
+      SolverOps.eigshSharded(chain, 30, 3, m = 16, b = 2, maxRestarts = 0) }
     assert(block < single * 0.65,
       s"block path should run <65% of the single-lane jobs: block=$block single=$single")
   }
@@ -404,7 +429,7 @@ class Solver2Spec extends AnyFunSuite {
     val sym = up.unionByName(up.select(col("col").as("row"), col("row").as("col"), col("value")))
       .unionByName(spark.range(n).select(col("id").as("row"), col("id").as("col"),
         pmod(xxhash64(col("id"), lit(4)), lit(7)).cast("double").as("value")))
-    val (vals, vecsDf) = SolverOps.eigshShardedRitz(sym, n, 3, m = 41, maxRestarts = 4)
+    val (vals, vecsDf) = SolverOps.eigshSharded(sym, n, 3, m = 41, b = 1, maxRestarts = 4)
     val vecs = vecsDf.collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     val a = Array.ofDim[Double](n, n)
     sym.collect().foreach(r => a(r.getLong(0).toInt)(r.getLong(1).toInt) += r.getDouble(2))
