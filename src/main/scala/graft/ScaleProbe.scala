@@ -555,31 +555,6 @@ object ScaleProbe {
         val r3 = run("quantile_sketch", "update",
           ds => StreamingOps.streamingQuantileSketch(ds))
         s""""mode":"stream","state_store":"$provider","n":$n,$r1,$r2,$r3"""
-      case "allpairs" =>
-        // phase timing for the sparse all-pairs cosine join: where do the
-        // seconds go on the bounded 600-doc bench slice (and at larger
-        // doc counts for the scale row)? n = doc bound.
-        import graft.operators.TextOps
-        val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-        val docs = graft.Tables.documents(spark, sf).where(col("doc_id") < n)
-        def phase(tag: String)(f: => Long): String = {
-          val t = System.nanoTime()
-          val c = f
-          f""""$tag":{"rows":$c,"sec":${(System.nanoTime() - t) / 1e9}%.3f}"""
-        }
-        val p0 = phase("tfidf_unit") { TextOps.tfidfUnit(docs).count() }
-        val p1 = phase("exact") { TextOps.allPairsCosine(docs, 0.8).count() }
-        val p2 = phase("prefix") { TextOps.allPairsCosinePrefix(docs, 0.8).count() }
-        val u = TextOps.tfidfUnit(docs).localCheckpoint(true)
-        val p3 = phase("prefix_index") { TextOps.prefixIndex(u, 0.8).count() }
-        val p4 = phase("enum_only") { TextOps.pairContributionsForProbe(u).count() }
-        val p5 = phase("exact_repart") {
-          TextOps.pairContributionsForProbe(u)
-            .repartition(256, col("doc_a"), col("doc_b"))
-            .groupBy(col("doc_a"), col("doc_b")).agg(sum(col("p")).as("s"))
-            .where(col("s") >= 0.8).count()
-        }
-        s""""mode":"allpairs","doc_bound":$n,$p0,$p1,$p2,$p3,$p4,$p5"""
       case "allpairszipf" =>
         // the all-pairs shape the sf fixtures CANNOT show: a zipfian
         // vocabulary (V=10k, s≈1) where idf mass concentrates on rare
@@ -618,10 +593,12 @@ object ScaleProbe {
         }
         val (pe, u0) = phase("entries") { TextOps.tfidfUnit(docs) }
         val (pi, _) = phase("prefix_index") { TextOps.prefixIndex(u0, 0.8) }
-        val (p2, pruned) = phase("prefix") { TextOps.allPairsCosinePrefix(docs, 0.8) }
+        val (p2, pruned) = phase("prefix") {
+          TextOps.cosineJoin(docs, 0.8, path = TextOps.CosinePath.Prefix) }
         if (n < 50000) {
-          // small n: exact path as the full-equality oracle
-          val (p1, exact) = phase("exact") { TextOps.allPairsCosine(docs, 0.8) }
+          // small n: the brute path as the full-equality oracle
+          val (p1, exact) = phase("exact") {
+            TextOps.cosineJoin(docs, 0.8, path = TextOps.CosinePath.Brute) }
           val diff = exact.unionByName(pruned).except(
             exact.intersect(pruned)).count()
           require(diff == 0, s"exact != prefix: $diff differing pairs")
@@ -643,11 +620,13 @@ object ScaleProbe {
         // cross-corpus cosine (decontamination) twin of allpairszipf
         // (VERDICT r14 item 3): zipfian vocabulary, eval side = 2% of
         // docs (doc_id % 50 == 0). idf mass concentrates on rare terms,
-        // so the prefix index drops the high-df head and the COST-BASED
-        // dispatch must pick the pruned candidate join on its own
-        // (xcos.prefix == 1, candEst·16 < bruteEst — both recorded).
-        // The forced-brute leg at the same n gives the head-to-head and
-        // the exact-equality check (prefix filtering is lossless).
+        // so the prefix index drops the high-df head and, above the
+        // 1e6-row stage-1 cutoff (n ≳ 4e4), the COST-BASED dispatch must
+        // pick the pruned candidate join on its own (xcos.prefix == 1,
+        // candEst·16 < bruteEst — both recorded); below it the probe
+        // reports the brute choice. The pinned-brute leg at the same n
+        // gives the head-to-head and the row-for-row equality check
+        // (prefix filtering is lossless).
         import graft.operators.TextOps
         val v = 10000.0
         def wordsFor(idc: org.apache.spark.sql.Column) =
@@ -667,27 +646,24 @@ object ScaleProbe {
             text(pmod(col("id") * 50L, lit(n))).as("text")))
           .localCheckpoint(true)
         val evalPred = pmod(col("doc_id"), lit(50L)) === 0 && col("doc_id") < n
-        def leg(forceTo: Option[String]): (Long, Double, Map[String, Long]) = {
-          forceTo match {
-            case Some(f) => sys.props("graft.xcos.force") = f
-            case None => sys.props.remove("graft.xcos.force")
-          }
+        def leg(path: TextOps.CosinePath) = {
           graft.Instrument.reset()
           val t = System.nanoTime()
-          val out = TextOps.crossCorpusCosine(docs, evalPred, 0.8)
+          val out = TextOps.cosineJoin(docs, 0.8, Some(evalPred), path)
             .localCheckpoint(true)
           val c = out.count()
-          (c, (System.nanoTime() - t) / 1e9, graft.Instrument.snapshot())
+          (out, c, (System.nanoTime() - t) / 1e9, graft.Instrument.snapshot())
         }
-        try {
-          val (nAuto, sAuto, snap) = leg(None) // unforced: the dispatch decides
-          val (nBrute, sBrute, _) = leg(Some("brute"))
-          require(nAuto == nBrute,
-            s"prefix/auto output differs from brute: $nAuto vs $nBrute rows")
-          require(snap.getOrElse("xcos.prefix", 0L) == 1L,
-            s"dispatch did not pick prefix: $snap")
-          s""""mode":"xcoszipf","n_docs":$n,"rows":$nAuto,"sec_auto_prefix":$sAuto,"sec_brute":$sBrute,"u_rows":${snap.getOrElse("xcos.u_rows", -1L)},"brute_est":${snap.getOrElse("xcos.brute_est", -1L)},"cand_est":${snap.getOrElse("xcos.cand_est", -1L)}"""
-        } finally sys.props.remove("graft.xcos.force")
+        val (auto, nAuto, sAuto, snap) = leg(TextOps.CosinePath.Auto) // the dispatch decides
+        val (brute, _, sBrute, _) = leg(TextOps.CosinePath.Brute)
+        val diff = auto.exceptAll(brute).count() + brute.exceptAll(auto).count()
+        require(diff == 0, s"auto output differs from brute in $diff rows")
+        val uRows = snap.getOrElse("xcos.u_rows", -1L)
+        val chose = if (snap.getOrElse("xcos.prefix", 0L) == 1L) "prefix" else "brute"
+        // below the stage-1 cutoff brute is the designed choice: report it
+        require(uRows <= 1000000L || chose == "prefix",
+          s"dispatch did not pick prefix above the stage-1 cutoff: $snap")
+        s""""mode":"xcoszipf","n_docs":$n,"rows":$nAuto,"path":"$chose","diff":$diff,"sec_auto":$sAuto,"sec_brute":$sBrute,"u_rows":$uRows,"brute_est":${snap.getOrElse("xcos.brute_est", -1L)},"cand_est":${snap.getOrElse("xcos.cand_est", -1L)}"""
       case "lshdedup" =>
         // MinHash-LSH dedup at synthetic-corpus scale: n base docs of 40
         // hash-drawn words (50k vocab), plus two planted duplicate classes
@@ -901,7 +877,7 @@ object ScaleProbe {
         require(c2 <= c4 && c4 <= c8 && h2 <= h4 && h4 <= h8,
           s"band refinement monotonicity broken: cand $c2/$c4/$c8 hit $h2/$h4/$h8")
         f""""mode":"phash","n":$nDocs,"planted":$planted,"cand_b2":$c2,"recall_b2":${h2.toDouble / planted}%.3f,"sec_b2":$t2%.1f,"cand_b4":$c4,"recall_b4":${h4.toDouble / planted}%.3f,"sec_b4":$t4%.1f,"cand_b8":$c8,"recall_b8":${h8.toDouble / planted}%.3f,"sec_b8":$t8%.1f"""
-      case other => sys.error(s"unknown mode $other (lap | eigsh | ballcover | graphann | graphopt | lpa | hyperball | silhouette | lanefold | allpairs | allpairszipf | xcoszipf | lshdedup | zorder | stream | trust | lapkeyed | cg | colranks | colkernel | phash)")
+      case other => sys.error(s"unknown mode $other (lap | eigsh | ballcover | graphann | graphopt | lpa | hyperball | silhouette | lanefold | allpairszipf | xcoszipf | lshdedup | zorder | stream | trust | lapkeyed | cg | colranks | colkernel | phash)")
     }
     val dt = (System.nanoTime() - t0) / 1e9
     // drain the listener bus before snapshotting the shuffle counters — a

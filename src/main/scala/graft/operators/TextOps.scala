@@ -85,53 +85,131 @@ object TextOps {
       .select(col("doc_id"), col("term"), (col("w") / col("nrm")).as("u"))
   }
 
-  /** Term-keyed pair enumeration with HOT-KEY ISOLATION: terms with
-    * df > hotDf (a zipfian vocabulary head — "the"-class terms whose df²
-    * blocks would each land on ONE task of a plain term join) are split
-    * 2-D: the left side salted by hash(doc)%salts, the right side
-    * replicated to every salt, so each hot term's quadratic block spreads
-    * over `salts` tasks. Every pair still meets exactly once (at
-    * salt = hash(doc_a) % salts), so the union feeds the same per-pair
-    * sum. Cold tail terms join unsalted — no replication cost where there
-    * is no skew. */
-  /** Probe-only view of [[pairContributions]] with default knobs. */
-  def pairContributionsForProbe(u: DataFrame): DataFrame =
-    pairContributions(u, 16, 256)
-
-  private def pairContributions(u: DataFrame, salts: Int, hotDf: Long): DataFrame = {
-    val dfT = u.groupBy(col("term")).agg(count(lit(1)).as("df"))
-    val ud = u.join(broadcast(dfT), Seq("term"))
-    def side(n: String) = (d: DataFrame) => d.select(
-      col("doc_id").as(s"doc_$n"), col("term"), col("u").as(s"u$n"))
-    val (a, b) = (side("a"), side("b"))
-    val cold = ud.where(col("df") <= hotDf)
-    val hot = ud.where(col("df") > hotDf)
-    // shuffled-hash, not sort-merge: every key is massively duplicated
-    // (df matches per term), and SMJ's buffered-duplicate iteration is
-    // several times slower than a hash-table probe at that shape
-    val coldPairs = a(cold).join(b(cold).hint("shuffle_hash"), Seq("term"))
-    val hotA = a(hot).withColumn("salt", pmod(hash(col("doc_a")), lit(salts)))
-    val hotB = b(hot).withColumn("salt",
-      explode(sequence(lit(0), lit(salts - 1))))
-    val hotPairs = hotA.join(hotB.hint("shuffle_hash"), Seq("term", "salt"))
-      .drop("salt")
-    coldPairs.unionByName(hotPairs).where(col("doc_a") < col("doc_b"))
-      .select(col("doc_a"), col("doc_b"), (col("ua") * col("ub")).as("p"))
+  /** The enumeration [[cosineJoin]] runs: `Auto` defers to
+    * [[choosePath]]; `Brute` and `Prefix` pin one (same output either way). */
+  sealed trait CosinePath
+  object CosinePath {
+    case object Auto extends CosinePath
+    case object Brute extends CosinePath
+    case object Prefix extends CosinePath
   }
 
-  /** All-pairs cosine similarity join over sparse TF-IDF vectors (the
-    * document-level near-dup / IR similarity op; sparse counterpart of the
-    * dense pairwise-distance family — reference semantics:
-    * sparse inner-product distance, cpp/include/raft/sparse/linalg/ and the
-    * dense pairwise kernels). Inverted-index formulation: self-join on the
-    * TERM key (never a doc×doc cross join), sum u_a·u_b per pair, keep
-    * sim ≥ tau. Cost is Σ_t df(t)², so high-df terms dominate — the
-    * bounded exact baseline; [[allPairsCosinePrefix]] is the scale path.
+  // self-join hot-key isolation: terms with df > HotDf are salted over Salts tasks
+  private val Salts = 16
+  private val HotDf = 256L
+
+  /** Two-stage brute/prefix dispatch. Stage 1: at ≤ 1e6 unit-vector rows,
+    * brute (at sf0.1 cross-corpus brute ran 5.3 s vs prefix 10.0 s — the
+    * pruning overhead loses). Stage 2: a cost model, because a row count
+    * cannot tell a selective corpus from template soup (sf1: 7.5e5 rows
+    * but ~1e8 candidate pairs). `bruteEst` = Σ_t nA(t)·nB(t) over the full
+    * term table is the brute join's volume, `candEst` the same sum over
+    * the prefix index; prefix runs only at a 16× margin, which absorbs the
+    * per-candidate verify cost. By-name: stage 1 never pays the estimates. */
+  private[graft] def choosePath(uRows: Long, bruteEst: => Long,
+      candEst: => Long): CosinePath =
+    if (uRows <= 1000000L || candEst * 16 >= bruteEst) CosinePath.Brute
+    else CosinePath.Prefix
+
+  /** Cosine similarity join over L2-normalized TF-IDF vectors (reference:
+    * sparse inner-product distance, cpp/include/raft/sparse/linalg/):
+    * (doc_a, doc_b, sim) for every pair with sim ≥ tau, sim rounded to 4
+    * places; weights and norms come from the FULL corpus. Self join
+    * (`evalPred` = None): doc_a < doc_b. Cross join: doc_a = eval docs
+    * (where the predicate holds), doc_b = the rest — cosine
+    * decontamination; the eval side is broadcast (eval ≪ train), so the
+    * train corpus never shuffles in the enumeration.
+    *
+    * One term-keyed enumerator (never a doc×doc cross join) emits
+    * p = u_a·u_b per shared term; an exchange-first per-pair sum keeps
+    * sim ≥ tau. A self join splits hot terms (df > HotDf, whose df² block
+    * would land on ONE task) 2-D: a side salted by hash(doc) % Salts, b
+    * side replicated to every salt, so every pair still meets once.
+    * Brute enumerates the full vectors. Prefix is the LOSSLESS Bayardo
+    * filter (Bayardo, Ma & Srikant, WWW 2007): each doc indexes the head
+    * of its rarest-first vector with suffix norm ≥ tau ([[prefixIndex]]);
+    * for a pair with sim ≥ tau the first shared term s has
+    * sim ≤ suffix_a(s)·‖u_b‖ (and symmetrically), so both sides index s
+    * and the enumerator over the index (u = 1) finds the pair. Candidates
+    * are verified against the full vectors: both paths share one oracle.
+    * Every call increments exactly one of `xcos.brute` / `xcos.prefix`.
     */
-  def allPairsCosine(docs: DataFrame, tau: Double,
-      salts: Int = 16, hotDf: Long = 256): DataFrame =
-    sumPairSims(pairContributions(
-      tfidfUnit(docs).localCheckpoint(true), salts, hotDf), tau)
+  def cosineJoin(docs: DataFrame, tau: Double, evalPred: Option[Column] = None,
+      path: CosinePath = CosinePath.Auto): DataFrame = {
+    val u = tfidfUnit(docs).localCheckpoint(true)
+    val evalIds = evalPred.map(p => docs.where(p).select(col("doc_id")))
+    // the (doc_a, term, ua) and (doc_b, term, ub) sides of a
+    // (doc_id, term, u) table
+    def sides(t: DataFrame): (DataFrame, DataFrame) = {
+      val (ta, tb) = evalIds match {
+        case None => (t, t)
+        case Some(e) => (t.join(e, Seq("doc_id")), t.join(e, Seq("doc_id"), "left_anti"))
+      }
+      (ta.select(col("doc_id").as("doc_a"), col("term"), col("u").as("ua")),
+        tb.select(col("doc_id").as("doc_b"), col("term"), col("u").as("ub")))
+    }
+    // the one term-pair enumerator: (doc_a, doc_b, p = ua·ub) per shared term
+    def pairs(t: DataFrame): DataFrame = {
+      val joined = evalIds match {
+        case Some(_) =>
+          val (a, b) = sides(t)
+          broadcast(a).join(b, Seq("term"))
+        case None =>
+          val ud = t.join(broadcast(t.groupBy(col("term")).agg(count(lit(1)).as("df"))),
+            Seq("term"))
+          val (coldA, coldB) = sides(ud.where(col("df") <= HotDf))
+          val (hotA, hotB) = sides(ud.where(col("df") > HotDf))
+          // shuffled-hash, not sort-merge: every key is massively
+          // duplicated (df matches per term), and SMJ's buffered-duplicate
+          // iteration is several times slower than a hash-table probe there
+          val coldPairs = coldA.join(coldB.hint("shuffle_hash"), Seq("term"))
+          val hotPairs = hotA.withColumn("salt", pmod(hash(col("doc_a")), lit(Salts)))
+            .join(hotB.withColumn("salt", explode(sequence(lit(0), lit(Salts - 1))))
+              .hint("shuffle_hash"), Seq("term", "salt"))
+            .drop("salt")
+          coldPairs.unionByName(hotPairs).where(col("doc_a") < col("doc_b"))
+      }
+      joined.select(col("doc_a"), col("doc_b"), (col("ua") * col("ub")).as("p"))
+    }
+    // Σ_t nA(t)·nB(t) from one per-term aggregate (nA = nB = df for a self join)
+    def volume(t: DataFrame): Long = (evalIds match {
+      case None => t.groupBy(col("term")).agg(count(lit(1)).as("na")).withColumn("nb", col("na"))
+      case Some(e) => t.join(broadcast(e.withColumn("isE", lit(1))), Seq("doc_id"), "left")
+        .groupBy(col("term")).agg(count(col("isE")).as("na"),
+          (count(lit(1)) - count(col("isE"))).as("nb"))
+    }).agg(coalesce(sum(col("na") * col("nb")), lit(0L))).head().getLong(0)
+    val idx = prefixIndex(u, tau) // lazy: checkpointed only once prefix wins
+    val chosen = path match {
+      case CosinePath.Auto =>
+        // one job over the checkpointed blocks (Dataset.count plans an
+        // aggregate exchange, two jobs under AQE)
+        val uRows = u.queryExecution.toRdd.count()
+        graft.Instrument.inc("xcos.u_rows", uRows)
+        lazy val bruteEst = { val v = volume(u); graft.Instrument.inc("xcos.brute_est", v); v }
+        lazy val candEst = { val v = volume(idx); graft.Instrument.inc("xcos.cand_est", v); v }
+        choosePath(uRows, bruteEst, candEst)
+      case pinned => pinned
+    }
+    val contrib = if (chosen == CosinePath.Prefix) {
+      graft.Instrument.inc("xcos.prefix")
+      // checkpointed: the enumerator reads the index subtree (groupBy df +
+      // window) several times
+      val cand = pairs(idx.localCheckpoint(true).withColumn("u", lit(1.0)))
+        .select(col("doc_a"), col("doc_b")).distinct()
+      // verify against the full vectors; the term tables are the hash
+      // build sides (the candidate set's size is data-dependent — template
+      // soup measured ~1e8 pairs and OOM'd a broadcast build), except the
+      // eval side of a cross join, which stays broadcast
+      val (a, b) = sides(u)
+      cand.join(if (evalIds.isDefined) broadcast(a) else a.hint("shuffle_hash"), Seq("doc_a"))
+        .join(b.hint("shuffle_hash"), Seq("doc_b", "term"))
+        .select(col("doc_a"), col("doc_b"), (col("ua") * col("ub")).as("p"))
+    } else {
+      graft.Instrument.inc("xcos.brute")
+      pairs(u)
+    }
+    sumPairSims(contrib, tau)
+  }
 
   /** Per-pair sum with the exchange FIRST: with ~#groups ≈ #rows/8, the
     * default map-side partial aggregate builds a near-rows-sized hash map
@@ -145,108 +223,17 @@ object TextOps {
       .where(col("s") >= tau)
       .select(col("doc_a"), col("doc_b"), round(col("s"), 4).as("sim"))
 
-  /** Cross-corpus cosine decontamination: eval-side documents scored
-    * against every train-side document at the TF-IDF level — the 4th
-    * decontamination modality beside exact-hash, MinHash-fuzzy and
-    * embedding-semantic (DedupOps). Weights and norms come from the FULL
-    * corpus (one idf model, both sides comparable); the eval side is
-    * broadcast (decontamination's defining asymmetry: eval ≪ train), so
-    * the term-keyed pair enumeration is a map-side hash join — the train
-    * corpus never shuffles, which is the property that survives 100 TB. */
-  def crossCorpusCosine(docs: DataFrame, evalPred: Column, tau: Double): DataFrame = {
-    val u = tfidfUnit(docs).localCheckpoint(true)
-    val evalIds = docs.where(evalPred).select(col("doc_id"))
-    val a = u.join(evalIds, Seq("doc_id"))
-      .select(col("doc_id").as("doc_a"), col("term"), col("u").as("ua"))
-    val b = u.join(evalIds, Seq("doc_id"), "left_anti")
-      .select(col("doc_id").as("doc_b"), col("term"), col("u").as("ub"))
-    // two-stage size dispatch (VERDICT r14 item 3, guide §3.2 — reduce
-    // the big side before shuffling). Stage 1: below the u-row crossover
-    // the brute broadcast-term join runs with no extra jobs (fixture fast
-    // path — at sf0.1 brute 5.3 s vs forced-prefix 10.0 s, pruning
-    // overhead loses). Stage 2, above it: a COST-BASED choice from exact
-    // per-term df splits, because a row count alone cannot tell a
-    // selective corpus (where Bayardo candidates collapse) from template
-    // soup (measured at sf1: u = 7.5e5 rows but the candidate set is
-    // ~1e8 pairs — forced prefix OOM'd a broadcast and loses anyway,
-    // brute ≈ 195 s is the honest floor there). bruteEst = Σ_t nE·nT
-    // over the full term table is the brute join's exact output volume;
-    // candEst is the same sum over the PREFIX INDEX — the candidate
-    // join's exact pre-distinct volume. Prefix runs only when its
-    // candidate volume is an order of magnitude under brute (margin
-    // absorbs the per-candidate verify factor ≈ eval doc length).
-    // Env override for probes/tests.
-    val crossover = sys.env.get("SPARK_GRAFT_XCOS_PREFIX_ROWS")
-      .map(_.toLong).getOrElse(1000000L)
-    // SPARK_GRAFT_XCOS_FORCE=prefix|brute (or -Dgraft.xcos.force=...)
-    // pins the path for equivalence tests and probes (both paths share
-    // the oracle); the system property wins so an in-process probe can
-    // flip legs without re-exec
-    val force = sys.props.get("graft.xcos.force")
-      .orElse(sys.env.get("SPARK_GRAFT_XCOS_FORCE"))
-    val uRows = u.count()
-    graft.Instrument.inc("xcos.u_rows", uRows)
-    def brute() = sumPairSims(
-      broadcast(a).join(b, Seq("term"))
-        .select(col("doc_a"), col("doc_b"), (col("ua") * col("ub")).as("p")),
-      tau)
-    if (force.contains("brute") || (force.isEmpty && uRows <= crossover)) brute()
-    else {
-      val evalB = broadcast(evalIds.withColumn("isE", lit(1)))
-      def volumeOf(tbl: DataFrame): Long =
-        tbl.join(evalB, Seq("doc_id"), "left")
-          .groupBy(col("term")).agg(
-            sum(when(col("isE").isNotNull, 1L).otherwise(0L)).as("ne"),
-            sum(when(col("isE").isNull, 1L).otherwise(0L)).as("nt"))
-          .agg(coalesce(sum(col("ne") * col("nt")), lit(0L))).head().getLong(0)
-      val idx = prefixIndex(u, tau).localCheckpoint(true)
-      val bruteEst = volumeOf(u)
-      val candEst = volumeOf(idx)
-      graft.Instrument.inc("xcos.brute_est", bruteEst)
-      graft.Instrument.inc("xcos.cand_est", candEst)
-      if (!force.contains("prefix") && candEst * 16 >= bruteEst) brute()
-      else {
-        graft.Instrument.inc("xcos.prefix")
-        // Bayardo prefix filter, cross-corpus form: a pair (a, b) with
-        // sim ≥ tau has its FIRST shared term (rarest-df global order)
-        // indexed by BOTH sides (suffix-norm bound, see
-        // [[allPairsCosinePrefix]]), so the candidate equi-join on the
-        // two indexes cannot miss a qualifying pair. Candidates are
-        // verified against the full vectors — identical output to the
-        // brute form (oracle-shared; verified forced at sf0.01).
-        val idxA = idx.join(evalIds, Seq("doc_id"))
-          .select(col("doc_id").as("doc_a"), col("term"))
-        val idxB = idx.join(evalIds, Seq("doc_id"), "left_anti")
-          .select(col("doc_id").as("doc_b"), col("term"))
-        val cand = broadcast(idxA).join(idxB, Seq("term"))
-          .select(col("doc_a"), col("doc_b")).distinct()
-        // candidate attach via shuffled-hash (NOT a broadcast: the
-        // candidate set's size is data-dependent — template soup
-        // measured ~1e8 pairs and OOM'd a broadcast build; shuffling b
-        // here moves the TERM TABLE (nnz rows), never the corpus); the
-        // eval term table stays the broadcast side.
-        val contrib = b.join(cand.hint("shuffle_hash"), Seq("doc_b"))
-          .join(broadcast(a), Seq("doc_a", "term"))
-          .select(col("doc_a"), col("doc_b"), (col("ua") * col("ub")).as("p"))
-        sumPairSims(contrib, tau)
-      }
-    }
-  }
-
   /** Top-k cosine neighbors per document (sparse text-side similarity
-    * search): symmetrize the a<b pair table from [[allPairsCosine]], rank
+    * search): symmetrize the a<b self-join table from [[cosineJoin]], rank
     * by ROUNDED similarity with a doc-id tie-break — rounding first makes
     * the ranking engine-portable (raw float sums differ in the last ulp
     * across summation orders). row_number over a per-doc window:
     * WindowGroupLimit prunes to k per partition map-side, and the
     * partition key is the doc, so no global sort exists at any scale. */
   def cosineTopK(docs: DataFrame, tau: Double, k: Int): DataFrame = {
-    val p = allPairsCosine(docs, tau)
-    // symmetrize by exploding each pair into both directions instead of
-    // unioning two reads of `p` (r15, guide §1.2): the union form embeds
-    // the whole allpairs DAG twice in one action — ReuseExchange dedups
-    // the shuffles but the final aggregate + filter stages still ran
-    // twice. Same rows out, one execution.
+    val p = cosineJoin(docs, tau)
+    // symmetrize by exploding each pair both ways: a union of two reads
+    // of `p` ran the final aggregate + filter stages twice
     val sym = p.select(explode(array(
         struct(col("doc_a").as("doc_id"), col("doc_b").as("nbr")),
         struct(col("doc_b").as("doc_id"), col("doc_a").as("nbr")))).as("e"),
@@ -260,7 +247,7 @@ object TextOps {
   }
 
   /** The indexed head of each doc's rarity-sorted unit vector: entries
-    * whose suffix norm is ≥ tau (see [[allPairsCosinePrefix]]). Exposed so
+    * whose suffix norm is ≥ tau (see [[cosineJoin]]). Exposed so
     * the pruning ratio is measurable in specs. */
   def prefixIndex(u: DataFrame, tau: Double): DataFrame = {
     val dfT = u.groupBy(col("term")).agg(count(lit(1)).as("df"))
@@ -274,36 +261,6 @@ object TextOps {
         sqrt(sum(col("u") * col("u")).over(byRarity)).as("suffix"))
       .where(col("suffix") >= tau - 1e-9)
       .select(col("doc_id"), col("term"))
-  }
-
-  /** All-pairs cosine with LOSSLESS prefix filtering (Bayardo, Ma &
-    * Srikant, "Scaling Up All Pairs Similarity Search", WWW 2007): under a
-    * global term order (rarest df first), each doc indexes only the head
-    * of its sorted vector whose suffix norm is ≥ tau. For any pair with
-    * sim ≥ tau, the FIRST shared term s satisfies
-    * sim ≤ ‖u_a[pos(s):]‖·‖u_b‖ = suffix_a(s) (and symmetrically), so s is
-    * indexed by both sides and the candidate equi-join cannot miss the
-    * pair — identical output to [[allPairsCosine]], proven by sharing its
-    * oracle. The pruning removes exactly the high-df template terms that
-    * make Σ df² explode, so candidates stay near the true answer size.
-    * Candidates are then verified against the FULL vectors.
-    */
-  def allPairsCosinePrefix(docs: DataFrame, tau: Double,
-      salts: Int = 16, hotDf: Long = 256): DataFrame = {
-    val u = tfidfUnit(docs).localCheckpoint(true)
-    // checkpointed: the index subtree (groupBy df + window) otherwise
-    // replays once per consumer — pairContributions reads it four times
-    val idx = prefixIndex(u, tau).localCheckpoint(true)
-    // candidate equi-join with the same hot-key isolation as the exact
-    // form (a unit-valued vector: p=1 just marks a shared indexed term)
-    val cand = pairContributions(idx.withColumn("u", lit(1.0)), salts, hotDf)
-      .select(col("doc_a"), col("doc_b")).distinct()
-    val a = u.select(col("doc_id").as("doc_a"), col("term"), col("u").as("ua"))
-    val b = u.select(col("doc_id").as("doc_b"), col("term"), col("u").as("ub"))
-    val contrib = cand.join(a.hint("shuffle_hash"), Seq("doc_a"))
-      .join(b.hint("shuffle_hash"), Seq("doc_b", "term"))
-      .select(col("doc_a"), col("doc_b"), (col("ua") * col("ub")).as("p"))
-    sumPairSims(contrib, tau)
   }
 
   /** Okapi BM25 per the reference formula (k1=1.6, b=0.75). */
@@ -529,14 +486,6 @@ object TextOps {
               col("cb").cast("double"))), 6) + 0.0).as("pmi"))
   }
 
-  /** Composed quality gate (the C4/Gopher-style keep/drop decision a
-    * training pipeline applies before tokenization): a document is kept
-    * iff token count, mean token length, distinct-token ratio, and
-    * duplicate-2-gram fraction all sit inside fixed bounds. Emits
-    * per-source keep rates — the corpus-curation report. Joins are all
-    * keyed by doc_id (one shuffle each); the final per-source rollup is a
-    * tiny aggregate.
-    */
   /** Per-doc keep flag under the composed rules (the decision
     * [[qualityGate]] rolls up and [[curationReport]] pipelines).
     *
@@ -633,6 +582,14 @@ object TextOps {
       redacted.as("redacted"))
   }
 
+  /** Composed quality gate (the C4/Gopher-style keep/drop decision a
+    * training pipeline applies before tokenization): a document is kept
+    * iff token count, mean token length, distinct-token ratio, and
+    * duplicate-2-gram fraction all sit inside fixed bounds. Emits
+    * per-source keep rates — the corpus-curation report. The per-doc
+    * flags are one stateless pass ([[qualityKeepFlags]]); the per-source
+    * rollup is a tiny aggregate.
+    */
   def qualityGate(docs: DataFrame): DataFrame =
     qualityKeepFlags(docs)
       .groupBy(col("source"))

@@ -278,20 +278,22 @@ object SparseTextQueries extends QueryGroup {
         .where(col("doc_id") < 300)),
     "txt_bm25_score" -> ((s, d) =>
       TextOps.bm25Score(Tables.documents(s, d), Seq("spark", "join", "merge"))),
-    // sparse all-pairs cosine ≥ 0.8 over TF-IDF unit vectors: exact
-    // inverted-index form and the prefix-filtered (Bayardo et al. WWW'07)
-    // scale path — SAME oracle, because prefix filtering is lossless.
+    // sparse all-pairs cosine ≥ 0.8 over TF-IDF unit vectors: the
+    // dispatched join (brute at this size) and the same join pinned to
+    // the prefix-filtered (Bayardo et al. WWW'07) scale path — SAME
+    // oracle, because prefix filtering is lossless.
     // Bounded to 600 docs like the rest of the txt family: this fixture
     // is template soup (31 effective terms at sf0.1, ~10M truly-similar
     // pairs), so the full-corpus output itself is quadratic — the
     // operators carry the scale design (prefix pruning + hot-term
     // salting), the query carries the oracle.
     "txt_allpairs_cosine" -> ((s, d) =>
-      TextOps.allPairsCosine(
+      TextOps.cosineJoin(
         Tables.documents(s, d).where(col("doc_id") < 600), 0.8)),
     "txt_allpairs_prefix" -> ((s, d) =>
-      TextOps.allPairsCosinePrefix(
-        Tables.documents(s, d).where(col("doc_id") < 600), 0.8)),
+      TextOps.cosineJoin(
+        Tables.documents(s, d).where(col("doc_id") < 600), 0.8,
+        path = TextOps.CosinePath.Prefix)),
     // per-doc top-3 cosine neighbors — text-side similarity search on the
     // same pair table; ranking on the ROUNDED sim keeps it engine-portable
     "txt_cosine_topk" -> ((s, d) =>
@@ -300,8 +302,8 @@ object SparseTextQueries extends QueryGroup {
     // TF-IDF-cosine decontamination over the FULL corpus (no doc bound:
     // the broadcast eval side keeps it linear in the train side)
     "pipe_contamination_cosine" -> ((s, d) =>
-      TextOps.crossCorpusCosine(
-        Tables.documents(s, d), col("source") === "src1", 0.8)),
+      TextOps.cosineJoin(
+        Tables.documents(s, d), 0.8, Some(col("source") === "src1"))),
     "txt_quality" -> ((s, d) => {
       TextOps.quality(Tables.documents(s, d)).where(col("doc_id") < 1000)
     }),

@@ -24,10 +24,14 @@ object DedupProps extends Properties("MinhashLsh") {
     .flatMap(n => Gen.listOfN(n, word)).map(_.mkString(" "))
   private val corpusGen = Gen.choose(3, 8).flatMap(n => Gen.listOfN(n, docGen))
 
+  // the eval side of a cross join: None (self join) or a doc-id subset
+  private val evalGen = Gen.option(Gen.someOf(0L until 8L))
+
   property("prefix-filtered all-pairs cosine equals the exact join at any tau") =
-    forAll(corpusGen, Gen.oneOf(0.3, 0.5, 0.7, 0.9)) { (texts, tau) =>
+    forAll(corpusGen, Gen.oneOf(0.3, 0.5, 0.7, 0.9), evalGen) { (texts, tau, evalIds) =>
       import spark.implicits._
       import graft.operators.TextOps
+      import graft.operators.TextOps.CosinePath
       val docs = texts.zipWithIndex.map { case (t, i) =>
         // repeat the word list so tf > 1 terms exist (tf=1 ln-weights
         // are 0 and whole docs would vanish from the unit-vector table)
@@ -35,10 +39,12 @@ object DedupProps extends Properties("MinhashLsh") {
       }.toDF("doc_id", "text", "lang", "source", "n_chars")
       def pairSet(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val exact = pairSet(TextOps.allPairsCosine(docs, tau))
-      val pruned = pairSet(TextOps.allPairsCosinePrefix(docs, tau))
+      val evalPred = evalIds.map(ids =>
+        org.apache.spark.sql.functions.col("doc_id").isin(ids.toSeq: _*))
+      val exact = pairSet(TextOps.cosineJoin(docs, tau, evalPred, CosinePath.Brute))
+      val pruned = pairSet(TextOps.cosineJoin(docs, tau, evalPred, CosinePath.Prefix))
       Prop(exact == pruned) :|
-        s"tau=$tau exact=${exact.size} pruned=${pruned.size} " +
+        s"tau=$tau eval=$evalIds exact=${exact.size} pruned=${pruned.size} " +
           s"diff=${(exact -- pruned) ++ (pruned -- exact)}"
     }
 

@@ -39,8 +39,8 @@ class PipelineSpec extends AnyFunSuite {
       s"prefix index kept $idxEntries of $fullEntries entries — no pruning")
     def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val exact = pairs(TextOps.allPairsCosine(docs, tau))
-    val pruned = pairs(TextOps.allPairsCosinePrefix(docs, tau))
+    val exact = pairs(TextOps.cosineJoin(docs, tau, path = TextOps.CosinePath.Brute))
+    val pruned = pairs(TextOps.cosineJoin(docs, tau, path = TextOps.CosinePath.Prefix))
     assert(exact.nonEmpty, "fixture should contain cosine near-dups")
     assert(exact == pruned, "prefix filtering must be lossless (Bayardo WWW'07)")
   }
