@@ -563,7 +563,8 @@ object ScaleProbe {
         // the 31-term template fixture where the answer itself is
         // quadratic. Each doc = 30 zipf-drawn words, each written twice
         // (tf=1 terms carry zero reference-formula weight and would
-        // vanish). Self-checks exact == prefix before reporting.
+        // vanish). Self-checks auto == prefix, and exact == prefix (small
+        // n) or every planted copy found (big n), before reporting.
         import graft.operators.TextOps
         import org.apache.spark.sql.DataFrame
         val v = 10000.0
@@ -593,16 +594,32 @@ object ScaleProbe {
         }
         val (pe, u0) = phase("entries") { TextOps.tfidfUnit(docs) }
         val (pi, _) = phase("prefix_index") { TextOps.prefixIndex(u0, 0.8) }
+        // the dispatch decides: above the 1e6-row stage-1 cutoff
+        // (n ≳ 3.7e4) the cost model must pick prefix; below it the probe
+        // reports the brute choice
+        graft.Instrument.reset()
+        val (pa, auto) = phase("auto") { TextOps.cosineJoin(docs, 0.8) }
+        val snap = graft.Instrument.snapshot()
+        val uRows = snap.getOrElse("xcos.u_rows", -1L)
+        val chose = if (snap.getOrElse("xcos.prefix", 0L) == 1L) "prefix" else "brute"
+        require(uRows <= 1000000L || chose == "prefix",
+          s"dispatch did not pick prefix above the stage-1 cutoff: $snap")
         val (p2, pruned) = phase("prefix") {
           TextOps.cosineJoin(docs, 0.8, path = TextOps.CosinePath.Prefix) }
+        def diffRows(x: DataFrame, y: DataFrame) = x.exceptAll(y).count() + y.exceptAll(x).count()
+        val autoDiff = diffRows(auto, pruned)
+        require(autoDiff == 0, s"auto != prefix: $autoDiff differing rows")
+        val head = s""""mode":"allpairszipf","n_docs":$n,"path":"$chose","u_rows":$uRows,""" +
+          s""""brute_est":${snap.getOrElse("xcos.brute_est", -1L)},""" +
+          s""""cand_est":${snap.getOrElse("xcos.cand_est", -1L)},$pe,$pi,$pa,$p2"""
         if (n < 50000) {
-          // small n: the brute path as the full-equality oracle
-          val (p1, exact) = phase("exact") {
-            TextOps.cosineJoin(docs, 0.8, path = TextOps.CosinePath.Brute) }
-          val diff = exact.unionByName(pruned).except(
-            exact.intersect(pruned)).count()
-          require(diff == 0, s"exact != prefix: $diff differing pairs")
-          s""""mode":"allpairszipf","n_docs":$n,$pe,$pi,$p1,$p2,"diff":$diff"""
+          // small n: the brute path as the full-equality oracle (the auto
+          // leg already ran it when the dispatch chose brute)
+          val (p1, exact) = if (chose == "brute") (""""exact":"auto"""", auto)
+            else phase("exact") { TextOps.cosineJoin(docs, 0.8, path = TextOps.CosinePath.Brute) }
+          val diff = diffRows(exact, pruned)
+          require(diff == 0, s"exact != prefix: $diff differing rows")
+          s"""$head,$p1,"diff":$diff"""
         } else {
           // big n: the exact leg's Σdf² enumeration spills ~100s of GB at
           // 2e5 docs (measured: filled the disk) — the point of the prefix
@@ -614,7 +631,7 @@ object ScaleProbe {
               (col("id") + n).as("doc_b")), Seq("doc_a", "doc_b"), "left_semi").count()
           require(plantedFound == n / 100,
             s"prefix path missed planted copies: $plantedFound of ${n / 100}")
-          s""""mode":"allpairszipf","n_docs":$n,$pe,$pi,$p2,"planted_found":$plantedFound"""
+          s"""$head,"planted_found":$plantedFound"""
         }
       case "xcoszipf" =>
         // cross-corpus cosine (decontamination) twin of allpairszipf

@@ -94,8 +94,7 @@ object TextOps {
     case object Prefix extends CosinePath
   }
 
-  // self-join hot-key isolation: terms with df > HotDf are salted over Salts tasks
-  private val Salts = 16
+  private val Salts = 16 // self-join hot-key isolation, see SelfJoin
   private val HotDf = 256L
 
   /** Two-stage brute/prefix dispatch. Stage 1: at ≤ 1e6 unit-vector rows,
@@ -111,74 +110,87 @@ object TextOps {
     if (uRows <= 1000000L || candEst * 16 >= bruteEst) CosinePath.Brute
     else CosinePath.Prefix
 
+  /** What a self and a cross join do differently, chosen once per
+    * [[cosineJoin]] call. `meet`, the one term-pair enumerator: a
+    * (doc_id, term, u) table joined with itself on the term into
+    * (doc_a, doc_b, ua, ub); `counts`: its per-term sizes (term, na, nb);
+    * `attach`: candidate (doc_a, doc_b) pairs joined to the full vectors. */
+  private final case class JoinForm(meet: DataFrame => DataFrame,
+      counts: DataFrame => DataFrame, attach: (DataFrame, DataFrame) => DataFrame)
+
+  private def side(t: DataFrame, s: String): DataFrame =
+    t.select(col("doc_id").as(s"doc_$s"), col("term"), col("u").as(s"u$s"))
+
+  /** doc_a < doc_b. Hot terms (df > HotDf, whose df² block would land on
+    * ONE task of a plain term join) are split 2-D: the a side salted by
+    * hash(doc) % Salts, the b side replicated to every salt, so every pair
+    * still meets exactly once. Shuffled-hash, not sort-merge, throughout:
+    * every key is massively duplicated, and SMJ's buffered-duplicate
+    * iteration is several times slower than a hash-table probe there. */
+  private val SelfJoin = JoinForm(
+    meet = t => {
+      val ud = t.join(broadcast(t.groupBy(col("term")).agg(count(lit(1)).as("df"))),
+        Seq("term"))
+      val (cold, hot) = (ud.where(col("df") <= HotDf), ud.where(col("df") > HotDf))
+      val hotPairs = side(hot, "a").withColumn("salt", pmod(hash(col("doc_a")), lit(Salts)))
+        .join(side(hot, "b").withColumn("salt", explode(sequence(lit(0), lit(Salts - 1))))
+          .hint("shuffle_hash"), Seq("term", "salt"))
+        .drop("salt")
+      side(cold, "a").join(side(cold, "b").hint("shuffle_hash"), Seq("term"))
+        .unionByName(hotPairs).where(col("doc_a") < col("doc_b"))
+    },
+    counts = t => t.groupBy(col("term")).agg(count(lit(1)).as("na")).withColumn("nb", col("na")),
+    // the term tables are the build sides: the candidate set's size is
+    // data-dependent (template soup: ~1e8 pairs OOM'd a broadcast build)
+    attach = (cand, u) => cand.join(side(u, "a").hint("shuffle_hash"), Seq("doc_a"))
+      .join(side(u, "b").hint("shuffle_hash"), Seq("doc_b", "term")))
+
+  /** doc_a = the eval docs, doc_b = the rest. The eval side is broadcast
+    * (eval ≪ train), so the train corpus never shuffles in `meet`. */
+  private def crossJoin(evalIds: DataFrame): JoinForm = {
+    def sides(t: DataFrame) = (side(t.join(evalIds, Seq("doc_id")), "a"),
+      side(t.join(evalIds, Seq("doc_id"), "left_anti"), "b"))
+    JoinForm(
+      meet = t => { val (a, b) = sides(t); broadcast(a).join(b, Seq("term")) },
+      counts = t => t.join(broadcast(evalIds.withColumn("isE", lit(1))), Seq("doc_id"), "left")
+        .groupBy(col("term")).agg(count(col("isE")).as("na"),
+          (count(lit(1)) - count(col("isE"))).as("nb")),
+      // the candidates are the build side against the train term table
+      // (which moves its nnz rows, never the corpus); eval stays broadcast
+      attach = (cand, u) => {
+        val (a, b) = sides(u)
+        b.join(cand.hint("shuffle_hash"), Seq("doc_b")).join(broadcast(a), Seq("doc_a", "term"))
+      })
+  }
+
   /** Cosine similarity join over L2-normalized TF-IDF vectors (reference:
     * sparse inner-product distance, cpp/include/raft/sparse/linalg/):
     * (doc_a, doc_b, sim) for every pair with sim ≥ tau, sim rounded to 4
-    * places; weights and norms come from the FULL corpus. Self join
-    * (`evalPred` = None): doc_a < doc_b. Cross join: doc_a = eval docs
-    * (where the predicate holds), doc_b = the rest — cosine
-    * decontamination; the eval side is broadcast (eval ≪ train), so the
-    * train corpus never shuffles in the enumeration.
+    * places, weights and norms from the FULL corpus. Self join (`evalPred`
+    * = None): doc_a < doc_b. Cross join (cosine decontamination): doc_a =
+    * eval docs (where the predicate holds), doc_b = the rest.
     *
     * One term-keyed enumerator (never a doc×doc cross join) emits
     * p = u_a·u_b per shared term; an exchange-first per-pair sum keeps
-    * sim ≥ tau. A self join splits hot terms (df > HotDf, whose df² block
-    * would land on ONE task) 2-D: a side salted by hash(doc) % Salts, b
-    * side replicated to every salt, so every pair still meets once.
-    * Brute enumerates the full vectors. Prefix is the LOSSLESS Bayardo
-    * filter (Bayardo, Ma & Srikant, WWW 2007): each doc indexes the head
-    * of its rarest-first vector with suffix norm ≥ tau ([[prefixIndex]]);
-    * for a pair with sim ≥ tau the first shared term s has
-    * sim ≤ suffix_a(s)·‖u_b‖ (and symmetrically), so both sides index s
-    * and the enumerator over the index (u = 1) finds the pair. Candidates
-    * are verified against the full vectors: both paths share one oracle.
-    * Every call increments exactly one of `xcos.brute` / `xcos.prefix`.
-    */
+    * sim ≥ tau. Brute enumerates the full vectors. Prefix is the LOSSLESS
+    * Bayardo filter (Bayardo, Ma & Srikant, WWW 2007): each doc indexes
+    * the head of its rarest-first vector with suffix norm ≥ tau
+    * ([[prefixIndex]]); for a pair with sim ≥ tau the first shared term s
+    * has sim ≤ suffix_a(s)·‖u_b‖ (and symmetrically), so both sides index
+    * s and the enumerator over the index (u = 1) finds the pair.
+    * Candidates are verified against the full vectors: both paths share
+    * one oracle. Every call increments exactly one of `xcos.brute` /
+    * `xcos.prefix`. */
   def cosineJoin(docs: DataFrame, tau: Double, evalPred: Option[Column] = None,
       path: CosinePath = CosinePath.Auto): DataFrame = {
+    val form = evalPred.fold(SelfJoin)(p => crossJoin(docs.where(p).select(col("doc_id"))))
     val u = tfidfUnit(docs).localCheckpoint(true)
-    val evalIds = evalPred.map(p => docs.where(p).select(col("doc_id")))
-    // the (doc_a, term, ua) and (doc_b, term, ub) sides of a
-    // (doc_id, term, u) table
-    def sides(t: DataFrame): (DataFrame, DataFrame) = {
-      val (ta, tb) = evalIds match {
-        case None => (t, t)
-        case Some(e) => (t.join(e, Seq("doc_id")), t.join(e, Seq("doc_id"), "left_anti"))
-      }
-      (ta.select(col("doc_id").as("doc_a"), col("term"), col("u").as("ua")),
-        tb.select(col("doc_id").as("doc_b"), col("term"), col("u").as("ub")))
-    }
-    // the one term-pair enumerator: (doc_a, doc_b, p = ua·ub) per shared term
-    def pairs(t: DataFrame): DataFrame = {
-      val joined = evalIds match {
-        case Some(_) =>
-          val (a, b) = sides(t)
-          broadcast(a).join(b, Seq("term"))
-        case None =>
-          val ud = t.join(broadcast(t.groupBy(col("term")).agg(count(lit(1)).as("df"))),
-            Seq("term"))
-          val (coldA, coldB) = sides(ud.where(col("df") <= HotDf))
-          val (hotA, hotB) = sides(ud.where(col("df") > HotDf))
-          // shuffled-hash, not sort-merge: every key is massively
-          // duplicated (df matches per term), and SMJ's buffered-duplicate
-          // iteration is several times slower than a hash-table probe there
-          val coldPairs = coldA.join(coldB.hint("shuffle_hash"), Seq("term"))
-          val hotPairs = hotA.withColumn("salt", pmod(hash(col("doc_a")), lit(Salts)))
-            .join(hotB.withColumn("salt", explode(sequence(lit(0), lit(Salts - 1))))
-              .hint("shuffle_hash"), Seq("term", "salt"))
-            .drop("salt")
-          coldPairs.unionByName(hotPairs).where(col("doc_a") < col("doc_b"))
-      }
-      joined.select(col("doc_a"), col("doc_b"), (col("ua") * col("ub")).as("p"))
-    }
-    // Σ_t nA(t)·nB(t) from one per-term aggregate (nA = nB = df for a self join)
-    def volume(t: DataFrame): Long = (evalIds match {
-      case None => t.groupBy(col("term")).agg(count(lit(1)).as("na")).withColumn("nb", col("na"))
-      case Some(e) => t.join(broadcast(e.withColumn("isE", lit(1))), Seq("doc_id"), "left")
-        .groupBy(col("term")).agg(count(col("isE")).as("na"),
-          (count(lit(1)) - count(col("isE"))).as("nb"))
-    }).agg(coalesce(sum(col("na") * col("nb")), lit(0L))).head().getLong(0)
-    val idx = prefixIndex(u, tau) // lazy: checkpointed only once prefix wins
+    // Σ_t nA(t)·nB(t): the volume of `meet` over t
+    def volume(t: DataFrame): Long = form.counts(t)
+      .agg(coalesce(sum(col("na") * col("nb")), lit(0L))).head().getLong(0)
+    // built past stage 1 or when Prefix is pinned; a lazy checkpoint, so the
+    // first job that reads it (candEst or the enumerator) computes it once
+    lazy val idx = prefixIndex(u, tau).localCheckpoint(false)
     val chosen = path match {
       case CosinePath.Auto =>
         // one job over the checkpointed blocks (Dataset.count plans an
@@ -190,25 +202,16 @@ object TextOps {
         choosePath(uRows, bruteEst, candEst)
       case pinned => pinned
     }
-    val contrib = if (chosen == CosinePath.Prefix) {
+    val pairs = if (chosen == CosinePath.Prefix) {
       graft.Instrument.inc("xcos.prefix")
-      // checkpointed: the enumerator reads the index subtree (groupBy df +
-      // window) several times
-      val cand = pairs(idx.localCheckpoint(true).withColumn("u", lit(1.0)))
+      val cand = form.meet(idx.withColumn("u", lit(1.0)))
         .select(col("doc_a"), col("doc_b")).distinct()
-      // verify against the full vectors; the term tables are the hash
-      // build sides (the candidate set's size is data-dependent — template
-      // soup measured ~1e8 pairs and OOM'd a broadcast build), except the
-      // eval side of a cross join, which stays broadcast
-      val (a, b) = sides(u)
-      cand.join(if (evalIds.isDefined) broadcast(a) else a.hint("shuffle_hash"), Seq("doc_a"))
-        .join(b.hint("shuffle_hash"), Seq("doc_b", "term"))
-        .select(col("doc_a"), col("doc_b"), (col("ua") * col("ub")).as("p"))
+      form.attach(cand, u)
     } else {
       graft.Instrument.inc("xcos.brute")
-      pairs(u)
+      form.meet(u)
     }
-    sumPairSims(contrib, tau)
+    sumPairSims(pairs.select(col("doc_a"), col("doc_b"), (col("ua") * col("ub")).as("p")), tau)
   }
 
   /** Per-pair sum with the exchange FIRST: with ~#groups ≈ #rows/8, the

@@ -24,11 +24,16 @@ object DedupProps extends Properties("MinhashLsh") {
     .flatMap(n => Gen.listOfN(n, word)).map(_.mkString(" "))
   private val corpusGen = Gen.choose(3, 8).flatMap(n => Gen.listOfN(n, docGen))
 
-  // the eval side of a cross join: None (self join) or a doc-id subset
-  private val evalGen = Gen.option(Gen.someOf(0L until 8L))
+  // a corpus with the eval side of a cross join: a non-empty proper
+  // subset of its doc ids, so both sides of the split hold documents
+  private val corpusEvalGen = for {
+    texts <- corpusGen
+    k <- Gen.choose(1, texts.size - 1)
+    ids <- Gen.pick(k, texts.indices.map(_.toLong))
+  } yield (texts, ids.toSet)
 
   property("prefix-filtered all-pairs cosine equals the exact join at any tau") =
-    forAll(corpusGen, Gen.oneOf(0.3, 0.5, 0.7, 0.9), evalGen) { (texts, tau, evalIds) =>
+    forAll(corpusEvalGen, Gen.oneOf(0.3, 0.5, 0.7, 0.9)) { case ((texts, evalIds), tau) =>
       import spark.implicits._
       import graft.operators.TextOps
       import graft.operators.TextOps.CosinePath
@@ -39,13 +44,16 @@ object DedupProps extends Properties("MinhashLsh") {
       }.toDF("doc_id", "text", "lang", "source", "n_chars")
       def pairSet(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val evalPred = evalIds.map(ids =>
-        org.apache.spark.sql.functions.col("doc_id").isin(ids.toSeq: _*))
-      val exact = pairSet(TextOps.cosineJoin(docs, tau, evalPred, CosinePath.Brute))
-      val pruned = pairSet(TextOps.cosineJoin(docs, tau, evalPred, CosinePath.Prefix))
-      Prop(exact == pruned) :|
-        s"tau=$tau eval=$evalIds exact=${exact.size} pruned=${pruned.size} " +
-          s"diff=${(exact -- pruned) ++ (pruned -- exact)}"
+      // every case checks the self join and the cross join
+      Prop.all(Seq(None, Some(evalIds)).map { ev =>
+        val evalPred = ev.map(ids =>
+          org.apache.spark.sql.functions.col("doc_id").isin(ids.toSeq: _*))
+        val exact = pairSet(TextOps.cosineJoin(docs, tau, evalPred, CosinePath.Brute))
+        val pruned = pairSet(TextOps.cosineJoin(docs, tau, evalPred, CosinePath.Prefix))
+        Prop(exact == pruned) :|
+          s"tau=$tau eval=$ev exact=${exact.size} pruned=${pruned.size} " +
+            s"diff=${(exact -- pruned) ++ (pruned -- exact)}"
+      }: _*)
     }
 
   property("an exact copy is always found with jaccard exactly 1") =
