@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
@@ -39,7 +38,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // local iteration aid: SPARK_GRAFT_ONLY=q1,q2 restricts the run;
     // tokens trimmed and unknown names warned — 'a, b' must not silently
     // drop b, and a misspelled filter must not look like a clean run
@@ -47,24 +45,9 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     only.foreach(_.diff(SparkEntry.queries.keySet).foreach(n =>
       System.err.println(s"[bench] WARNING: unknown query in SPARK_GRAFT_ONLY: $n")))
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // ObjectHashAggregate (every typed Aggregator: TopKAgg, VectorAgg, HLL)
-      // falls back to SORTING its remaining input after 128 distinct keys per
-      // partition — the default turns the LAP kernel's 1e8-row top-T scan into
-      // a 1e8-row sort. 2e5 keys × (2k+1) doubles ≈ 50 MB/partition worst case
-      // at k=16: memory-sane on any executor sized for 100 MB-1 GB partitions,
-      // and scale-independent (state is keys×k, not data-sized). Override via
-      // SPARK_GRAFT_OBJ_AGG_KEYS for smaller executors.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_KEYS", "200000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the canonical session, the one Verify checks correctness under
+    val spark = GraftSession.create(
+      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, appName = "graft-bench")
     // JVM/IO warm-up: one full pass of the flagship query
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     // A failed query must be LOUD: recorded as a NEGATIVE time in the queries

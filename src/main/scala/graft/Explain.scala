@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-inspection utility: prints the formatted physical plan of the named
   * queries (or all, with no args beyond the sf dir) for shuffle/broadcast/
@@ -9,13 +8,9 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new graft.plans.GraftExtensions) // same rules the gate runs
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the canonical session (same rules and confs as Bench and Verify)
+    val spark = GraftSession.create(
+      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, appName = "graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"===== $n =====")

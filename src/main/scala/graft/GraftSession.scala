@@ -19,19 +19,21 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // typed-Aggregator groupBys (TopKAgg/VectorAgg/HLL) must not fall back
-      // to sorting their input past 128 distinct keys per partition — state
-      // is keys × k scalars, so 2e5 keys is memory-sane at any scale (the
-      // Bench session documents the sizing; same knob here for parity).
+      // ObjectHashAggregate (every object-buffer aggregate: TopKAgg,
+      // VectorAgg, HLL) falls back to SORTING its remaining input after 128
+      // distinct keys per partition — the default turns the LAP kernel's
+      // 1e8-row top-T scan into a 1e8-row sort. 2e5 keys × (2k+1) doubles
+      // ≈ 50 MB/partition worst case at k=16: memory-sane on any executor
+      // sized for 100 MB–1 GB partitions, and scale-independent (state is
+      // keys × k, not data-sized).
       // CAVEAT (ADVICE r14): the sizing argument covers small fixed
-      // per-key state (TopKAgg k≈16 ⇒ ~50 MB/partition worst case).
-      // Aggregates with array-valued per-key state (VectorAgg.vectorSum /
-      // axpySum keyed by a wide domain, d-length arrays per key — the
-      // SparseOps.spmm shape) can hold 2e5 keys × d doubles before
-      // spilling: at d=64 that is ~100 MB/partition. Executors smaller
-      // than the 100 MB–1 GB/partition sizing should lower
-      // SPARK_GRAFT_OBJ_AGG_KEYS (the spill fallback stays correct,
-      // just sorted — this knob trades memory for never-sort).
+      // per-key state. Aggregates with array-valued per-key state
+      // (VectorAgg vectorSum / axpySum keyed by a wide domain, d-length
+      // arrays per key — the SparseOps.spmm shape) can hold 2e5 keys × d
+      // doubles before spilling: at d=64 that is ~100 MB/partition.
+      // Executors smaller than that should lower SPARK_GRAFT_OBJ_AGG_KEYS
+      // (the spill fallback stays correct, just sorted — this knob trades
+      // memory for never-sort).
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         sys.env.getOrElse("SPARK_GRAFT_OBJ_AGG_KEYS", "200000"))
       .config("spark.ui.enabled", "false")

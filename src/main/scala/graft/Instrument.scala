@@ -23,6 +23,12 @@ object Instrument {
     counters.asScala.toMap
   }
 
+  /** The counts added since `before`, an earlier [[snapshot]]: one leg's
+    * counters without a reset, so the running totals keep covering the
+    * whole run. */
+  def since(before: Map[String, Long]): Map[String, Long] =
+    snapshot().map { case (k, v) => k -> (v - before.getOrElse(k, 0L)) }.filter(_._2 != 0L)
+
   /** Tests that do a reset()→run→snapshot() sequence race each other when
     * ScalaTest runs suites in parallel (a concurrent suite's reset() wipes
     * the window — VERDICT r11 "what's wrong" #3). Every counter-asserting

@@ -597,9 +597,9 @@ object ScaleProbe {
         // the dispatch decides: above the 1e6-row stage-1 cutoff
         // (n ≳ 3.7e4) the cost model must pick prefix; below it the probe
         // reports the brute choice
-        graft.Instrument.reset()
+        val before = graft.Instrument.snapshot()
         val (pa, auto) = phase("auto") { TextOps.cosineJoin(docs, 0.8) }
-        val snap = graft.Instrument.snapshot()
+        val snap = graft.Instrument.since(before)
         val uRows = snap.getOrElse("xcos.u_rows", -1L)
         val chose = if (snap.getOrElse("xcos.prefix", 0L) == 1L) "prefix" else "brute"
         require(uRows <= 1000000L || chose == "prefix",
@@ -664,12 +664,12 @@ object ScaleProbe {
           .localCheckpoint(true)
         val evalPred = pmod(col("doc_id"), lit(50L)) === 0 && col("doc_id") < n
         def leg(path: TextOps.CosinePath) = {
-          graft.Instrument.reset()
+          val before = graft.Instrument.snapshot()
           val t = System.nanoTime()
           val out = TextOps.cosineJoin(docs, 0.8, Some(evalPred), path)
             .localCheckpoint(true)
           val c = out.count()
-          (out, c, (System.nanoTime() - t) / 1e9, graft.Instrument.snapshot())
+          (out, c, (System.nanoTime() - t) / 1e9, graft.Instrument.since(before))
         }
         val (auto, nAuto, sAuto, snap) = leg(TextOps.CosinePath.Auto) // the dispatch decides
         val (brute, _, sBrute, _) = leg(TextOps.CosinePath.Brute)
@@ -909,7 +909,8 @@ object ScaleProbe {
     val sh = s""""shuffle_stages":${shuffleStages.get},"shuffle_write_mb":${shuffleBytes.get / (1024 * 1024)}"""
     // all Instrument counters ride along (r15): probes of counter-
     // instrumented operators (eigsh step split, LAP phases) report their
-    // attribution without a bench run
+    // attribution without a bench run. Multi-leg modes read each leg as
+    // Instrument.since(snapshot), so these totals cover every leg.
     val counters = graft.Instrument.snapshot().toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     println(s"""{"probe":{$result,$sh,"sec":$dt,"counters":$counters}}""")

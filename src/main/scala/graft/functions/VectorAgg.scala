@@ -1,91 +1,91 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, Encoder}
-import org.apache.spark.sql.expressions.Aggregator
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.Platform.{BYTE_ARRAY_OFFSET => Bytes, DOUBLE_ARRAY_OFFSET => Doubles}
 
-/** Typed vector aggregators with `Array[Double]` buffers — the Spark form
-  * of the reference's fused keyed reductions (SURVEY.md §4 custom-code
-  * list): reduce_rows_by_key (linalg/reduce_rows_by_key.cuh:141),
-  * stats::sum (stats/sum.cuh:35), meanvar (stats/meanvar.cuh:39).
-  *
-  * Buffers are partial-aggregated map-side and merged pairwise — the
-  * mergeable-partials contract that makes one shuffle carry only
-  * (#keys × d) doubles instead of n×d lanes. Primitive-array buffers ride
-  * the UnsafeArrayData fast path (no per-lane boxing — the Seq[Double]
-  * version spent most of its time allocating); in-place accumulation is
-  * safe because ObjectHashAggregate holds the buffer object between calls.
-  * Lane-wise addition is order-insensitive up to FP rounding; declared
-  * outputs round to the oracle tolerance (SURVEY §7 policy).
+/** Vector aggregates over ARRAY<DOUBLE>, the Spark form of the reference's
+  * fused keyed reductions (linalg/reduce_rows_by_key.cuh:141,
+  * stats/sum.cuh:35, stats/meanvar.cuh:39) and the sketch Gram of
+  * sparse/solver/randomized_svds.cuh. One Catalyst TypedImperativeAggregate
+  * (the pattern of Spark's Collect/Percentile) with a primitive
+  * Array[Double] buffer: `update` reads the ArrayData lanes directly, the
+  * first row of a partition initializes the buffer, partials merge lane-wise
+  * a += b in place, and a buffer crosses the shuffle as packed doubles. So
+  * one exchange carries #keys × width doubles, and every op does the same
+  * products in the same per-row order as a sequential fold. A group with no
+  * rows yields the empty array; a row whose vector or weight is null is
+  * skipped, as `sum` skips nulls.
   */
-object VectorAgg {
-
-  /** Element-wise sum of ARRAY<DOUBLE> columns (vector_sum). */
-  private object VectorSum
-      extends Aggregator[Array[Double], Array[Double], Array[Double]] {
-    def zero: Array[Double] = Array.emptyDoubleArray
-    def reduce(buf: Array[Double], v: Array[Double]): Array[Double] =
-      if (buf.isEmpty) v.clone()
-      else {
+case class VectorAggExpr(op: VectorAgg.Op, children: Seq[Expression],
+    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
+    extends TypedImperativeAggregate[Array[Double]] with ImplicitCastInputTypes {
+  import VectorAgg._
+  def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+  def nullable: Boolean = false
+  def inputTypes: Seq[DataType] = ArrayType(DoubleType) +: children.tail.map(_ => DoubleType)
+  override def prettyName: String = op.name
+  def createAggregationBuffer(): Array[Double] = Array.emptyDoubleArray
+  def update(buf: Array[Double], row: InternalRow): Array[Double] = {
+    val v = children.head.eval(row).asInstanceOf[ArrayData]
+    val w = if (op == Axpy) children(1).eval(row) else 1.0
+    if (v == null || w == null) return buf
+    val first = buf.isEmpty // set, not add: 0.0 + -0.0 would flip the sign
+    op match {
+      case Sum if first => v.toDoubleArray()
+      case Sum => var i = 0; while (i < buf.length) { buf(i) += v.getDouble(i); i += 1 }; buf
+      case Axpy =>
+        val s = w.asInstanceOf[Double]
+        val out = if (first) new Array[Double](v.numElements()) else buf
         var i = 0
-        while (i < buf.length) { buf(i) += v(i); i += 1 }
-        buf
-      }
-    def merge(a: Array[Double], b: Array[Double]): Array[Double] =
-      if (a.isEmpty) b
-      else if (b.isEmpty) a
-      else {
-        var i = 0
-        while (i < a.length) { a(i) += b(i); i += 1 }
-        a
-      }
-    def finish(buf: Array[Double]): Array[Double] = buf
-    def bufferEncoder: Encoder[Array[Double]] = ExpressionEncoderHelper.doubleArray
-    def outputEncoder: Encoder[Array[Double]] = ExpressionEncoderHelper.doubleArray
-  }
-
-  /** vector_sum as a Column aggregate usable in groupBy().agg(...). */
-  def vectorSum(c: Column): Column = udaf(VectorSum).apply(c)
-
-  /** Fused Σ w·v without materializing the scaled array per row — the
-    * axpy-accumulate the sharded-Lanczos CGS passes run over every
-    * coordinate each step (`vectorSum(scale(qs, w))` pays an interpreted
-    * HOF alloc per row; this multiplies into the primitive buffer
-    * directly, same products in the same per-partition order ⇒
-    * bit-identical partials). */
-  private object AxpySum
-      extends Aggregator[(Array[Double], Double), Array[Double], Array[Double]] {
-    def zero: Array[Double] = Array.emptyDoubleArray
-    def reduce(buf: Array[Double], in: (Array[Double], Double)): Array[Double] = {
-      val (v, w) = in
-      if (buf.isEmpty) {
-        val out = new Array[Double](v.length)
-        var i = 0
-        while (i < v.length) { out(i) = v(i) * w; i += 1 }
+        while (i < out.length) { val p = v.getDouble(i) * s; if (first) out(i) = p else out(i) += p; i += 1 }
         out
-      } else {
+      case Gram => // row-major (i, j) += v(j)·v(i): the flattened outer product
+        val x = v.toDoubleArray(); val l = x.length
+        val out = if (first) new Array[Double](l * l) else buf
         var i = 0
-        while (i < buf.length) { buf(i) += v(i) * w; i += 1 }
-        buf
-      }
+        while (i < l) {
+          var j = 0
+          while (j < l) { val p = x(j) * x(i); if (first) out(i * l + j) = p else out(i * l + j) += p; j += 1 }
+          i += 1
+        }
+        out
     }
-    def merge(a: Array[Double], b: Array[Double]): Array[Double] =
-      VectorSum.merge(a, b)
-    def finish(buf: Array[Double]): Array[Double] = buf
-    def bufferEncoder: Encoder[Array[Double]] = ExpressionEncoderHelper.doubleArray
-    def outputEncoder: Encoder[Array[Double]] = ExpressionEncoderHelper.doubleArray
   }
 
-  def axpySum(v: Column, w: Column): Column =
-    udaf(AxpySum, org.apache.spark.sql.Encoders.tuple(
-      ExpressionEncoderHelper.doubleArray,
-      org.apache.spark.sql.Encoders.scalaDouble)).apply(v, w)
+  def merge(a: Array[Double], b: Array[Double]): Array[Double] =
+    if (a.isEmpty) b else if (b.isEmpty) a
+    else { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a }
+  def eval(buf: Array[Double]): Any = UnsafeArrayData.fromPrimitiveArray(buf)
+  def serialize(buf: Array[Double]): Array[Byte] = {
+    val out = new Array[Byte](buf.length * 8); Platform.copyMemory(buf, Doubles, out, Bytes, out.length); out }
+  def deserialize(bytes: Array[Byte]): Array[Double] = {
+    val out = new Array[Double](bytes.length / 8); Platform.copyMemory(bytes, Bytes, out, Doubles, bytes.length); out }
+  def withNewMutableAggBufferOffset(o: Int): VectorAggExpr = copy(mutableAggBufferOffset = o)
+  def withNewInputAggBufferOffset(o: Int): VectorAggExpr = copy(inputAggBufferOffset = o)
+  protected def withNewChildrenInternal(c: IndexedSeq[Expression]): VectorAggExpr = copy(children = c)
 }
 
-private object ExpressionEncoderHelper {
-  import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-  import org.apache.spark.sql.catalyst.encoders.AgnosticEncoders
-  val doubleArray: Encoder[Array[Double]] =
-    ExpressionEncoder(AgnosticEncoders.ArrayEncoder(
-      AgnosticEncoders.PrimitiveDoubleEncoder, containsNull = false))
+object VectorAgg {
+  sealed abstract class Op(val name: String)
+  case object Sum extends Op("vector_sum")
+  case object Axpy extends Op("axpy_sum")
+  case object Gram extends Op("gram_sum")
+  private def agg(op: Op, cs: Column*): Column = ColumnBridge.column(
+    VectorAggExpr(op, cs.map(ColumnBridge.expression)).toAggregateExpression())
+
+  /** Element-wise Σ v (vector_sum), usable in groupBy().agg(...). */
+  def vectorSum(v: Column): Column = agg(Sum, v)
+
+  /** Σ w·v, without materializing the scaled array per row. */
+  def axpySum(v: Column, w: Column): Column = agg(Axpy, v, w)
+
+  /** Σ v·vᵀ as a row-major l×l array, l the width of v (the sketch Gram). */
+  def gramSum(v: Column): Column = agg(Gram, v)
 }

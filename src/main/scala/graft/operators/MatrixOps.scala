@@ -296,8 +296,8 @@ object MatrixOps {
       col("id"),
       l0(threshold(col("vec"), lit(eps))).as("nnz"))
 
-  /** reduce_rows_by_key: Σ of vectors per key via the custom vector_sum
-    * Aggregator — reference: linalg/reduce_rows_by_key.cuh:141. One shuffle
+  /** reduce_rows_by_key: Σ of vectors per key via the native vector_sum
+    * aggregate — reference: linalg/reduce_rows_by_key.cuh:141. One shuffle
     * carrying (#keys × d) partials, not n×d lanes; emitted exploded for the
     * oracle compare. */
   def reduceRowsByKey(spark: SparkSession, dir: String): DataFrame =

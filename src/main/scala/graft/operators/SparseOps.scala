@@ -294,7 +294,7 @@ object SparseOps {
     * reference: cpp/include/raft/sparse/linalg/spmm.hpp:42.
     * Lowering: equi-join on the contraction index (broadcast when B is
     * small, shuffled otherwise — AQE's call), then ONE keyed aggregate whose
-    * partials are d-vectors (vector_sum Aggregator): the shuffle carries
+    * partials are d-vectors (the VectorAgg vector_sum): the shuffle carries
     * (#rows × d) doubles with map-side combine, never the n×d join output.
     * Output exploded to (row, pos, v) scalars.
     */
