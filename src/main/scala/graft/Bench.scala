@@ -13,6 +13,9 @@ package graft
   * SPARK_GRAFT_REPS=1 for a quick single-pass run while iterating.
   */
 object Bench {
+  /** The canonical session, the one Verify checks correctness under. */
+  def session(): org.apache.spark.sql.SparkSession = GraftSession.forMain("graft-bench")
+
   /** Fixed CPU-bound canary (VERDICT r12 item 1b): a single-thread xorshift
     * checksum loop (~1 s on a healthy core, zero allocation, zero I/O),
     * measured before every rep and after the last. It decides "host
@@ -45,9 +48,7 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     only.foreach(_.diff(SparkEntry.queries.keySet).foreach(n =>
       System.err.println(s"[bench] WARNING: unknown query in SPARK_GRAFT_ONLY: $n")))
-    // the canonical session, the one Verify checks correctness under
-    val spark = GraftSession.create(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, appName = "graft-bench")
+    val spark = session()
     // JVM/IO warm-up: one full pass of the flagship query
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     // A failed query must be LOUD: recorded as a NEGATIVE time in the queries

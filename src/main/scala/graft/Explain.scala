@@ -9,8 +9,7 @@ object Explain {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
     // the canonical session (same rules and confs as Bench and Verify)
-    val spark = GraftSession.create(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, appName = "graft-explain")
+    val spark = GraftSession.forMain("graft-explain")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"===== $n =====")

@@ -29,8 +29,10 @@ object GraftSession {
       // CAVEAT (ADVICE r14): the sizing argument covers small fixed
       // per-key state. Aggregates with array-valued per-key state
       // (VectorAgg vectorSum / axpySum keyed by a wide domain, d-length
-      // arrays per key — the SparseOps.spmm shape) can hold 2e5 keys × d
-      // doubles before spilling: at d=64 that is ~100 MB/partition.
+      // arrays per key) can hold 2e5 keys × d doubles before spilling: at
+      // d=64 that is ~100 MB/partition. The SparseOps spmm core's A·X
+      // holds one key at a time (a sort aggregate over row-sorted edges);
+      // its shuffled leg, past the broadcast bound, still has this shape.
       // Executors smaller than that should lower SPARK_GRAFT_OBJ_AGG_KEYS
       // (the spill fallback stays correct, just sorted — this knob trades
       // memory for never-sort).
@@ -41,6 +43,15 @@ object GraftSession {
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
+
+  /** The session of the driver mains (Verify, Bench, Explain): [[create]]
+    * at `SPARK_GRAFT_CPUS` cores, or the JVM's processor count when that is
+    * unset, so the correctness gate and the benchmark resolve the same
+    * confs. */
+  def forMain(appName: String): SparkSession = create(
+    cores = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors),
+    appName = appName)
 
   /** Scoped session-conf override: save, set, run, restore. Session-global
     * while the body runs (a concurrent query on the SAME session sees the

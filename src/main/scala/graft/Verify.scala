@@ -3,12 +3,13 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The canonical session (the one the benchmark measures), so the
+    * correctness gate runs under the same configuration. */
+  def session(): org.apache.spark.sql.SparkSession = GraftSession.forMain("graft-verify")
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // the canonical session (the one the benchmark measures), so the
-    // correctness gate runs under the same configuration
-    val spark = GraftSession.create(
-      cores = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, appName = "graft-verify")
+    val spark = session()
     new java.io.File(outDir).mkdirs()
     // local iteration aid (mirrors Bench): SPARK_GRAFT_ONLY=q1,q2 restricts
     // the dump; tokens trimmed, unknown names warned — a misspelled filter

@@ -1406,39 +1406,37 @@ object SolverOps {
     * sparse/solver/randomized_svds.cuh (svds.pyx:73). Unlike the dense-Gram
     * rsvd above, A is never densified and no d×d Gram is formed:
     *   Y = A·Ω   — spmm with a hash-gaussian Ω (expression, l columns);
-    *   one power iteration Z = AᵀY, Y₂ = A·Z (two more keyed spmm passes);
-    *   R from tallSkinnyQR(Y₂)  (distributed TSQR, l×l local R);
-    *   M = Y₂ᵀA  — one keyed aggregate (l×#cols, collected — l bounded,
-    *               #cols the matrix's column count);
-    *   B = R⁻ᵀ·M l×d local, σ(A) ≈ σ(B).
-    * Every distributed op is a join/aggregate keyed on row or col with
-    * d-vector partials (vector_sum) — the spmm shape that scales.
+    *   one power iteration Z = AᵀY, Y₂ = A·Z;
+    *   the l×l sketch Gram G = Y₂ᵀY₂ (one gramSum aggregate);
+    *   M = Y₂ᵀA stays distributed, and only S = M·Mᵀ (l×l) is collected;
+    *   σ(A) ≈ σ(QᵀA) from G and S, Q = Y₂·W the eig-whitened sketch.
+    * The four products are the sparse × dense core of [[SparseOps]] over
+    * one [[SparseOps.rowSorted]] edge table, in the CSR form of the
+    * reference: A·Ω and A·Z are map-only sort aggregates over the edges
+    * with Ω / Z broadcast, and AᵀY, AᵀY₂ merge-join the row-sorted
+    * products with no exchange before one small exchange of d-vector
+    * partials keyed on the column.
     */
   def rsvdSparse(coo: DataFrame, k: Int, p: Int = 5, seed: Long = 7,
       colDomain: Option[DataFrame] = None, knownNnz: Long = -1L): Seq[Double] = {
     import breeze.linalg.DenseMatrix
     import graft.functions.VectorAgg
     val l = k + p
-    val edges = coo.select(col("row"), col("col"), col("value")).localCheckpoint(true)
     // loop-knob-lite (r14): the 4 spmm passes + 2 Gram aggregates are a
-    // fixed-shape chain whose exchanges carry ≤ nnz rows — width tracks the
-    // edge count and AQE replanning is dropped; codegen stays ON (the
-    // vector aggregates run interpreted either way, and the chain runs
-    // once per call so janino compiles once, not per step).
+    // fixed-shape chain whose exchanges carry ≤ nnz rows, so the width
+    // tracks the edge count. Codegen stays on: the chain runs once per
+    // call, so each generated class compiles once, not per step (the
+    // VectorAgg aggregates themselves are TypedImperativeAggregates, which
+    // Spark runs interpreted under either setting).
     // knownNnz ≥ 0 skips the sizing count() (VERDICT r14 item 10 —
     // callers with a dimension-known fixture thread it; the width knob
     // only needs the order of magnitude, but an exact count is free when
     // the caller has one).
     val nnzParts = math.max(1L, math.min(
       coo.sparkSession.sparkContext.defaultParallelism.toLong,
-      (if (knownNnz >= 0L) knownNnz else edges.count()) / 25000L)).toInt
-    graft.GraftSession.withConfs(coo.sparkSession,
-      "spark.sql.shuffle.partitions" -> nnzParts.toString,
-      "spark.sql.adaptive.enabled" -> "false") {
-    def spmmPass(m: DataFrame, vecs: DataFrame, joinKey: String, outKey: String) =
-      m.join(vecs.withColumnRenamed("id", joinKey), Seq(joinKey))
-        .groupBy(col(outKey).as("id"))
-        .agg(VectorAgg.axpySum(col("v"), col("value")).as("v"))
+      (if (knownNnz >= 0L) knownNnz else coo.count()) / 25000L)).toInt
+    SparseOps.withSpmmScope(coo.sparkSession, nnzParts) {
+    val edges = SparseOps.rowSorted(coo, nnzParts)
     // Ω materialized per distinct column (l hash-gaussians per COLUMN, not
     // per nnz) → Y = AΩ is a plain spmm join. Draws use the xxhash64-based
     // fast gaussian: Ω is never oracle-compared, only its distribution
@@ -1449,13 +1447,16 @@ object SolverOps {
     val cols = colDomain.getOrElse(edges.select(col("col").as("id")).distinct())
     val omega = cols.select(col("id"),
       array((0 until l).map(t => RandomOps.normalFast(col("id"), seed, s"w$t")): _*).as("v"))
-    val y = spmmPass(edges, omega, "col", "row")
+    // one count sizes both A·X passes: Z = AᵀY has at most one row per column
+    val nCols = cols.count()
+    val y = SparseOps.spmmA(edges, omega, nCols, l)
     // one power iteration: Z = AᵀY, Y₂ = AZ (each consumed once — lineage
-    // stays a straight chain of joins/aggregates, no checkpoint needed)
-    val z = spmmPass(edges, y, "row", "col")
+    // stays a straight chain, no checkpoint needed)
+    val z = SparseOps.spmmAt(edges, y)
     // Y₂ reused by two aggregates below → checkpoint once (lazy: the first
-    // aggregate's job materializes it)
-    val y2 = spmmPass(edges, z, "col", "row").localCheckpoint(false)
+    // aggregate's job materializes it; the checkpoint keeps Y₂'s row
+    // partitioning and order, so AᵀY₂ still merge-joins without exchange)
+    val y2 = SparseOps.spmmA(edges, z, nCols, l).localCheckpoint(false)
     // the l×l sketch Gram G = Y₂ᵀY₂ = Σ_row y·yᵀ: ONE gramSum aggregate
     // (row-major outer products folded into a primitive buffer) instead of
     // an RDD TSQR pass
@@ -1465,7 +1466,7 @@ object SolverOps {
     // S = M·Mᵀ = Σ_col m_col·m_colᵀ — one more gramSum over the M rows.
     // Nothing collected ever scales with #cols (the round-3 form collected
     // the l×#cols M — ~800 MB at 10 M columns).
-    val s = spmmPass(edges, y2, "row", "col")
+    val s = SparseOps.spmmAt(edges, y2)
       .agg(VectorAgg.gramSum(col("v")).as("g")).head().getSeq[Double](0)
     val sMat = new DenseMatrix(l, l, s.toArray)
     // Orthonormalize the sketch by eig-whitening instead of Cholesky:
@@ -1485,7 +1486,7 @@ object SolverOps {
     val t = w.t * sMat * w
     breeze.linalg.eigSym((t + t.t) / 2.0).eigenvalues.toArray.sorted.reverse
       .take(k).map(e => math.sqrt(math.max(e, 0.0))).toSeq
-    } // withConfs
+    } // withSpmmScope
   }
 
   /** Single-linkage hierarchical clustering: build the MST, cut the k−1

@@ -1,5 +1,14 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, RDDScanExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, SortAggregateExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regression guards: the perf-critical plan shapes the
@@ -53,9 +62,87 @@ class PlanSpec extends AnyFunSuite {
     assert(scans <= 2, s"expected ≤2 lineitem scans (one per self-join side), got $scans")
   }
 
-  test("sp_spmm aggregates d-vector partials (ObjectHashAggregate, no explode before shuffle)") {
-    val p = plan("sp_spmm")
-    assert(p.contains("ObjectHashAggregate"), "vector_sum partial aggregation lost")
+  /** Every plan the body's actions ran, checkpoints included (a
+    * checkpoint's own plan is not part of the plan that later reads it).
+    * The body runs in its own session, so no other suite's query is caught. */
+  private def actionPlans(body: SparkSession => Unit): Seq[(String, SparkPlan)] = {
+    val s = spark.newSession()
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[(String, SparkPlan)]()
+    s.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = got.add(f -> qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
+    body(s)
+    // listenerBus is private[spark]; its accessor is public in bytecode
+    val bus = spark.sparkContext.getClass.getMethod("listenerBus").invoke(spark.sparkContext)
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    got.asScala.toSeq
+  }
+
+  private def isEdgeScan(p: SparkPlan) =
+    p.isInstanceOf[RDDScanExec] && p.output.map(_.name) == Seq("row", "col", "value")
+
+  /** From an A·X aggregate down its streamed side to the scan it reads. */
+  private def streamPath(p: SparkPlan): List[SparkPlan] = p :: (p match {
+    case j: BroadcastHashJoinExec => streamPath(if (j.buildSide == BuildRight) j.left else j.right)
+    case _ => p.children.toList match {
+      case Nil => Nil
+      case c :: Nil => streamPath(c)
+      case _ => fail(s"A·X path meets a ${p.nodeName}:\n$p")
+    }
+  })
+
+  /** The spmm core's A·X shape in `plans`: map-only SortAggregates over
+    * the checkpointed edges, nothing hash-aggregated on `row`, and only
+    * the dense side broadcast. Returns the A·X aggregate count. */
+  private def assertAxShape(plans: Seq[SparkPlan]): Int = {
+    val ax = plans.flatMap(_.collect { case a: SortAggregateExec => a })
+    ax.foreach { a =>
+      val path = streamPath(a.child)
+      assert(isEdgeScan(path.last), s"A·X does not stream the edge table:\n$a")
+      assert(!path.exists(n => n.isInstanceOf[ShuffleExchangeExec] || n.isInstanceOf[SortExec]),
+        s"exchange or sort between the edge scan and the A·X aggregate:\n$a")
+    }
+    plans.foreach { p =>
+      p.foreach {
+        case h: BaseAggregateExec if !h.isInstanceOf[SortAggregateExec] =>
+          assert(!h.groupingExpressions.exists(_.references.exists(_.name == "row")),
+            s"hash aggregate keyed on row:\n$h")
+        case b: BroadcastExchangeExec =>
+          assert(!b.child.output.exists(_.name == "value"), s"the edge table is broadcast:\n$b")
+        case _ =>
+      }
+    }
+    ax.length
+  }
+
+  test("sp_spmm: map-only sort aggregate, explode after it") {
+    val plans = actionPlans(s => SparkEntry.queries("sp_spmm")(s, sf).collect())
+    val ps = plans.map(_._2)
+    assert(assertAxShape(ps) == 1, plans.mkString("\n"))
+    // nothing is exploded before the aggregate: the plan that aggregates
+    // has no Generate, and the query's own plan explodes the scan of the
+    // checkpointed d-vector rows
+    val aggPlan = ps.filter(_.exists(_.isInstanceOf[SortAggregateExec]))
+    assert(aggPlan.forall(!_.exists(_.isInstanceOf[GenerateExec])))
+    val (_, query) = plans.last
+    val gen = query.collect { case g: GenerateExec => g }
+    assert(gen.length == 1 && gen.head.exists(_.isInstanceOf[RDDScanExec]), s"$query")
+    assert(!query.exists(_.isInstanceOf[BaseAggregateExec]), s"$query")
+  }
+
+  test("rsvdSparse: map-only A.X passes, exchange-free merge joins") {
+    val ps = actionPlans(s => SparkEntry.queries("solver_rsvd_sparse")(s, sf).collect()).map(_._2)
+    // Y = AΩ and Y₂ = AZ
+    assert(assertAxShape(ps) == 2)
+    // Z = AᵀY and M = Y₂ᵀA: the merge join reads both sides as they are
+    val smj = ps.flatMap(_.collect { case j: SortMergeJoinExec => j })
+    assert(smj.length == 2, ps.mkString("\n"))
+    smj.foreach { j =>
+      assert(j.children.exists(_.exists(isEdgeScan)), s"$j")
+      assert(!j.exists(n => n.isInstanceOf[ShuffleExchangeExec] || n.isInstanceOf[SortExec]),
+        s"exchange or sort under the Aᵀ·X merge join:\n$j")
+    }
   }
 
   test("rel_profile_sketch replaces the Expand with register aggregates") {
