@@ -63,6 +63,28 @@ object GraftSession {
     try body finally prev.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
+  /** The session confs of the engine's partition-aligned cores (the
+    * sparse × dense core in `SparseOps`, the cosine core in `TextOps`),
+    * set for `body` and restored after it ([[withConfs]]):
+    *  - shuffle width `parts`, the width of the table the core checkpoints
+    *    (the `SparseOps.rowSorted` edges, the cosine join's unit vectors),
+    *    so every exchange of the core's passes lines up with it;
+    *  - AQE off: a checkpoint taken with AQE on loses its partitioning
+    *    (it reports `UnknownPartitioning`), and per-pass re-planning is
+    *    latency at an already-chosen width;
+    *  - `replaceHashWithSortAgg` on: Spark's ReplaceHashWithSortAgg rule
+    *    then plans the `SparseOps.spmmA` aggregate, whose input is already
+    *    partitioned and sorted by the output key, as one Complete-mode
+    *    SortAggregate — map-only, with no exchange and no hash map. It
+    *    leaves every aggregate whose input is not sorted by its keys alone.
+    * Confs apply where a plan is made, so every DataFrame built in the
+    * scope must be run or checkpointed before it ends. */
+  private[graft] def withCoreScope[T](spark: SparkSession, parts: Int)(body: => T): T =
+    withConfs(spark,
+      "spark.sql.shuffle.partitions" -> parts.toString,
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.execution.replaceHashWithSortAgg" -> "true")(body)
+
   /** Standard knob set for an iterative driver loop over ~`rows` rows:
     * shuffle width tracks the data (a 500-row fixture must not schedule
     * 32-task waves per step), AQE off (per-step re-planning is pure

@@ -1435,7 +1435,7 @@ object SolverOps {
     val nnzParts = math.max(1L, math.min(
       coo.sparkSession.sparkContext.defaultParallelism.toLong,
       (if (knownNnz >= 0L) knownNnz else coo.count()) / 25000L)).toInt
-    SparseOps.withSpmmScope(coo.sparkSession, nnzParts) {
+    graft.GraftSession.withCoreScope(coo.sparkSession, nnzParts) {
     val edges = SparseOps.rowSorted(coo, nnzParts)
     // Ω materialized per distinct column (l hash-gaussians per COLUMN, not
     // per nnz) → Y = AΩ is a plain spmm join. Draws use the xxhash64-based
@@ -1486,7 +1486,7 @@ object SolverOps {
     val t = w.t * sMat * w
     breeze.linalg.eigSym((t + t.t) / 2.0).eigenvalues.toArray.sorted.reverse
       .take(k).map(e => math.sqrt(math.max(e, 0.0))).toSeq
-    } // withSpmmScope
+    } // withCoreScope
   }
 
   /** Single-linkage hierarchical clustering: build the MST, cut the k−1

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.functions.ArrayMath
 
 /** Sparse ops over the canonical COO table `(row, col, value)` — the
@@ -296,15 +296,15 @@ object SparseOps {
     * once as-is (its count sizes the [[spmmA]] dispatch), and each output
     * row folds its own nonzeros in order, the CSR form of the reference.
     * The result is a lazy checkpoint: its plan is fixed under the core's
-    * confs ([[withSpmmScope]]), so it runs the same whenever the caller
-    * consumes it, and the caller's confs are never changed. Nothing is
-    * exploded before the aggregate: the checkpoint holds one d-vector per
-    * row, exploded to (row, pos, v) scalars on the way out.
+    * confs ([[GraftSession.withCoreScope]]), so it runs the same whenever
+    * the caller consumes it, and the caller's confs are never changed.
+    * Nothing is exploded before the aggregate: the checkpoint holds one
+    * d-vector per row, exploded to (row, pos, v) scalars on the way out.
     */
   def spmm(coo: DataFrame, b: DataFrame): DataFrame = {
     val spark = coo.sparkSession
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    withSpmmScope(spark, parts) {
+    GraftSession.withCoreScope(spark, parts) {
       val x = b.select(col("id"), col("vec").as("v")).localCheckpoint(true)
       val sized = x.agg(count(lit(1)), coalesce(max(size(col("v"))), lit(0))).head()
       spmmA(rowSorted(coo, parts), x, sized.getLong(0), sized.getInt(1))
@@ -325,31 +325,13 @@ object SparseOps {
     * heap stays safe. */
   private[graft] val SpmmBroadcastBytes: Long = 64L << 20
 
-  /** The sparse × dense core's session confs, set for `body` and restored
-    * after it ([[graft.GraftSession.withConfs]]):
-    *  - shuffle width `parts`, the width of the [[rowSorted]] edge table,
-    *    so every exchange of the core's passes lines up with it;
-    *  - AQE off: a checkpoint taken with AQE on loses its partitioning, and
-    *    per-pass re-planning is latency at an already-chosen width;
-    *  - `replaceHashWithSortAgg` on: Spark's ReplaceHashWithSortAgg rule
-    *    then plans the [[spmmA]] aggregate, whose input is already
-    *    partitioned and sorted by the output key, as one Complete-mode
-    *    SortAggregate — map-only, with no exchange and no hash map. It
-    *    leaves every aggregate whose input is not sorted by its keys alone.
-    * Confs apply where a plan is made, so every DataFrame built in the
-    * scope must be run or checkpointed before it ends. */
-  private[graft] def withSpmmScope[T](spark: SparkSession, parts: Int)(body: => T): T =
-    graft.GraftSession.withConfs(spark,
-      "spark.sql.shuffle.partitions" -> parts.toString,
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.execution.replaceHashWithSortAgg" -> "true")(body)
-
   /** A COO `(row, col, value)` in the sparse × dense core's layout:
     * hash-partitioned on `row` into `parts` partitions, sorted by
     * (row, col, value) within them, and checkpointed eagerly. The
     * checkpoint carries that partitioning and ordering, so neither form of
     * the core exchanges or sorts the edge table again, and the fold order
-    * of every output row is fixed. Call inside [[withSpmmScope]]. */
+    * of every output row is fixed. Call inside
+    * [[GraftSession.withCoreScope]]. */
   private[graft] def rowSorted(coo: DataFrame, parts: Int): DataFrame =
     coo.select(col("row"), col("col"), col("value"))
       .repartition(parts, col("row")).sortWithinPartitions("row", "col", "value")
@@ -371,7 +353,7 @@ object SparseOps {
     *    a hash aggregate on the row with one exchange of partials. The
     *    join is hinted, because Catalyst sizes an array column as one
     *    element and would broadcast a wide X it thinks is small.
-    * Call inside [[withSpmmScope]]. */
+    * Call inside [[GraftSession.withCoreScope]]. */
   private[graft] def spmmA(edges: DataFrame, x: DataFrame, xRows: Long, width: Int): DataFrame = {
     val xs = x.select(col("id").as("col"), col("v").as("x"))
     val small = xRows * width * 8L <= SpmmBroadcastBytes
@@ -387,7 +369,7 @@ object SparseOps {
     * row like the edges, so the merge-hinted join plans with no exchange
     * and no sort on either side; a partial aggregate on the column (few
     * keys per task) and one small exchange of d-vector partials follow.
-    * Call inside [[withSpmmScope]]. */
+    * Call inside [[GraftSession.withCoreScope]]. */
   private[graft] def spmmAt(edges: DataFrame, x: DataFrame): DataFrame =
     edges.join(x.select(col("id").as("row"), col("v").as("x")).hint("merge"), Seq("row"))
       .groupBy(col("col").as("id"))

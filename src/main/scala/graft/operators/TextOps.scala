@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Text/IR scoring over the `documents` table: tokenize → term-doc COO →
   * TF-IDF / BM25 re-weighting, plus the training-data-pipeline text ops
@@ -65,7 +65,10 @@ object TextOps {
   def tfidf(docs: DataFrame): DataFrame = {
     val td = termDoc(docs)
     val nDocs = docs.select(countDistinct(col("doc_id")).as("n"))
-    val df = td.groupBy(col("term")).agg(count(lit(1)).as("df"))
+    // counts a td column the optimizer cannot fold: under count(1) it
+    // prunes tf out of this subtree, whose exchange then differs from
+    // td's and is not reused, so the corpus would be tokenized twice
+    val df = td.groupBy(col("term")).agg(sum(signum(col("tf"))).cast("long").as("df"))
     td.join(broadcast(df), Seq("term"))
       .crossJoin(broadcast(nDocs))
       .select(col("doc_id"), col("term"),
@@ -94,7 +97,7 @@ object TextOps {
     case object Prefix extends CosinePath
   }
 
-  private val Salts = 16 // self-join hot-key isolation, see SelfJoin
+  private val Salts = 16 // prefix self-join hot-key isolation, see SelfJoin
   private val HotDf = 256L
 
   /** Two-stage brute/prefix dispatch. Stage 1: at ≤ 1e6 unit-vector rows,
@@ -111,23 +114,32 @@ object TextOps {
     else CosinePath.Prefix
 
   /** What a self and a cross join do differently, chosen once per
-    * [[cosineJoin]] call. `meet`, the one term-pair enumerator: a
-    * (doc_id, term, u) table joined with itself on the term into
-    * (doc_a, doc_b, ua, ub); `counts`: its per-term sizes (term, na, nb);
-    * `attach`: candidate (doc_a, doc_b) pairs joined to the full vectors. */
-  private final case class JoinForm(meet: DataFrame => DataFrame,
-      counts: DataFrame => DataFrame, attach: (DataFrame, DataFrame) => DataFrame)
+    * [[cosineJoin]] call. Both enumerators join a (doc_id, term, u) table
+    * with itself on the term into (doc_a, doc_b, ua, ub): `brute` over the
+    * doc-partitioned unit table, streaming it through a broadcast of the
+    * other side, so its output keeps the stream side's doc partitioning;
+    * `meet` over the prefix index. `counts`: the per-term sizes
+    * (term, na, nb) of either; `attach`: candidate (doc_a, doc_b) pairs
+    * joined to the full vectors. */
+  private final case class JoinForm(brute: DataFrame => DataFrame,
+      meet: DataFrame => DataFrame, counts: DataFrame => DataFrame,
+      attach: (DataFrame, DataFrame) => DataFrame)
 
   private def side(t: DataFrame, s: String): DataFrame =
     t.select(col("doc_id").as(s"doc_$s"), col("term"), col("u").as(s"u$s"))
 
-  /** doc_a < doc_b. Hot terms (df > HotDf, whose df² block would land on
-    * ONE task of a plain term join) are split 2-D: the a side salted by
-    * hash(doc) % Salts, the b side replicated to every salt, so every pair
-    * still meets exactly once. Shuffled-hash, not sort-merge, throughout:
+  /** doc_a < doc_b. Brute streams u as doc_a and broadcasts all of it as
+    * doc_b, so a hot term's pairs spread over every doc partition of the
+    * stream side and need no salting. The prefix index can outgrow a
+    * broadcast, so `meet` shuffles: hot terms (df > HotDf, whose df² block
+    * would land on ONE task of a plain term join) are split 2-D, the a
+    * side salted by hash(doc) % Salts, the b side replicated to every salt,
+    * so every pair still meets exactly once. Shuffled-hash, not sort-merge:
     * every key is massively duplicated, and SMJ's buffered-duplicate
     * iteration is several times slower than a hash-table probe there. */
   private val SelfJoin = JoinForm(
+    brute = u => side(u, "a").join(broadcast(side(u, "b")), Seq("term"))
+      .where(col("doc_a") < col("doc_b")),
     meet = t => {
       val ud = t.join(broadcast(t.groupBy(col("term")).agg(count(lit(1)).as("df"))),
         Seq("term"))
@@ -146,12 +158,15 @@ object TextOps {
       .join(side(u, "b").hint("shuffle_hash"), Seq("doc_b", "term")))
 
   /** doc_a = the eval docs, doc_b = the rest. The eval side is broadcast
-    * (eval ≪ train), so the train corpus never shuffles in `meet`. */
+    * (eval ≪ train), so the train corpus never shuffles in either
+    * enumerator, and brute's output keeps u's doc partitioning on doc_b. */
   private def crossJoin(evalIds: DataFrame): JoinForm = {
-    def sides(t: DataFrame) = (side(t.join(evalIds, Seq("doc_id")), "a"),
-      side(t.join(evalIds, Seq("doc_id"), "left_anti"), "b"))
+    def sides(t: DataFrame) = (side(t.join(broadcast(evalIds), Seq("doc_id")), "a"),
+      side(t.join(broadcast(evalIds), Seq("doc_id"), "left_anti"), "b"))
+    def meet(t: DataFrame) = { val (a, b) = sides(t); broadcast(a).join(b, Seq("term")) }
     JoinForm(
-      meet = t => { val (a, b) = sides(t); broadcast(a).join(b, Seq("term")) },
+      brute = meet,
+      meet = meet,
       counts = t => t.join(broadcast(evalIds.withColumn("isE", lit(1))), Seq("doc_id"), "left")
         .groupBy(col("term")).agg(count(col("isE")).as("na"),
           (count(lit(1)) - count(col("isE"))).as("nb")),
@@ -170,22 +185,42 @@ object TextOps {
     * = None): doc_a < doc_b. Cross join (cosine decontamination): doc_a =
     * eval docs (where the predicate holds), doc_b = the rest.
     *
-    * One term-keyed enumerator (never a doc×doc cross join) emits
-    * p = u_a·u_b per shared term; an exchange-first per-pair sum keeps
-    * sim ≥ tau. Brute enumerates the full vectors. Prefix is the LOSSLESS
-    * Bayardo filter (Bayardo, Ma & Srikant, WWW 2007): each doc indexes
-    * the head of its rarest-first vector with suffix norm ≥ tau
-    * ([[prefixIndex]]); for a pair with sim ≥ tau the first shared term s
-    * has sim ≤ suffix_a(s)·‖u_b‖ (and symmetrically), so both sides index
-    * s and the enumerator over the index (u = 1) finds the pair.
-    * Candidates are verified against the full vectors: both paths share
-    * one oracle. Every call increments exactly one of `xcos.brute` /
-    * `xcos.prefix`. */
+    * A term-keyed enumerator (never a doc×doc cross join) emits
+    * p = u_a·u_b per shared term, and a per-pair sum keeps sim ≥ tau.
+    * The unit table u is checkpointed once, hash-partitioned on doc_id at
+    * the session's shuffle width, with AQE off
+    * ([[GraftSession.withCoreScope]]: with AQE on, the checkpoint drops
+    * its partitioning).
+    *
+    * Brute enumerates the full vectors and sums each pair where it is
+    * enumerated, as All-Pairs does (Bayardo, Ma & Srikant, WWW 2007): it
+    * streams u through a broadcast of the other side, so the pair
+    * aggregate's input is already clustered on a doc key and no pair row
+    * crosses a shuffle. A self join broadcasts all of u; Auto runs brute
+    * at ≤ 1e6 unit rows only ([[choosePath]]). Measured on a 4-core host
+    * with a 4 GB driver heap, broadcasting a synthetic u (27 rows per doc,
+    * terms from a 10k vocabulary), 3 runs each: at 1e6 rows the relation
+    * is 134 MB, built in 0.55–0.83 s, and the driver heap peaked
+    * 340–430 MB above its base (181 MB still held after a GC); at 1.3e6
+    * rows, about the most a pinned Brute reaches in the `allpairszipf`
+    * probe (5e4 docs), 168 MB, 0.75–0.86 s and 500–580 MB (229 MB held).
+    *
+    * Prefix is the LOSSLESS Bayardo filter: each doc indexes the head of
+    * its rarest-first vector with suffix norm ≥ tau ([[prefixIndex]]); for
+    * a pair with sim ≥ tau the first shared term s has
+    * sim ≤ suffix_a(s)·‖u_b‖ (and symmetrically), so both sides index s
+    * and the enumerator over the index (u = 1) finds the pair. Candidates
+    * are verified against the full vectors: both paths share one oracle.
+    * Every call increments exactly one of `xcos.brute` / `xcos.prefix`. */
   def cosineJoin(docs: DataFrame, tau: Double, evalPred: Option[Column] = None,
       path: CosinePath = CosinePath.Auto): DataFrame = {
+    val spark = docs.sparkSession
+    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val form = evalPred.fold(SelfJoin)(p => crossJoin(docs.where(p).select(col("doc_id"))))
-    val u = tfidfUnit(docs).localCheckpoint(true)
-    // Σ_t nA(t)·nB(t): the volume of `meet` over t
+    val u = GraftSession.withCoreScope(spark, parts) {
+      tfidfUnit(docs).repartition(parts, col("doc_id")).localCheckpoint(true)
+    }
+    // Σ_t nA(t)·nB(t): the volume of an enumerator over t
     def volume(t: DataFrame): Long = form.counts(t)
       .agg(coalesce(sum(col("na") * col("nb")), lit(0L))).head().getLong(0)
     // built past stage 1 or when Prefix is pinned; a lazy checkpoint, so the
@@ -202,26 +237,30 @@ object TextOps {
         choosePath(uRows, bruteEst, candEst)
       case pinned => pinned
     }
-    val pairs = if (chosen == CosinePath.Prefix) {
+    def products(pairs: DataFrame) =
+      pairs.select(col("doc_a"), col("doc_b"), (col("ua") * col("ub")).as("p"))
+    val p = if (chosen == CosinePath.Prefix) {
       graft.Instrument.inc("xcos.prefix")
       val cand = form.meet(idx.withColumn("u", lit(1.0)))
         .select(col("doc_a"), col("doc_b")).distinct()
-      form.attach(cand, u)
+      // exchange first: the verified products arrive partitioned by
+      // (doc_b, term), and with ~#groups ≈ #rows/8 a map-side partial
+      // aggregate builds a near-rows-sized hash map per task and spills;
+      // repartitioning on the pair key first makes the aggregate build one
+      // small co-located map instead (measured 1.9× on the 9.4e7-row
+      // full-corpus probe)
+      products(form.attach(cand, u)).repartition(col("doc_a"), col("doc_b"))
     } else {
       graft.Instrument.inc("xcos.brute")
-      form.meet(u)
+      products(form.brute(u))
     }
-    sumPairSims(pairs.select(col("doc_a"), col("doc_b"), (col("ua") * col("ub")).as("p")), tau)
+    sumPairSims(p, tau)
   }
 
-  /** Per-pair sum with the exchange FIRST: with ~#groups ≈ #rows/8, the
-    * default map-side partial aggregate builds a near-rows-sized hash map
-    * per task and spills; repartitioning on the pair key first makes the
-    * aggregate build one small co-located map instead (measured 1.9× on
-    * the 9.4e7-row full-corpus probe). */
+  /** Per-pair sum of the products p, keeping sim ≥ tau: a plain aggregate,
+    * since each leg of [[cosineJoin]] hands it input already clustered. */
   private def sumPairSims(pairs: DataFrame, tau: Double): DataFrame =
-    pairs.repartition(col("doc_a"), col("doc_b"))
-      .groupBy(col("doc_a"), col("doc_b"))
+    pairs.groupBy(col("doc_a"), col("doc_b"))
       .agg(sum(col("p")).as("s"))
       .where(col("s") >= tau)
       .select(col("doc_a"), col("doc_b"), round(col("s"), 4).as("sim"))

@@ -350,4 +350,86 @@ class PlanSpec extends AnyFunSuite {
         s"$name regressed to a single-task global window")
     }
   }
+
+  // ------------------------------------------------------------------
+  // The cosine join's pair sum: the brute leg sums each pair in the
+  // partition where it is enumerated, the prefix leg exchanges first.
+  // ------------------------------------------------------------------
+
+  import org.apache.spark.sql.catalyst.expressions.Attribute
+  import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+  import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+  import org.apache.spark.sql.execution.joins.BaseJoinExec
+
+  /** From the topmost (doc_a, doc_b) aggregate of `p` down to the first
+    * join under it, AQE's stage wrappers opened. */
+  private def pairSumPath(p: SparkPlan): List[SparkPlan] = {
+    val agg = flatten(p).collectFirst {
+      case a: BaseAggregateExec if a.groupingExpressions.map(_.name) == Seq("doc_a", "doc_b") => a
+    }.getOrElse(fail(s"no pair aggregate:\n$p"))
+    def down(n: SparkPlan): List[SparkPlan] = n :: (n match {
+      case _: BaseJoinExec => Nil
+      case a: AdaptiveSparkPlanExec => down(a.executedPlan)
+      case q: QueryStageExec => down(q.plan)
+      case o => o.children.toList match {
+        case c :: Nil => down(c)
+        case _ => fail(s"the pair-sum path meets a ${o.nodeName}:\n$o")
+      }
+    })
+    down(agg)
+  }
+
+  private def pairExchanges(path: Seq[SparkPlan]) =
+    path.collect { case e: ShuffleExchangeLike => e }
+
+  test("brute cosine joins: doc-partitioned u, no exchange under the pair sum") {
+    // the self join broadcasts doc_b, the cross join its eval side doc_a
+    for ((name, built, streamed) <- Seq(
+        ("txt_allpairs_cosine", "doc_b", "doc_a"),
+        ("pipe_contamination_cosine", "doc_a", "doc_b"))) {
+      val plans = actionPlans(s => SparkEntry.queries(name)(s, sf).collect()).map(_._2)
+      val query = plans.last
+      // tfidf tokenizes the doc-filtered corpus once: the df subtree
+      // reuses td's exchange (a ReusedExchange leaf). On the full corpus
+      // the norms join infers isnotnull(doc_id) on td's branch only, so
+      // the two branches still differ there.
+      if (name == "txt_allpairs_cosine") {
+        val unitPlans = plans.filter(_.output.map(_.name) == Seq("doc_id", "term", "u"))
+        assert(unitPlans.length == 1 &&
+          flatten(unitPlans.head).count(_.isInstanceOf[GenerateExec]) == 1,
+          s"$name: the unit-table checkpoint explodes the corpus more than once:\n$unitPlans")
+      }
+      val path = pairSumPath(query)
+      assert(pairExchanges(path).isEmpty,
+        s"$name: exchange between the enumerator and the pair sum:\n$query")
+      path.last match {
+        case j: BroadcastHashJoinExec =>
+          val build = if (j.buildSide == BuildRight) j.right else j.left
+          // the first broadcast down the build side (the eval side's own
+          // subtree broadcasts the eval ids below it)
+          val bx = flatten(build).collectFirst { case b: BroadcastExchangeExec => b.output.map(_.name) }
+          assert(bx.exists(o => o.contains(built) && !o.contains(streamed)),
+            s"$name: the broadcast does not carry the $built side:\n$j")
+        case o => fail(s"$name: the enumerator is not a broadcast join:\n$o")
+      }
+      val uScans = flatten(query).collect {
+        case r: RDDScanExec if r.output.map(_.name) == Seq("doc_id", "term", "u") => r
+      }
+      assert(uScans.nonEmpty, s"$name: no scan of the unit table:\n$query")
+      uScans.foreach(_.outputPartitioning match {
+        case h: HashPartitioning =>
+          assert(h.expressions.collect { case a: Attribute => a.name } == Seq("doc_id"), s"$h")
+        case o => fail(s"$name: the checkpointed u reports $o")
+      })
+    }
+  }
+
+  test("txt_allpairs_prefix keeps its exchange-first pair sum") {
+    val query = actionPlans(s =>
+      SparkEntry.queries("txt_allpairs_prefix")(s, sf).collect()).last._2
+    val keys = pairExchanges(pairSumPath(query)).map(_.outputPartitioning).collect {
+      case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name }
+    }
+    assert(keys == Seq(Seq("doc_a", "doc_b")), s"$keys\n$query")
+  }
 }

@@ -4,11 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.classic.{SparkSession => Sessions}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{SolverOps, SparseOps}
+import graft.operators.{SolverOps, SparseOps, TextOps}
 
 /** Session confs: the correctness gate and the benchmark resolve the same
-  * SQL confs, and the sparse × dense core leaves its caller's confs as it
-  * found them. */
+  * SQL confs, and the sparse × dense and cosine cores leave their caller's
+  * confs as they found them. */
 class SessionConfsSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -62,5 +62,25 @@ class SessionConfsSpec extends AnyFunSuite {
     assert(confs == watched)
     assert(out.count() == 40L * 2)
     assert(confs == watched)
+  }
+
+  test("cosineJoin leaves the caller's confs as they were") {
+    val s = spark.newSession()
+    val watched = Seq(
+      "spark.sql.shuffle.partitions" -> "7",
+      "spark.sql.adaptive.enabled" -> "true")
+    watched.foreach { case (k, v) => s.conf.set(k, v) }
+    def confs = watched.map { case (k, _) => k -> s.conf.get(k) }
+    import s.implicits._
+    val docs = Seq("alpha alpha beta beta", "alpha alpha beta beta gamma gamma",
+        "delta delta eps eps").zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    for (evalPred <- Seq(None, Some(col("doc_id") === 0L));
+         path <- Seq(TextOps.CosinePath.Brute, TextOps.CosinePath.Prefix)) {
+      val out = TextOps.cosineJoin(docs, 0.5, evalPred, path)
+      assert(confs == watched)
+      assert(out.count() == 1L, s"eval=$evalPred $path")
+      assert(confs == watched)
+    }
   }
 }

@@ -78,7 +78,7 @@ class SpmmSpec extends AnyFunSuite {
   /** (A·X, Aᵀ·X) through the core on `parts` partitions. */
   private def both(s: SparkSession, es: Seq[Edge], xCols: Map[Long, Array[Double]],
       xRows: Map[Long, Array[Double]], parts: Int) =
-    SparseOps.withSpmmScope(s, parts) {
+    GraftSession.withCoreScope(s, parts) {
       val a = SparseOps.rowSorted(cooDf(s, es), parts)
       (collectV(SparseOps.spmmA(a, xDf(s, xCols), xCols.size, Width)),
         collectV(SparseOps.spmmAt(a, xDf(s, xRows))))
@@ -153,7 +153,7 @@ class SpmmSpec extends AnyFunSuite {
       val legs = Seq(atBound, atBound + 1).map { claimed =>
         Instrument.withExclusive {
           val before = Instrument.snapshot()
-          SparseOps.withSpmmScope(s, 3) {
+          GraftSession.withCoreScope(s, 3) {
             val a = SparseOps.rowSorted(cooDf(s, es), 3)
             val out = SparseOps.spmmA(a, xDf(s, xc), claimed, Width)
             val plan = out.queryExecution.executedPlan.toString
