@@ -66,17 +66,20 @@ object GraftSession {
   /** The session confs of the engine's partition-aligned cores (the
     * sparse × dense core in `SparseOps`, the cosine core in `TextOps`),
     * set for `body` and restored after it ([[withConfs]]):
-    *  - shuffle width `parts`, the width of the table the core checkpoints
-    *    (the `SparseOps.rowSorted` edges, the cosine join's unit vectors),
-    *    so every exchange of the core's passes lines up with it;
-    *  - AQE off: a checkpoint taken with AQE on loses its partitioning
-    *    (it reports `UnknownPartitioning`), and per-pass re-planning is
-    *    latency at an already-chosen width;
-    *  - `replaceHashWithSortAgg` on: Spark's ReplaceHashWithSortAgg rule
-    *    then plans the `SparseOps.spmmA` aggregate, whose input is already
-    *    partitioned and sorted by the output key, as one Complete-mode
-    *    SortAggregate — map-only, with no exchange and no hash map. It
-    *    leaves every aggregate whose input is not sorted by its keys alone.
+    *  - AQE off, which both cores rely on: a checkpoint taken with AQE on
+    *    loses its partitioning (it reports `UnknownPartitioning`). The
+    *    cosine core relies on nothing else here: it checkpoints its unit
+    *    vectors with an explicit width, the session's own.
+    *  - shuffle width `parts`, for the spmm core: the width of its
+    *    `SparseOps.rowSorted` edges, so every exchange of its passes lines
+    *    up with them (and per-pass re-planning, off with AQE, would only
+    *    be latency at that already-chosen width);
+    *  - `replaceHashWithSortAgg` on, for the spmm core: Spark's
+    *    ReplaceHashWithSortAgg rule then plans the `SparseOps.spmmA`
+    *    aggregate, whose input is already partitioned and sorted by the
+    *    output key, as one Complete-mode SortAggregate — map-only, with no
+    *    exchange and no hash map. It leaves every aggregate whose input is
+    *    not sorted by its keys alone, so it changes no cosine plan.
     * Confs apply where a plan is made, so every DataFrame built in the
     * scope must be run or checkpointed before it ends. */
   private[graft] def withCoreScope[T](spark: SparkSession, parts: Int)(body: => T): T =

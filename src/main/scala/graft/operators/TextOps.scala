@@ -97,8 +97,13 @@ object TextOps {
     case object Prefix extends CosinePath
   }
 
-  private val Salts = 16 // prefix self-join hot-key isolation, see SelfJoin
+  private val Salts = 16 // shuffled self-join hot-key isolation, see SelfJoin
   private val HotDf = 256L
+
+  /** The most unit rows the brute self join broadcasts (measured: see
+    * [[cosineJoin]]). Above it that leg enumerates with the shuffled
+    * `SelfJoin.meet`, so no driver ever builds a larger relation. */
+  private val BroadcastRows = 1000000L
 
   /** Two-stage brute/prefix dispatch. Stage 1: at ≤ 1e6 unit-vector rows,
     * brute (at sf0.1 cross-corpus brute ran 5.3 s vs prefix 10.0 s — the
@@ -118,9 +123,10 @@ object TextOps {
     * with itself on the term into (doc_a, doc_b, ua, ub): `brute` over the
     * doc-partitioned unit table, streaming it through a broadcast of the
     * other side, so its output keeps the stream side's doc partitioning;
-    * `meet` over the prefix index. `counts`: the per-term sizes
-    * (term, na, nb) of either; `attach`: candidate (doc_a, doc_b) pairs
-    * joined to the full vectors. */
+    * `meet` with no bound on either side, over the prefix index or over a
+    * unit table too large for `brute` to broadcast. `counts`: the per-term
+    * sizes (term, na, nb) of either; `attach`: candidate (doc_a, doc_b)
+    * pairs joined to the full vectors. */
   private final case class JoinForm(brute: DataFrame => DataFrame,
       meet: DataFrame => DataFrame, counts: DataFrame => DataFrame,
       attach: (DataFrame, DataFrame) => DataFrame)
@@ -130,8 +136,8 @@ object TextOps {
 
   /** doc_a < doc_b. Brute streams u as doc_a and broadcasts all of it as
     * doc_b, so a hot term's pairs spread over every doc partition of the
-    * stream side and need no salting. The prefix index can outgrow a
-    * broadcast, so `meet` shuffles: hot terms (df > HotDf, whose df² block
+    * stream side and need no salting. The prefix index, and a u above
+    * BroadcastRows, can outgrow a broadcast, so `meet` shuffles: hot terms (df > HotDf, whose df² block
     * would land on ONE task of a plain term join) are split 2-D, the a
     * side salted by hash(doc) % Salts, the b side replicated to every salt,
     * so every pair still meets exactly once. Shuffled-hash, not sort-merge:
@@ -196,14 +202,19 @@ object TextOps {
     * enumerated, as All-Pairs does (Bayardo, Ma & Srikant, WWW 2007): it
     * streams u through a broadcast of the other side, so the pair
     * aggregate's input is already clustered on a doc key and no pair row
-    * crosses a shuffle. A self join broadcasts all of u; Auto runs brute
-    * at ≤ 1e6 unit rows only ([[choosePath]]). Measured on a 4-core host
+    * crosses a shuffle. A self join broadcasts all of u, so it runs this
+    * way at ≤ 1e6 unit rows (BroadcastRows) only: stage 2 of
+    * [[choosePath]] keeps brute above that whenever prefix cannot prune,
+    * and Brute can be pinned at any size. Above the bound the brute self
+    * join enumerates with the shuffled, salted `SelfJoin.meet` and sums
+    * its pairs exchange first, as prefix does. Measured on a 4-core host
     * with a 4 GB driver heap, broadcasting a synthetic u (27 rows per doc,
     * terms from a 10k vocabulary), 3 runs each: at 1e6 rows the relation
     * is 134 MB, built in 0.55–0.83 s, and the driver heap peaked
     * 340–430 MB above its base (181 MB still held after a GC); at 1.3e6
-    * rows, about the most a pinned Brute reaches in the `allpairszipf`
-    * probe (5e4 docs), 168 MB, 0.75–0.86 s and 500–580 MB (229 MB held).
+    * rows, 168 MB, 0.75–0.86 s and 500–580 MB (229 MB held): the
+    * relation grows about 134 MB per 1e6 rows, so 1e7 rows would pass
+    * Spark's default 1 GB `spark.driver.maxResultSize`.
     *
     * Prefix is the LOSSLESS Bayardo filter: each doc indexes the head of
     * its rarest-first vector with suffix norm ≥ tau ([[prefixIndex]]); for
@@ -213,7 +224,13 @@ object TextOps {
     * are verified against the full vectors: both paths share one oracle.
     * Every call increments exactly one of `xcos.brute` / `xcos.prefix`. */
   def cosineJoin(docs: DataFrame, tau: Double, evalPred: Option[Column] = None,
-      path: CosinePath = CosinePath.Auto): DataFrame = {
+      path: CosinePath = CosinePath.Auto): DataFrame =
+    cosineJoinBounded(docs, tau, evalPred, path, BroadcastRows)
+
+  /** [[cosineJoin]] with the self join's broadcast bound as a parameter,
+    * so a spec can cross it on a small corpus. */
+  private[graft] def cosineJoinBounded(docs: DataFrame, tau: Double,
+      evalPred: Option[Column], path: CosinePath, broadcastRows: Long): DataFrame = {
     val spark = docs.sparkSession
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val form = evalPred.fold(SelfJoin)(p => crossJoin(docs.where(p).select(col("doc_id"))))
@@ -226,33 +243,38 @@ object TextOps {
     // built past stage 1 or when Prefix is pinned; a lazy checkpoint, so the
     // first job that reads it (candEst or the enumerator) computes it once
     lazy val idx = prefixIndex(u, tau).localCheckpoint(false)
+    // read by Auto and by a brute self join: one job over the checkpointed
+    // blocks (Dataset.count plans an aggregate exchange, two jobs under AQE)
+    lazy val uRows = {
+      val n = u.queryExecution.toRdd.count(); graft.Instrument.inc("xcos.u_rows", n); n
+    }
     val chosen = path match {
       case CosinePath.Auto =>
-        // one job over the checkpointed blocks (Dataset.count plans an
-        // aggregate exchange, two jobs under AQE)
-        val uRows = u.queryExecution.toRdd.count()
-        graft.Instrument.inc("xcos.u_rows", uRows)
         lazy val bruteEst = { val v = volume(u); graft.Instrument.inc("xcos.brute_est", v); v }
         lazy val candEst = { val v = volume(idx); graft.Instrument.inc("xcos.cand_est", v); v }
         choosePath(uRows, bruteEst, candEst)
       case pinned => pinned
     }
+    graft.Instrument.inc(if (chosen == CosinePath.Prefix) "xcos.prefix" else "xcos.brute")
     def products(pairs: DataFrame) =
       pairs.select(col("doc_a"), col("doc_b"), (col("ua") * col("ub")).as("p"))
-    val p = if (chosen == CosinePath.Prefix) {
-      graft.Instrument.inc("xcos.prefix")
-      val cand = form.meet(idx.withColumn("u", lit(1.0)))
-        .select(col("doc_a"), col("doc_b")).distinct()
-      // exchange first: the verified products arrive partitioned by
-      // (doc_b, term), and with ~#groups ≈ #rows/8 a map-side partial
-      // aggregate builds a near-rows-sized hash map per task and spills;
-      // repartitioning on the pair key first makes the aggregate build one
-      // small co-located map instead (measured 1.9× on the 9.4e7-row
-      // full-corpus probe)
-      products(form.attach(cand, u)).repartition(col("doc_a"), col("doc_b"))
-    } else {
-      graft.Instrument.inc("xcos.brute")
+    // a brute self join broadcasts all of u, so only up to broadcastRows;
+    // the cross join's brute broadcasts the eval side alone, at any size
+    val p = if (chosen == CosinePath.Brute && (evalPred.nonEmpty || uRows <= broadcastRows)) {
       products(form.brute(u))
+    } else {
+      val pairs = if (chosen == CosinePath.Prefix) {
+        val cand = form.meet(idx.withColumn("u", lit(1.0)))
+          .select(col("doc_a"), col("doc_b")).distinct()
+        form.attach(cand, u)
+      } else form.meet(u)
+      // exchange first: the products arrive partitioned by term (by
+      // (doc_b, term) once verified), and with ~#groups ≈ #rows/8 a
+      // map-side partial aggregate builds a near-rows-sized hash map per
+      // task and spills; repartitioning on the pair key first makes the
+      // aggregate build one small co-located map instead (measured 1.9×
+      // on the 9.4e7-row full-corpus probe)
+      products(pairs).repartition(col("doc_a"), col("doc_b"))
     }
     sumPairSims(p, tau)
   }

@@ -27,6 +27,29 @@ class CosineDispatchSpec extends AnyFunSuite {
     assert(TextOps.choosePath(1000001L, bruteEst = 1601L, candEst = 100L) == CosinePath.Prefix)
   }
 
+  test("a brute self join past the broadcast bound stays brute, counted once") {
+    import spark.implicits._
+    val docs = Seq("alpha alpha beta beta", "alpha alpha beta beta gamma gamma")
+      .zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    // a bound of 0 rows stands in for a unit table above 1e6 rows, where
+    // stage 2 keeps brute when prefix cannot prune (see above)
+    for (path <- Seq(CosinePath.Auto, CosinePath.Brute)) Instrument.withExclusive {
+      Instrument.reset()
+      val rows = TextOps.cosineJoinBounded(docs, 0.5, None, path, 0L).collect()
+      val snap = Instrument.snapshot()
+      assert(snap.get("xcos.brute").contains(1L) && !snap.contains("xcos.prefix"), s"$path: $snap")
+      // the bound is read from one count of u, pinned or not
+      assert(snap.get("xcos.u_rows").contains(5L), s"$path: $snap")
+      assert(rows.map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((0L, 1L)), s"$path: ${rows.toList}")
+    }
+    // a pinned cross join broadcasts its eval side only and counts nothing
+    Instrument.withExclusive {
+      Instrument.reset()
+      TextOps.cosineJoinBounded(docs, 0.5, Some(col("doc_id") === 0L), CosinePath.Brute, 0L).collect()
+      assert(!Instrument.snapshot().contains("xcos.u_rows"), s"${Instrument.snapshot()}")
+    }
+  }
+
   test("an Auto self join and an Auto cross join each record exactly one path") {
     import spark.implicits._
     val docs = Seq("alpha beta gamma", "alpha beta delta", "gamma delta eps",

@@ -56,6 +56,11 @@ class CosineJoinSpec extends AnyFunSuite {
       assert(rows(TextOps.cosineJoin(docs, tau, Some(col("doc_id") % 10 === 0), path)) == cross,
         s"cross $path")
     }
+    // a broadcast bound of 0 rows stands in for a unit table above 1e6
+    // rows: the brute self join then runs the shuffled, salted enumerator
+    for (path <- Seq(CosinePath.Auto, CosinePath.Brute))
+      assert(rows(TextOps.cosineJoinBounded(docs, tau, None, path, 0L)) == self,
+        s"self $path past the broadcast bound")
   }
 
   test("empty corpus, all-tf=1 corpus and one-doc corpus give empty output") {

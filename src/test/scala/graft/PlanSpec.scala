@@ -4,7 +4,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
-import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, RDDScanExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, RDDScanExec, SortExec, SparkPlan,
+  UnionExec}
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, SortAggregateExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
@@ -362,13 +363,14 @@ class PlanSpec extends AnyFunSuite {
   import org.apache.spark.sql.execution.joins.BaseJoinExec
 
   /** From the topmost (doc_a, doc_b) aggregate of `p` down to the first
-    * join under it, AQE's stage wrappers opened. */
+    * join (or the union of the shuffled self enumerator's cold and hot
+    * pairs) under it, AQE's stage wrappers opened. */
   private def pairSumPath(p: SparkPlan): List[SparkPlan] = {
     val agg = flatten(p).collectFirst {
       case a: BaseAggregateExec if a.groupingExpressions.map(_.name) == Seq("doc_a", "doc_b") => a
     }.getOrElse(fail(s"no pair aggregate:\n$p"))
     def down(n: SparkPlan): List[SparkPlan] = n :: (n match {
-      case _: BaseJoinExec => Nil
+      case _: BaseJoinExec | _: UnionExec => Nil
       case a: AdaptiveSparkPlanExec => down(a.executedPlan)
       case q: QueryStageExec => down(q.plan)
       case o => o.children.toList match {
@@ -422,6 +424,22 @@ class PlanSpec extends AnyFunSuite {
         case o => fail(s"$name: the checkpointed u reports $o")
       })
     }
+  }
+
+  test("a brute self join past its broadcast bound shuffles, exchange first") {
+    import org.apache.spark.sql.functions.col
+    import graft.operators.TextOps
+    // a bound of 0 rows stands in for a unit table above 1e6 rows
+    val query = actionPlans(s => TextOps.cosineJoinBounded(
+      Tables.documents(s, sf).where(col("doc_id") < 600), 0.8, None,
+      TextOps.CosinePath.Brute, 0L).collect()).last._2
+    val keys = pairExchanges(pairSumPath(query)).map(_.outputPartitioning).collect {
+      case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name }
+    }
+    assert(keys == Seq(Seq("doc_a", "doc_b")), s"$keys\n$query")
+    // the only broadcast is the per-term df table: no side of u
+    val bx = flatten(query).collect { case b: BroadcastExchangeExec => b.output.map(_.name) }
+    assert(bx.nonEmpty && bx.forall(_.forall(c => !c.startsWith("doc_"))), s"$bx\n$query")
   }
 
   test("txt_allpairs_prefix keeps its exchange-first pair sum") {
