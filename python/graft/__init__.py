@@ -122,16 +122,17 @@ def oracle_sql(spark, name):
 
 def eigsh(coo, n, k, m=25):
     """Smallest-k eigenvalues of a symmetric COO (row, col, value) frame via
-    the one sharded Lanczos loop (SolverOps.eigshSharded) at block width 1
-    with thick restart. Returns an (i, eig) DataFrame.
+    the one sharded Lanczos loop (SolverOps.eigshSharded) at its default
+    block width 2 with thick restart. Returns an (i, eig) DataFrame.
     pylibraft analog: pylibraft.sparse.linalg.eigsh."""
     spark = coo.sparkSession
     return _wrap(spark, _api(spark).eigsh(coo._jdf, int(n), int(k), int(m)))
 
 
 def eigsh_vectors(coo, n, k, m=25):
-    """eigsh plus Ritz vectors from the same loop: distributed (i, v)
-    spectral embeddings."""
+    """eigsh plus Ritz vectors from the same loop (block width 2): a
+    distributed (i, v) frame of k-coordinate spectral embeddings, planned
+    inside the loop and computed when first consumed."""
     spark = coo.sparkSession
     return _wrap(spark, _api(spark).eigshVectors(coo._jdf, int(n), int(k), int(m)))
 

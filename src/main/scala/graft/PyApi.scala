@@ -26,12 +26,12 @@ object PyApi {
     SparkEntry.oracleSql.getOrElse(name, "")
 
   /** Smallest-k eigenvalues of a symmetric COO matrix (row, col, value)
-    * via the one sharded Lanczos loop (SolverOps.eigshSharded) at block
-    * width 1 with thick restart; returns (i, eig) rows.
+    * via the one sharded Lanczos loop (SolverOps.eigshSharded) at its
+    * default block width 2 with thick restart; returns (i, eig) rows.
     * pylibraft analog: pylibraft.sparse.linalg.eigsh. */
   def eigsh(coo: DataFrame, n: Long, k: Int, m: Int): DataFrame = {
     val spark = coo.sparkSession
-    val (ev, _) = graft.operators.SolverOps.eigshSharded(coo, n, k, m, b = 1)
+    val (ev, _) = graft.operators.SolverOps.eigshSharded(coo, n, k, m)
     spark.createDataFrame(ev.zipWithIndex.map { case (v, i) => (i, v) })
       .toDF("i", "eig")
   }
@@ -39,7 +39,7 @@ object PyApi {
   /** [[eigsh]] plus Ritz vectors from the same loop: returns the
     * distributed (i, v) frame of k-coordinate spectral embeddings. */
   def eigshVectors(coo: DataFrame, n: Long, k: Int, m: Int): DataFrame =
-    graft.operators.SolverOps.eigshSharded(coo, n, k, m, b = 1)._2
+    graft.operators.SolverOps.eigshSharded(coo, n, k, m)._2
 
   /** Top-/bottom-k lanes per row of a dense (id, vec ARRAY<DOUBLE>) frame;
     * returns (id, pos, v, rnk). Reference: matrix/select_k.cuh. */

@@ -324,12 +324,18 @@ object SolverOps {
     * Layout: the basis V lives as a DataFrame (i, qs ARRAY<DOUBLE>) — row i
     * holds coordinate i of every lane; the driver holds only the projected
     * matrix H = VᵀAV and per-step coefficient vectors, never an n-vector.
+    * Every per-row block quantity is one ARRAY<DOUBLE> column too (the
+    * block's coordinates x, its SpMV w), every block sum one `VectorAgg`
+    * and every update one [[graft.functions.ArrayMatVec]] against a
+    * coefficient array: a step's plans hold the same number of expressions
+    * at any block width, so their planning cost does not grow with b.
     *
-    * Step: ONE action. The SpMV (b matvecs ride one join, so the edge table
-    * is touched once per block) feeds the first classical Gram-Schmidt pass;
-    * its coefficients C₁ come back into the same plan as a broadcast row,
-    * and the second pass re-MEASURES ⟨q_t, w₁⟩ from the subtracted data
-    * along with the b×b Gram of W₁. The second pass must read the
+    * Step: two actions, the checkpoint of the SpMV table and one collect.
+    * The SpMV (b matvecs ride one join, so the edge table is touched once
+    * per block) feeds the first classical Gram-Schmidt pass; its
+    * coefficients C₁ come back into the same plan as a broadcast row, and
+    * the second pass re-MEASURES ⟨q_t, w₁⟩ from the subtracted data along
+    * with the b×b Gram of W₁. The second pass must read the
     * subtracted vectors, not be derived from a driver-held Gram: C₂ only
     * corrects the measurement error in C₁, while the orthogonality drift
     * CGS2 exists to kill is the cancellation rounding in fl(W − VC₁) itself
@@ -356,17 +362,19 @@ object SolverOps {
     * once the wanted Ritz values repeat to 1e-9 across a restart;
     * `maxRestarts = 0` is the single-phase block form.
     *
-    * Returns (eigenvalues, Ritz vectors): the vectors are ONE lazy
-    * distributed per-row matvec over the final basis, (i, v ARRAY<DOUBLE>
-    * of k coords), row i of V·Y for the driver-held subspace eigenvectors
-    * Y — nothing runs unless the caller consumes it.
+    * Returns (eigenvalues, Ritz vectors): the vectors are ONE distributed
+    * per-row matvec over the final basis, (i, v ARRAY<DOUBLE> of k coords),
+    * row i of V·Y for the driver-held subspace eigenvectors Y. It is a lazy
+    * checkpoint planned inside the loop's confs: nothing runs unless the
+    * caller consumes it, and then it runs the plan made here.
     */
   def eigshSharded(coo: DataFrame, n: Long, k: Int, m: Int = 25, b: Int = 2,
       maxRestarts: Int = 3, tol: Double = 1e-9,
       seed: Long = 3): (Seq[Double], DataFrame) = {
     import breeze.linalg.{eigSym, norm, DenseMatrix, DenseVector}
-    import graft.functions.{ArrayMath, VectorAgg}
+    import graft.functions.{ArrayMatVec, VectorAgg}
     val spark = coo.sparkSession
+    graft.Instrument.inc("eigsh.b", b)
     // partition count tracks the per-row WORK, not just n: the loop's
     // per-row work is lanes-wide array math (CGS folds + axpy buffers), so
     // the width sizes by CELLS (rows × basis width m+b) at 25k cells per
@@ -411,17 +419,16 @@ object SolverOps {
       val absFloor = 1e-20
       // b deterministic hash-gaussian streams, eigen-orthonormalized (the
       // same G = UΛUᵀ → Q = X·U·Λ^{-1/2} map the deflation path uses)
-      val raw0 = spark.range(n).select(col("id").as("i") +:
-          (0 until b).map(t => RandomOps.normal(col("id"), seed, s"blz$t").as(s"x$t")): _*)
+      val raw0 = spark.range(n).select(col("id").as("i"), array((0 until b).map(t =>
+          RandomOps.normal(col("id"), seed, s"blz$t")): _*).as("x"))
         .repartition(parts, col("i")).sortWithinPartitions("i")
         .localCheckpoint(true)
-      def gramOf(row: org.apache.spark.sql.Row, off: Int, w: Int): DenseMatrix[Double] = {
-        val pairs = for { a <- 0 until w; c <- a until w } yield (a, c)
-        val g = DenseMatrix.zeros[Double](w, w)
-        pairs.zipWithIndex.foreach { case ((a, c), idx) =>
-          val v = row.getDouble(off + idx); g(a, c) = v; g(c, a) = v }
-        g
-      }
+      /** a w×w Gram from its row-major `gramSum` array */
+      def gramOf(g: Seq[Double], w: Int) = DenseMatrix.tabulate(w, w)((a, c) => g(a * w + c))
+      /** the coefficient array of the mat-vec x ↦ Mᵀx: M's columns, each
+        * a row of the row-major ArrayMatVec operand */
+      def colsOf(mat: DenseMatrix[Double]): Column =
+        typedLit(for { u <- 0 until mat.cols; t <- 0 until mat.rows } yield mat(t, u))
       /** rank-revealing orthonormalization map: G = UΛUᵀ → columns of
         * M = U_r·Λ_r^{-1/2} (w×r) with Λ_r the eigenvalues above tol;
         * also returns R_eff = Λ_r^{1/2}·U_rᵀ (r×w), the block coupling,
@@ -448,12 +455,9 @@ object SolverOps {
         (mMap, rEff, r, math.sqrt(dropped))
       }
       val tSetup0 = System.nanoTime()
-      val g0Pairs = for { a <- 0 until b; c <- a until b } yield (a, c)
-      val g0Aggs = g0Pairs.map { case (a, c) => sum(col(s"x$a") * col(s"x$c")) }
-      val g0Row = raw0.agg(g0Aggs.head, g0Aggs.tail: _*).head()
-      val (m0, _, b0, _) = orthMap(gramOf(g0Row, 0, b))
-      var basis = raw0.select(col("i"), array((0 until b0).map(u =>
-          (0 until b).map(s => col(s"x$s") * m0(s, u)).reduce(_ + _)): _*).as("qs"))
+      val g0 = raw0.agg(VectorAgg.gramSum(col("x"))).head().getSeq[Double](0)
+      val (m0, _, b0, _) = orthMap(gramOf(g0, b))
+      var basis = raw0.select(col("i"), ArrayMatVec.matVec(col("x"), colsOf(m0)).as("qs"))
         .localCheckpoint(true)
       var lanes = b0 // total lanes; the newest curB of them are unmeasured
       var curB = b0
@@ -470,59 +474,50 @@ object SolverOps {
         val tStep0 = System.nanoTime()
         // ---- measure the newest block [lanes-curB, lanes) ----
         val j0 = lanes - curB
-        val qj = basis.select(col("i").as("col") +:
-          (0 until curB).map(t => element_at(col("qs"), j0 + 1 + t).as(s"x$t")): _*)
-        val wAggs = (0 until curB).map(t => sum(col("value") * col(s"x$t")).as(s"w$t"))
+        val qj = basis.select(col("i").as("col"), slice(col("qs"), j0 + 1, curB).as("x"))
         val w0 = edges.join(qj, Seq("col")).groupBy(col("row").as("i"))
-          .agg(wAggs.head, wAggs.tail: _*)
+          .agg(VectorAgg.axpySum(col("x"), col("value")).as("w"))
         // lazy checkpoint: materialized by this step's action, then read
         // by the next basis update as a one-level lineage leaf
         val df = basis.join(w0, Seq("i"), "left")
-          .select(col("i") +: col("qs") +: (0 until curB).map(t =>
-            coalesce(col(s"w$t"), lit(0.0)).as(s"w$t")): _*)
+          .select(col("i"), col("qs"),
+            coalesce(col("w"), typedLit(Seq.fill(curB)(0.0))).as("w"))
           .localCheckpoint(false)
-        // ONE action per step: the CGS1 coefficients c1 = Σ qs·w are a
-        // 1-row broadcast subtree crossJoined back, so the CGS2 pass
-        // consumes them WITHOUT a driver round-trip (measured ~100-170 ms
-        // of a ~400-700 ms step at n=1e5). BroadcastNestedLoopJoin streams
-        // the probe side in place, so the partial-aggregate folds see the
-        // same rows in the same order as a two-action form. c1 itself
-        // rides back on the collected row via first() (every joined row
-        // carries the identical broadcast array).
-        val c1Aggs = (0 until curB).map(t =>
-          VectorAgg.axpySum(col("qs"), col(s"w$t")).as(s"c1_$t"))
-        val c1Row = df.agg(c1Aggs.head, c1Aggs.tail: _*)
-        val w1 = df.crossJoin(broadcast(c1Row))
-          .select(col("i") +: col("qs") +: (0 until curB).map(t =>
-            (col(s"w$t") - graft.functions.ArrayDot.dot(col("qs"), col(s"c1_$t")))
-              .as(s"w$t")) ++: (0 until curB).map(t => col(s"c1_$t")): _*)
-        val gPairs = for { a <- 0 until curB; c <- a until curB } yield (a, c)
-        val aggs2 = (0 until curB).map(t =>
-          VectorAgg.axpySum(col("qs"), col(s"w$t")).as(s"c$t")) ++
-          gPairs.map { case (a, c) => sum(col(s"w$a") * col(s"w$c")).as(s"g${a}_$c") } ++
-          (0 until curB).map(t => first(col(s"c1_$t")).as(s"c1f_$t"))
+        // one collect per step: the CGS1 coefficients C₁ = Σ w·qsᵀ
+        // (row t: lane t's coefficients) are a 1-row broadcast subtree
+        // crossJoined back, so the CGS2 pass consumes them WITHOUT a
+        // driver round-trip (measured ~100-170 ms of a ~400-700 ms step at
+        // n=1e5). BroadcastNestedLoopJoin streams the probe side in place,
+        // so the partial-aggregate folds see the same rows in the same
+        // order as a two-action form. C₁ itself rides back on the
+        // collected row via first() (every joined row carries the
+        // identical broadcast array).
+        val c1Row = df.agg(VectorAgg.outerSum(col("w"), col("qs")).as("c1"))
+        val w1 = df.crossJoin(broadcast(c1Row)).select(col("i"), col("qs"),
+          ArrayMatVec.residual(col("w"), col("qs"), col("c1")).as("w"), col("c1"))
         // plan-vs-execute attribution: force the action's own
         // QueryExecution first, so ms_r1_plan isolates driver-side
         // Catalyst work from the jobs. collect()(0) (not head()) keeps
         // the forced plan the one the action runs — head() builds a
         // fresh limit-1 QueryExecution and would re-plan.
-        val r2Ds = w1.agg(aggs2.head, aggs2.tail: _*)
+        val r2Ds = w1.agg(VectorAgg.outerSum(col("w"), col("qs")).as("c2"),
+          VectorAgg.gramSum(col("w")).as("g"), first(col("c1")).as("c1"))
         r2Ds.queryExecution.executedPlan
         graft.Instrument.inc("eigsh.ms_r1_plan", (System.nanoTime() - tStep0) / 1000000L)
         val r2 = r2Ds.collect()(0)
         graft.Instrument.inc("eigsh.ms_r1", (System.nanoTime() - tStep0) / 1000000L)
-        val nG = gPairs.length
-        val c1 = (0 until curB).map(t => r2.getSeq[Double](curB + nG + t).toArray)
-        val c2 = (0 until curB).map(t => r2.getSeq[Double](t).toArray)
+        // row-major curB × lanes: c(t * lanes + s) = ⟨q_s, w_t⟩
+        val c1 = r2.getSeq[Double](2).toArray
+        val c2 = r2.getSeq[Double](0).toArray
         (0 until curB).foreach { t =>
           (0 until lanes).foreach { s =>
-            val v = c1(t)(s) + c2(t)(s)
+            val v = c1(t * lanes + s) + c2(t * lanes + s)
             h(s, j0 + t) = v; h(j0 + t, s) = v
           }
         }
-        val gW1 = gramOf(r2, curB, curB)
+        val gW1 = gramOf(r2.getSeq[Double](1), curB)
         val gPrime = DenseMatrix.tabulate[Double](curB, curB) { (a, c) =>
-          gW1(a, c) - (0 until lanes).map(s => c2(a)(s) * c2(c)(s)).sum }
+          gW1(a, c) - (0 until lanes).map(s => c2(a * lanes + s) * c2(c * lanes + s)).sum }
         val (mMap, rEff, rNew, dropBound) = orthMap(gPrime)
         // Ritz pairs of the fully-measured H[0:lanes], smallest first
         lazy val es = eigSym(h(0 until lanes, 0 until lanes).copy)
@@ -553,17 +548,14 @@ object SolverOps {
             // the next block Q_new = (W₁ − V·C₂)·M, derived from the
             // CHECKPOINTED df with c1/c2 as literals (NOT from w1 — its
             // broadcast-c1 subtree would re-execute the c1 aggregate when
-            // the next step materializes the basis). Arithmetic order
-            // identical to the in-plan form: (w − dot(qs,c1)) − dot(qs,c2).
-            // The w2 columns are aliased in their own projection level so
-            // they are evaluated once per lane, not once per NEW lane
-            // (CollapseProject leaves multi-use non-cheap aliases alone).
-            val w2d = df.select(col("i") +: col("qs") +: (0 until curB).map(t =>
-              ((col(s"w$t") - ArrayMath.dot(col("qs"), typedLit(c1(t).toSeq)))
-                - ArrayMath.dot(col("qs"), typedLit(c2(t).toSeq)))
-                .as(s"w2_$t")): _*)
-            val newLanes = (0 until rNew).map(u =>
-              (0 until curB).map(t => col(s"w2_$t") * mMap(t, u)).reduce(_ + _))
+            // the next step materializes the basis). Arithmetic identical
+            // to the in-plan form: (w − C₁·qs) − C₂·qs, the same residual
+            // expression. w2 is aliased in its own projection level so it
+            // is evaluated once per row.
+            val w2d = df.select(col("i"), col("qs"), ArrayMatVec.residual(
+              ArrayMatVec.residual(col("w"), col("qs"), typedLit(c1.toSeq)),
+              col("qs"), typedLit(c2.toSeq)).as("w2"))
+            val newLanes = ArrayMatVec.matVec(col("w2"), colsOf(mMap))
             if (restart) {
               // thick restart: the l best Ritz vectors V·y plus Q_new;
               // H restarts as diag(θ) and the next step measures the
@@ -571,12 +563,10 @@ object SolverOps {
               val l = math.min(k + 2, lanes)
               val kept = ritz(l)
               prevRitz = kept.take(k).map(_._1).toSeq
-              val ritzLanes = kept.map { case (_, c) =>
-                ArrayMath.dot(col("qs"),
-                  typedLit((0 until lanes).map(t => es.eigenvectors(t, c))))
-              }
-              basis = w2d.select(col("i"),
-                array(ritzLanes.toIndexedSeq ++ newLanes: _*).as("qs")).localCheckpoint(true)
+              val ritzLanes = ArrayMatVec.matVec(col("qs"), typedLit(kept.toSeq.flatMap {
+                case (_, c) => (0 until lanes).map(t => es.eigenvectors(t, c)) }))
+              basis = w2d.select(col("i"), concat(ritzLanes, newLanes).as("qs"))
+                .localCheckpoint(true)
               h := 0.0
               kept.zipWithIndex.foreach { case ((th, _), t) => h(t, t) = th }
               lanes = l + rNew
@@ -586,20 +576,19 @@ object SolverOps {
               // NO checkpoint on the expanded basis: it is a cheap
               // projection over the checkpointed df, so the next step's
               // two consumers (qj — column-pruned to the new lanes — and
-              // the concat feeding the next df) recompute ~2·curB dot
-              // folds per row instead of paying an n×lanes serialize per
-              // step. Lineage stays one level (df is a LogicalRDD leaf).
-              basis = w2d.select(col("i"),
-                concat(col("qs"), array(newLanes: _*)).as("qs"))
+              // the concat feeding the next df) recompute the block's
+              // mat-vecs per row instead of paying an n×lanes serialize
+              // per step. Lineage stays one level (df is a LogicalRDD leaf).
+              basis = w2d.select(col("i"), concat(col("qs"), newLanes).as("qs"))
               lanes += rNew
             }
             curB = rNew
           }
         }
       }
-      val vecs = basis.select(col("i"), array(ys.map { y =>
-        ArrayMath.dot(col("qs"), typedLit(y.toSeq))
-      }: _*).as("v"))
+      val vecs = basis.select(col("i"),
+        ArrayMatVec.matVec(col("qs"), typedLit(ys.flatten.toSeq)).as("v"))
+        .localCheckpoint(false)
       (result, vecs)
     }
   }
@@ -625,19 +614,27 @@ object SolverOps {
     math.min(2, room)
   }
 
+  /** The [[eigshSmallestAuto]] tier: driver-local up to 1e6 nnz (and n
+    * that fits an Int), where per-step job overhead would dominate. */
+  def eigshLocalTier(n: Long, nnz: Long): Boolean = nnz <= 1000000L && n <= Int.MaxValue
+
   /** Size-dispatched eigsh entry (the kAuto composition) and the one place
-    * that counts nnz: driver-local [[eigshSmallest]] up to 1e6 nnz, where
-    * per-step job overhead would dominate, the sharded block loop
-    * [[eigshSharded]] above it with [[eigshBlockAuto]] width and no
-    * restart (the certificate-terminated large-n regime). */
+    * that counts nnz: driver-local [[eigshSmallest]] in [[eigshLocalTier]],
+    * the sharded block loop [[eigshSharded]] above it with
+    * [[eigshBlockAuto]] width and no restart (the certificate-terminated
+    * large-n regime). Counts the tier it takes, `eigsh.tier.local` or
+    * `eigsh.tier.sharded`. */
   def eigshSmallestAuto(coo: DataFrame, n: Long, k: Int, m: Int = 25,
       seed: Long = 3): Seq[Double] = {
     val nnz = coo.count()
-    if (nnz <= 1000000L && n <= Int.MaxValue)
+    if (eigshLocalTier(n, nnz)) {
+      graft.Instrument.inc("eigsh.tier.local")
       eigshSmallest(coo, n.toInt, k, m, seed)
-    else
+    } else {
+      graft.Instrument.inc("eigsh.tier.sharded")
       eigshSharded(coo, n, k, m, b = eigshBlockAuto(n, nnz, k, m),
         maxRestarts = 0, seed = seed)._1
+    }
   }
 
   /** tsvd transform + inverse_transform + reconstruction error —

@@ -97,7 +97,7 @@ object SpectralOps {
     val spark = symEdges.sparkSession
     graft.GraftSession.withLoopKnobs(spark, n) {
       val lap = SparseOps.laplacian(symEdges)
-      val (_, vecs) = SolverOps.eigshSharded(lap, n, k, m, b = 1)
+      val (_, vecs) = SolverOps.eigshSharded(lap, n, k, m)
       val emb = vecs.select(col("i").as("id"), col("v").as("vec"))
         .localCheckpoint(true)
       val init = ClusterOps.kmeansParallelInit(emb, k)

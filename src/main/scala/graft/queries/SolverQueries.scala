@@ -33,7 +33,7 @@ object SolverQueries extends QueryGroup {
     * EXACT (range(Q) ⊇ range(A)); σ_j = √Σ_{i≡j(8)} v_i² is one SQL
     * aggregate. Big enough that the 4 spmm passes do real distributed work.
     */
-  private def rsvdSparseFixture(s: SparkSession): DataFrame =
+  private[graft] def rsvdSparseFixture(s: SparkSession): DataFrame =
     s.range(200000).select(col("id").as("row"),
       pmod(col("id"), lit(8L)).as("col"),
       ((pmod(col("id") * 37, lit(101)) + 1).cast("double") / 10.0).as("value"))
@@ -61,7 +61,7 @@ object SolverQueries extends QueryGroup {
   }
 
   /** Path-graph Laplacian on n nodes (spectrum 2−2cos(πq/n), closed form). */
-  private def chainLaplacian(s: SparkSession, n: Long): DataFrame = {
+  private[graft] def chainLaplacian(s: SparkSession, n: Long): DataFrame = {
     val chain = s.range(n - 1).select(col("id").as("row"), (col("id") + 1).as("col"),
       lit(-1.0).as("value"))
     val sym = chain.unionByName(chain.select(col("col").as("row"),
@@ -189,11 +189,12 @@ object SolverQueries extends QueryGroup {
       // chain Laplacian through the sharded-basis thick-restart path;
       // spectrum is closed-form → real SQL oracle. m > n: the basis
       // reaches the full space, the residual vanishes and one phase
-      // returns the exact spectrum — no restart cycles. n=20 keeps the
-      // driver loop at 20 steps; same-matrix agreement with the
-      // driver-basis path stays pinned at n=30 in Solver2Spec.
+      // returns the exact spectrum — no restart cycles. n=20 at the
+      // default block width 2 keeps the driver loop at 10 steps;
+      // same-matrix agreement with the driver-basis path stays pinned at
+      // n=30 in Solver2Spec.
       eigsDf(s, SolverOps.eigshSharded(chainLaplacian(s, 20), 20, 3,
-        m = 25, b = 1, maxRestarts = 4)._1)
+        m = 25, maxRestarts = 4)._1)
     }),
     "solver_eigsh_vectors" -> ((s, d) => {
       // Ritz VECTORS from the sharded basis (factor output, not just the
@@ -202,9 +203,12 @@ object SolverQueries extends QueryGroup {
       // per-coordinate v² is closed form — sign-free, hence hash-stable.
       // n=16 (not the n=30 the value queries use): the extraction path is
       // identical, the driver loop is half the steps — the bench row pays
-      // for the factor demonstration, not for a second spectrum solve
+      // for the factor demonstration, not for a second spectrum solve.
+      // Default block width 2: each step adds two lanes, so the 16-lane
+      // space takes 8 steps. The vectors come back as a lazy checkpoint
+      // planned at the loop's confs; this select runs it.
       val (_, vecs) = SolverOps.eigshSharded(chainLaplacian(s, 16), 16, 3,
-        m = 20, b = 1, maxRestarts = 4)
+        m = 20, maxRestarts = 4)
       vecs.select(col("i"), posexplode(col("v")).as(Seq("q", "x")))
         .select(col("i"), col("q").cast("long").as("q"),
           (round(col("x") * col("x"), 4) + 0.0).as("v2"))

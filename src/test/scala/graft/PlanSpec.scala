@@ -219,39 +219,59 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"))
   }
 
+  /** Expression nodes in every operator of `p`. */
+  private def exprNodes(p: SparkPlan): Int =
+    p.collect { case n => n.expressions.map(_.collect { case e => e }.length).sum }.sum
+
+  /** The executed plans of `eigshSharded`'s step actions on the n-node
+    * chain Laplacian at block width b with a lane budget of m, per step:
+    * the SpMV checkpoint (i, qs, w) and the CGS collect (c2, g, c1). */
+  private def eigshSteps(n: Int, m: Int, b: Int): Seq[(SparkPlan, SparkPlan)] = {
+    val plans = actionPlans { s =>
+      graft.operators.SolverOps.eigshSharded(graft.queries.SolverQueries.chainLaplacian(s, n),
+        n, 3, m = m, b = b, maxRestarts = 0)
+    }.map(_._2)
+    val spmv = plans.filter(_.output.map(_.name) == Seq("i", "qs", "w"))
+    val cgs = plans.filter(_.output.map(_.name) == Seq("c2", "g", "c1"))
+    assert(spmv.nonEmpty && spmv.length == cgs.length, plans.mkString("\n"))
+    spmv.zip(cgs)
+  }
+
   test("sharded-Lanczos step plans exactly 2 exchanges (edge/basis invariant holds)") {
     // eigshSharded hash-distributes the checkpointed edge table on the
     // contraction key and keeps the basis hash-partitioned+sorted on i, so
-    // a step's SpMV-aggregate job must shuffle ONLY at the row-keyed
-    // aggregate and the final single-partition reduce. A third exchange
-    // means alias-aware partitioning propagation broke (e.g. a projection
-    // rewrite hid the alias) and the nnz-sized edge side re-shuffles every
-    // step of the driver loop.
-    import org.apache.spark.sql.functions._
-    import graft.functions.VectorAgg
-    val saved = Seq("spark.sql.adaptive.enabled",
-      "spark.sql.autoBroadcastJoinThreshold").map(k => k -> spark.conf.get(k))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      val edges = spark.range(100).select(col("id").as("row"), col("id").as("col"),
-          lit(1.0).as("value"))
-        .repartition(parts, col("col")).sortWithinPartitions("col")
-        .localCheckpoint(true)
-      val basis = spark.range(100).select(col("id").as("i"), array(lit(1.0)).as("qs"))
-        .repartition(parts, col("i")).sortWithinPartitions("i")
-        .localCheckpoint(true)
-      val qj = basis.select(col("i").as("col"), element_at(col("qs"), 1).as("x"))
-      val w0 = edges.join(qj, Seq("col"))
-        .groupBy(col("row").as("i")).agg(sum(col("value") * col("x")).as("w"))
-      val step = basis.join(w0, Seq("i"), "left")
-        .select(col("i"), col("qs"), coalesce(col("w"), lit(0.0)).as("w"))
-        .agg(VectorAgg.axpySum(col("qs"), col("w")).as("c"))
-      val p = step.queryExecution.executedPlan.toString
-      val exchanges = "Exchange".r.findAllIn(p).length
-      assert(exchanges == 2, s"expected 2 exchanges in the step plan, got $exchanges:\n$p")
-    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+    // a step shuffles ONLY at the row-keyed SpMV aggregate (the SpMV
+    // checkpoint) and at the two single-partition reduces of the CGS
+    // collect. Another exchange means alias-aware partitioning propagation
+    // broke (e.g. a projection rewrite hid the alias) and the nnz-sized
+    // edge side, or the basis, re-shuffles every step of the driver loop.
+    // n = 5000 lays the loop out over 2-3 partitions (at 1 partition any
+    // partitioning satisfies the aggregate, and the SpMV join re-shuffles
+    // both sides); the slow chain spends the whole lane budget m = 12
+    val counts = Seq(1, 2, 4).map { b =>
+      val steps = eigshSteps(5000, 12, b)
+      assert(steps.length == 12 / b, s"b=$b: ${steps.length} steps")
+      steps.foreach { case (spmv, cgs) =>
+        def shuffles(p: SparkPlan) = p.collect { case e: ShuffleExchangeExec => e }
+        val rowKeyed = shuffles(spmv)
+        assert(rowKeyed.length == 1 && rowKeyed.head.outputPartitioning.isInstanceOf[
+          org.apache.spark.sql.catalyst.plans.physical.HashPartitioning], s"b=$b:\n$spmv")
+        val reduces = shuffles(cgs)
+        assert(reduces.length == 2 && reduces.forall(_.outputPartitioning.numPartitions == 1),
+          s"b=$b:\n$cgs")
+        // the edge scan feeds the SpMV merge join directly: no exchange or
+        // sort on the edge side
+        assert(spmv.exists {
+          case j: SortMergeJoinExec => j.children.exists(isEdgeScan)
+          case _ => false
+        }, s"b=$b: exchange or sort on the edge side:\n$spmv")
+      }
+      steps.map { case (spmv, cgs) => (exprNodes(spmv), exprNodes(cgs)) }
+    }
+    // the plans hold the same expressions at any width: the first step
+    // (basis a checkpoint) and every later step (basis a projection)
+    assert(counts.map(_.head).distinct.length == 1, counts)
+    assert(counts.flatMap(_.tail).distinct.length == 1, counts)
   }
 
   test("graph optimize reads the checkpointed edge list — no per-subtree graph rebuild") {

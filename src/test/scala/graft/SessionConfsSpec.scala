@@ -7,8 +7,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{SolverOps, SparseOps, TextOps}
 
 /** Session confs: the correctness gate and the benchmark resolve the same
-  * SQL confs, and the sparse × dense and cosine cores leave their caller's
-  * confs as they found them. */
+  * SQL confs, and the sparse × dense, Lanczos and cosine cores leave their
+  * caller's confs as they found them. */
 class SessionConfsSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -61,6 +61,27 @@ class SessionConfsSpec extends AnyFunSuite {
     val out = SparseOps.spmm(coo, b)
     assert(confs == watched)
     assert(out.count() == 40L * 2)
+    assert(confs == watched)
+  }
+
+  test("eigshSharded leaves the caller's confs as they were; its vectors are a checkpoint") {
+    val s = spark.newSession()
+    val watched = Seq(
+      "spark.sql.shuffle.partitions" -> "7",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "10485760",
+      "spark.sql.codegen.wholeStage" -> "true")
+    watched.foreach { case (k, v) => s.conf.set(k, v) }
+    def confs = watched.map { case (k, _) => k -> s.conf.get(k) }
+    val coo = graft.queries.SolverQueries.chainLaplacian(s, 8)
+    val (vals, vecs) = SolverOps.eigshSharded(coo, 8, 2, m = 12)
+    assert(confs == watched)
+    assert(math.abs(vals.head) < 1e-9, vals)
+    // planned inside the loop's scope: the caller gets a leaf, not a plan
+    // that would be made at the caller's confs
+    assert(vecs.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD],
+      vecs.queryExecution.analyzed)
+    assert(vecs.count() == 8L)
     assert(confs == watched)
   }
 

@@ -43,6 +43,14 @@ class VectorAggSpec extends AnyFunSuite {
   private def gramLanes(v: Array[Double]) =
     Array.tabulate(v.length * v.length)(k => v(k % v.length) * v(k / v.length))
 
+  /** Row-major u·vᵀ, as the outer-product sum folds it. */
+  private def outerLanes(u: Array[Double], v: Array[Double]) =
+    Array.tabulate(u.length * v.length)(k => u(k / v.length) * v(k % v.length))
+
+  /** A second vector per row, of another width (three lanes, one of them
+    * -0.0 in key 3's row). */
+  private def second(v: Array[Double], w: Double) = Array(w, v(0) * w, -v(1))
+
   private def oneAgg(df: DataFrame, c: org.apache.spark.sql.Column) =
     df.agg(c).head().getSeq[Double](0)
 
@@ -80,11 +88,42 @@ class VectorAggSpec extends AnyFunSuite {
     }
   }
 
+  test("outerSum equals a sequential fold bit for bit, globally and per key") {
+    val data = rows(400, 13)
+    val df = data.map { case (g, v, w) => (g, v, second(v, w)) }.toDF("g", "u", "v")
+      .repartition(1).localCheckpoint(true)
+    val pairs = data.map { case (g, v, w) => (g, v, second(v, w)) }
+    eachKnob { k =>
+      assert(bits(oneAgg(df, VectorAgg.outerSum(col("u"), col("v")))) ==
+        bits(fold(pairs.map(t => outerLanes(t._2, t._3)))(identity)), k)
+      assert(bits(oneAgg(df, VectorAgg.outerSum(col("v"), col("u")))) ==
+        bits(fold(pairs.map(t => outerLanes(t._3, t._2)))(identity)), k)
+      val keyed = df.groupBy(col("g")).agg(VectorAgg.outerSum(col("u"), col("v")))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+      assert(keyed.keySet == Set(0L, 1L, 2L, 3L), k)
+      keyed.foreach { case (g, o) =>
+        val mine = pairs.filter(_._1 == g)
+        assert(o.length == Width * 3, s"$k g=$g")
+        assert(bits(o) == bits(fold(mine.map(t => outerLanes(t._2, t._3)))(identity)), s"$k g=$g")
+      }
+    }
+  }
+
+  test("gramSum is outerSum with u = v, bit for bit over 3 partitions") {
+    val df = rows(3000, 29).toDF("g", "v", "w").repartition(3).localCheckpoint(true)
+    eachKnob { k =>
+      val both = df.agg(VectorAgg.gramSum(col("v")), VectorAgg.outerSum(col("v"), col("v")),
+        VectorAgg.outerSum(col("v"), transform(col("v"), x => x))).head()
+      val Seq(gram, outer, copied) = (0 to 2).map(both.getSeq[Double])
+      assert(bits(gram) == bits(outer) && bits(gram) == bits(copied), k)
+    }
+  }
+
   test("empty input gives the empty array") {
     val df = rows(10, 5).toDF("g", "v", "w").filter(lit(false))
     eachKnob { k =>
       Seq(VectorAgg.vectorSum(col("v")), VectorAgg.axpySum(col("v"), col("w")),
-          VectorAgg.gramSum(col("v"))).foreach { c =>
+          VectorAgg.gramSum(col("v")), VectorAgg.outerSum(col("v"), col("v"))).foreach { c =>
         val r = df.agg(c).head()
         assert(!r.isNullAt(0) && r.getSeq[Double](0).isEmpty, s"$k $c")
       }
@@ -105,4 +144,28 @@ class VectorAggSpec extends AnyFunSuite {
       assert(bits(oneAgg(df, VectorAgg.gramSum(col("v")))) == bits(fold(vs)(gramLanes)), k)
     }
   }
+
+  test("outerSum skips a row whose first or second vector is null") {
+    val data = rows(200, 37)
+    val withNulls = data.zipWithIndex.map { case ((g, v, w), i) =>
+      (g, if (i % 7 == 3) None else Some(v), if (i % 5 == 1) None else Some(second(v, w))) }
+    val df = withNulls.toDF("g", "u", "v").repartition(1).localCheckpoint(true)
+    val uv = withNulls.collect { case (_, Some(u), Some(v)) => outerLanes(u, v) }
+    eachKnob { k =>
+      assert(bits(oneAgg(df, VectorAgg.outerSum(col("u"), col("v")))) ==
+        bits(fold(uv)(identity)), k)
+    }
+  }
+
+  test("rsvdSparse σ on the solver_rsvd_sparse fixture keeps its raw bits") {
+    // σ of the benchmark's rank-8 fixture as the sketch Grams gave it
+    // before gramSum became outerSum with u = v (local[4], 4 partitions)
+    val sv = graft.operators.SolverOps.rsvdSparse(
+      graft.queries.SolverQueries.rsvdSparseFixture(spark), 5,
+      colDomain = Some(spark.range(8).select(col("id"))), knownNnz = 200000L)
+    assert(bits(sv) == RsvdSigmaBits, sv)
+  }
+
+  private val RsvdSigmaBits = Seq(4651382222282490869L, 4651381993366231923L,
+    4651381924950510430L, 4651381404451459482L, 4651381366808333979L)
 }
