@@ -21,31 +21,28 @@ import org.apache.spark.sql.functions._
   * only ever comes from a correct run.
   */
 object ScaleProbe {
+  // SPARK_GRAFT_MASTER=local-cluster[2,16,4096] runs the probe with REAL
+  // separate executor JVMs + Netty shuffle (VERDICT r10 item 5 — the
+  // multi-JVM evidence for the "rounds are latency-bound" claims);
+  // executors are fresh JVMs, so they need the graft classes on their
+  // own classpath
+  private def probeMaster = sys.env.getOrElse("SPARK_GRAFT_MASTER", "")
+
+  /** The probe's session: [[GraftSession.forMain]] (the confs Bench and
+    * Verify run under) at `SPARK_GRAFT_MASTER`, with the executor
+    * classpath (the sbt build's classes under the working directory by
+    * default) and memory a `local-cluster` master needs. */
+  def session(): SparkSession = GraftSession.forMain("graft-scaleprobe", probeMaster,
+    if (!probeMaster.startsWith("local-cluster")) Nil else Seq(
+      "spark.executor.extraClassPath" ->
+        sys.env.getOrElse("SPARK_GRAFT_EXEC_CP",
+          new java.io.File("target/scala-2.13/classes").getAbsolutePath),
+      "spark.executor.memory" -> sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "4g")))
+
   def main(args: Array[String]): Unit = {
     val mode = args.headOption.getOrElse("lap")
     val n = if (args.length > 1) args(1).toLong else 50000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_MASTER=local-cluster[2,16,4096] runs the probe with REAL
-    // separate executor JVMs + Netty shuffle (VERDICT r10 item 5 — the
-    // multi-JVM evidence for the "rounds are latency-bound" claims);
-    // executors are fresh JVMs, so they need the graft classes on their
-    // own classpath
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (master.startsWith("local-cluster")) {
-      builder.config("spark.executor.extraClassPath",
-        sys.env.getOrElse("SPARK_GRAFT_EXEC_CP", "/root/repo/target/scala-2.13/classes"))
-      builder.config("spark.executor.memory",
-        sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "4g"))
-    }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session()
     // exchange evidence (VERDICT r9 item 5): count shuffle-map stages and
     // total shuffle-write volume for the WHOLE probe, so each SCALE.md row
     // carries measured exchange counts next to its wall-clock
@@ -827,8 +824,8 @@ object ScaleProbe {
         val bare = SparkSession.builder()
           // same master as the kernel session (incl. local-cluster) so the
           // row/kernel comparison shares executors and serialization
-          .master(master)
-          .config("spark.sql.shuffle.partitions", cpus)
+          .master(spark.sparkContext.master)
+          .config("spark.sql.shuffle.partitions", GraftSession.mainCores.toString)
           .config("spark.ui.enabled", "false")
           .getOrCreate()
         val (ckR, secR) = bestOf3(bare)

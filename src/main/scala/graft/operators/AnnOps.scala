@@ -297,25 +297,23 @@ object AnnOps {
     // twice): `graph` is typically an unmaterialized kNN-graph BUILD (an
     // n² join + per-src window), and every beam round's expand join
     // re-executed that whole DAG — 6 rounds = 6 graph builds. The build
-    // itself materializes INSIDE a loop-knob scope sized by the point
-    // count (probed: at session width with codegen+AQE the one-shot
+    // itself materializes INSIDE a stepped LoopPolicy scope sized by the
+    // point count (probed: at session width with codegen+AQE the one-shot
     // n=500 build costs ~1 s of janino+wave latency, more than the six
     // interpreted re-runs it replaces — fixture-size builds want the
-    // same narrow interpreted regime as the loop; at real scale the knob
-    // gives full width anyway).
-    val edges = graft.GraftSession.withLoopKnobs(points.sparkSession, n) {
+    // same narrow interpreted regime as the loop; at real scale the
+    // policy gives full width anyway).
+    val edges = graft.LoopPolicy.scope(points.sparkSession, Some(n), stepped = true) { _ =>
       graph.select(col("src").as("node"), col("dst")).localCheckpoint(true)
     }
     val e = edges.count()
-    // loop knobs (r14, guide §2): the beam loop ran `rounds` join+TopK
-    // stages at session width with AQE replanning — width/AQE/codegen now
-    // track the data (the nnDescent convention; at real scale the width
-    // is the real one). Sized by max(points, edges) (ADVICE r14): the
+    // the beam loop's `rounds` join+TopK stages run in a LoopPolicy scope,
+    // as nnDescent's do. Sized by max(points, edges) (ADVICE r14): the
     // per-round shuffle carries the expanded frontier (~queries·beam·
     // degree rows ≤ edge count per hop) plus the visited set, which can
     // exceed the point count by the average degree. Result materialized
     // inside the scope.
-    graft.GraftSession.withLoopKnobs(points.sparkSession, math.max(n, e)) {
+    graft.LoopPolicy.scope(points.sparkSession, Some(math.max(n, e)), stepped = true) { _ =>
     val q = pts.where(col("id") < nQueries)
       .select(col("id").as("qid"), col("vec").as("qv")).localCheckpoint(true)
     def score(cand: DataFrame): DataFrame =

@@ -63,7 +63,7 @@ object ClusterOps {
     */
   def kmeansParallelInit(vectors: DataFrame, k: Int, rounds: Int = 3,
       oversample: Int = 4, seed: Long = 13): Array[Array[Double]] =
-    graft.GraftSession.withLoopKnobs(vectors.sparkSession, vectors.count()) {
+    graft.LoopPolicy.scope(vectors.sparkSession, Some(vectors.count()), stepped = true) { _ =>
     var centers = vectors.orderBy(col("id")).limit(1)
       .select(col("vec")).collect().map(_.getSeq[Double](0).toArray)
     for (r <- 0 until rounds) {
@@ -99,10 +99,10 @@ object ClusterOps {
     * [[kmeansParallelInit]]) for quality-seeded clustering. */
   def kmeans(vectors: DataFrame, k: Int, iters: Int,
       init: Option[Array[Array[Double]]] = None): (DataFrame, Array[Array[Double]]) =
-    // loop knobs per training call: one count against iters× full scans;
-    // the returned assignment projection is narrow (no shuffle), so lazy
-    // execution outside the scope is fine
-    graft.GraftSession.withLoopKnobs(vectors.sparkSession, vectors.count()) {
+    // one LoopPolicy scope per training call: one count against iters×
+    // full scans; the returned assignment projection is narrow (no
+    // shuffle), so lazy execution outside the scope is fine
+    graft.LoopPolicy.scope(vectors.sparkSession, Some(vectors.count()), stepped = true) { _ =>
     var centroids = init.getOrElse(vectors.where(col("id") < k).orderBy(col("id"))
       .select(col("vec")).collect().map(_.getSeq[Double](0).toArray))
     for (_ <- 0 until iters) {
@@ -133,7 +133,7 @@ object ClusterOps {
   def kmeansMiniBatch(vectors: DataFrame, k: Int, iters: Int,
       fraction: Double, seed: Long = 29,
       init: Option[Array[Array[Double]]] = None): Array[Array[Double]] =
-    graft.GraftSession.withLoopKnobs(vectors.sparkSession, vectors.count()) {
+    graft.LoopPolicy.scope(vectors.sparkSession, Some(vectors.count()), stepped = true) { _ =>
     var centroids = init.getOrElse(vectors.where(col("id") < k).orderBy(col("id"))
       .select(col("vec")).collect().map(_.getSeq[Double](0).toArray))
     val counts = new Array[Double](k)
@@ -186,7 +186,7 @@ object ClusterOps {
   private def fusedLloyd(vectors: DataFrame,
       specs: Array[(Int, Int, Array[Array[Double]])],
       iters: Int): Array[Array[Array[Double]]] =
-    graft.GraftSession.withLoopKnobs(vectors.sparkSession, vectors.count()) {
+    graft.LoopPolicy.scope(vectors.sparkSession, Some(vectors.count()), stepped = true) { _ =>
     val books = specs.map(_._3.map(_.clone()))
     for (_ <- 0 until iters) {
       val entries = explode(array(specs.indices.map { t =>

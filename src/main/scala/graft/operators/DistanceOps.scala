@@ -206,7 +206,7 @@ object DistanceOps {
   def nnDescent(vectors: DataFrame, k: Int, rounds: Int, seed: Long = 7): DataFrame = {
     import graft.operators.TextOps.h32
     val n = vectors.count()
-    graft.GraftSession.withLoopKnobs(vectors.sparkSession, n) {
+    graft.LoopPolicy.scope(vectors.sparkSession, Some(n), stepped = true) { _ =>
     def attach(cand: DataFrame): DataFrame =
       cand.join(vectors.select(col("id").as("src"), col("vec").as("va")), Seq("src"))
         .join(vectors.select(col("id").as("dst"), col("vec").as("vb")), Seq("dst"))
@@ -280,13 +280,12 @@ object DistanceOps {
 
   /** Core/border/noise + components over an arbitrary half-open
     * (a < b) within-eps pair table (exact or candidate-generated).
-    * The staged aggregates/joins run under the loop knobs: shuffle width
-    * tracks the point count (fixture-size runs must not schedule
+    * The staged aggregates/joins run in a [[graft.LoopPolicy]] scope
+    * sized by the point count (fixture-size runs must not schedule
     * full-width waves per stage; at scale the width is the real one). */
   def dbscanFromPairs(points: DataFrame, pairs: DataFrame,
       minPts: Int): DataFrame =
-    graft.GraftSession.withLoopKnobs(points.sparkSession,
-      points.count()) {
+    graft.LoopPolicy.scope(points.sparkSession, Some(points.count()), stepped = true) { _ =>
     val half = pairs.localCheckpoint(true)
     val sym = half.unionByName(half.select(col("b").as("a"), col("a").as("b")))
     val deg = sym.groupBy(col("a").as("id")).agg(count(lit(1)).as("deg"))
@@ -320,7 +319,7 @@ object DistanceOps {
     * values/ties as [[coreDistances]], which pays a second all-pairs
     * pass when called standalone). Returns (node, comp). */
   def mutualReachabilityLinkage(vectors: DataFrame, kCore: Int, k: Int): DataFrame = {
-    graft.GraftSession.withLoopKnobs(vectors.sparkSession, vectors.count()) {
+    graft.LoopPolicy.scope(vectors.sparkSession, Some(vectors.count()), stepped = true) { _ =>
     val a = vectors.select(col("id").as("src"), col("vec").as("va"))
     val b = vectors.select(col("id").as("dst"), col("vec").as("vb"))
     val pairs = a.join(b, col("src") < col("dst"))
@@ -336,8 +335,8 @@ object DistanceOps {
       .join(core.select(col("id").as("dst"), col("core").as("cb")), Seq("dst"))
       .select(col("src"), col("dst"),
         greatest(col("d"), col("ca"), col("cb")).as("value"))
-    // materialize inside the knob scope — the MST/cut stages must run at
-    // the loop width, not the restored session width
+    // materialize inside the LoopPolicy scope — the MST/cut stages must
+    // run at the loop width, not the restored session width
     SolverOps.singleLinkage(mrd, k).localCheckpoint(true)
     }
   }

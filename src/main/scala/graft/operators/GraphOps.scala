@@ -22,20 +22,18 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
-  /** Loop-knob scope for every iterative driver here (r14, guide §2):
-    * shuffle width tracks the materialized edge set instead of the session
-    * default (a 1000-edge fixture must not schedule 32-task waves per
-    * round; a billion-edge graph keeps full width), AQE's per-round
-    * replanning is dropped, and below the measured janino crossover the
-    * loop runs interpreted (GraftSession.withLoopKnobs). The body's result
-    * is materialized INSIDE the scope so the tail rounds that no
-    * checkpoint covered don't execute later at the restored width.
+  /** The [[graft.LoopPolicy]] scope of every iterative driver here,
+    * sized by the materialized edge set (a 1000-edge fixture must not
+    * schedule 32-task waves per round; a billion-edge graph keeps full
+    * width) and stepped, so a fixture-size loop runs interpreted. The
+    * body's result is materialized INSIDE the scope so the tail rounds that
+    * no checkpoint covered don't execute later at the restored width.
     * `sized` must already be checkpointed — its count is then one cheap
     * cached-partition pass, amortized over the loop's rounds. */
   private def withGraphLoop(sized: DataFrame, atLeast: Long = 0L)
       (body: => DataFrame): DataFrame =
-    graft.GraftSession.withLoopKnobs(sized.sparkSession,
-      math.max(atLeast, sized.count())) {
+    graft.LoopPolicy.scope(sized.sparkSession, Some(math.max(atLeast, sized.count())),
+        stepped = true) { _ =>
       body.localCheckpoint(true)
     }
 

@@ -375,31 +375,12 @@ object SolverOps {
     import graft.functions.{ArrayMatVec, VectorAgg}
     val spark = coo.sparkSession
     graft.Instrument.inc("eigsh.b", b)
-    // partition count tracks the per-row WORK, not just n: the loop's
-    // per-row work is lanes-wide array math (CGS folds + axpy buffers), so
-    // the width sizes by CELLS (rows × basis width m+b) at 25k cells per
-    // task, capped at cluster parallelism. rows/25000 undersized the
-    // compute-bound step 8× at n=1e5 (probed: 4 partitions ≈ 650 ms/step,
-    // 25-32 partitions ≈ 300-430 ms/step; 1 partition 2.3× worse, so this
-    // is CPU row work, not scheduling); tiny fixtures still run
-    // single-task jobs, where the driver loop is job-latency bound.
-    val parts = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong, n * (m + b) / 25000L)).toInt
-    // Loop knobs, session-global while the solve runs (see withConfs).
-    // Shuffle width tracks n: at the default width every small exchange
-    // schedules a full-width task wave. AQE off: it re-plans every exchange
-    // stage by stage, pure per-step planning latency at an already-chosen
-    // width (measured ~30% of wall time on the n=30 fixture). Interpreted
-    // execution up to n = 2e6: every step's plan embeds fresh lane counts
-    // and coefficient literals, so no generated class is ever reused and
-    // the janino compile dominates until the per-row lane math amortizes it.
-    val codegenKnobs = if (n <= 2000000L) Seq(
-      "spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN") else Seq.empty
-    graft.GraftSession.withConfs(spark, (Seq(
-      "spark.sql.shuffle.partitions" -> parts.toString,
-      "spark.sql.adaptive.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1") ++ codegenKnobs): _*) {
+    // The loop's width sizes by cells (rows × basis width m+b), and each
+    // step plans fresh lane counts and coefficient literals
+    // (graft.LoopPolicy). Its two equi-joins are merge-hinted: every step
+    // plans them as the zero-exchange merge joins the layout below is
+    // built for, whatever the size estimate of either side.
+    graft.LoopPolicy.scope(spark, Some(n), lanes = m + b, stepped = true) { parts =>
       // hash-distribute the edge table on the join key ONCE and record the
       // sort order in the checkpoint: LogicalRDD carries outputPartitioning/
       // outputOrdering, so every step's edges⋈qj join plans ZERO exchange
@@ -475,11 +456,11 @@ object SolverOps {
         // ---- measure the newest block [lanes-curB, lanes) ----
         val j0 = lanes - curB
         val qj = basis.select(col("i").as("col"), slice(col("qs"), j0 + 1, curB).as("x"))
-        val w0 = edges.join(qj, Seq("col")).groupBy(col("row").as("i"))
+        val w0 = edges.join(qj.hint("merge"), Seq("col")).groupBy(col("row").as("i"))
           .agg(VectorAgg.axpySum(col("x"), col("value")).as("w"))
         // lazy checkpoint: materialized by this step's action, then read
         // by the next basis update as a one-level lineage leaf
-        val df = basis.join(w0, Seq("i"), "left")
+        val df = basis.join(w0.hint("merge"), Seq("i"), "left")
           .select(col("i"), col("qs"),
             coalesce(col("w"), typedLit(Seq.fill(curB)(0.0))).as("w"))
           .localCheckpoint(false)
@@ -816,15 +797,11 @@ object SolverOps {
     val useExec = execPhases ||
       (autoTier && nTKernel > 100000L && nTKernel <= 10000000L)
     val useKeyedPhases = keyedPhases || (autoTier && nTKernel > 10000000L)
-    // Exchange width tracks the kernel (post-aggregate rows are n·T, never
-    // n²) and AQE's per-job replanning is pure latency in a multi-job solve
-    // whose shapes are fixed. The n² generator scan keeps its full input
-    // parallelism — only shuffle/exchange width shrinks. Restored on exit.
-    val lapParts = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong, nTKernel / 25000L)).toInt
-    graft.GraftSession.withConfs(spark,
-      "spark.sql.shuffle.partitions" -> lapParts.toString,
-      "spark.sql.adaptive.enabled" -> "false") {
+    // The solve is a multi-job chain of fixed shapes (graft.LoopPolicy),
+    // sized by the kernel (post-aggregate rows are n·T, never n²); the n²
+    // generator scan keeps its full input parallelism, only the exchange
+    // width shrinks.
+    graft.LoopPolicy.scope(spark, Some(nTKernel), stepped = false) { _ =>
     val costM = 1000000L
     // costExpr: any integer-valued expression over (i, j) — a stored
     // (i, j, cost) table drops in the same way. Default = the hash fixture.
@@ -1196,7 +1173,7 @@ object SolverOps {
     val total = (0 until n).map(i => costOf(i)(assigned(i)).toLong).sum
     val nAssigned = assigned.distinct.length.toLong
     spark.createDataFrame(Seq((nAssigned, total))).toDF("n_assigned", "total_cost")
-    } // withConfs (width/AQE knobs)
+    } // LoopPolicy.scope
   }
 
   /** Distributed ε-CS certificate that CONSUMES the keyed auction state
@@ -1347,12 +1324,9 @@ object SolverOps {
       spark.range(0, n, 1, math.max(1, n / 10000))
         .select(col("id").as("i")).localCheckpoint(true)))
     // the rounds are micro-jobs over checkpointed inputs with explicit
-    // broadcasts — AQE's per-shuffle re-plan materialization only adds
-    // stage latency here (measured ~1.3 s/round with, ~0.6 s without at
-    // n=1e4); restore the caller's setting on exit
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    // broadcasts, run inside lapAuctionDistributed's LoopPolicy scope (AQE
+    // off: its per-shuffle re-plan measured ~1.3 s/round against ~0.6 s
+    // without at n=1e4)
     var unassigned = n.toLong
     var round = 0
     // every per-round side table is O(n) single-column rows — broadcast
@@ -1396,7 +1370,6 @@ object SolverOps {
       unpersistCheckpoint(allI)
     }
     (state, unassigned, round)
-    } finally spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
   }
 
   /** Two-pass randomized SVD of a sparse COO matrix — reference:
@@ -1419,21 +1392,16 @@ object SolverOps {
     import breeze.linalg.DenseMatrix
     import graft.functions.VectorAgg
     val l = k + p
-    // loop-knob-lite (r14): the 4 spmm passes + 2 Gram aggregates are a
-    // fixed-shape chain whose exchanges carry ≤ nnz rows, so the width
-    // tracks the edge count. Codegen stays on: the chain runs once per
-    // call, so each generated class compiles once, not per step (the
-    // VectorAgg aggregates themselves are TypedImperativeAggregates, which
-    // Spark runs interpreted under either setting).
-    // knownNnz ≥ 0 skips the sizing count() (VERDICT r14 item 10 —
-    // callers with a dimension-known fixture thread it; the width knob
-    // only needs the order of magnitude, but an exact count is free when
-    // the caller has one).
-    val nnzParts = math.max(1L, math.min(
-      coo.sparkSession.sparkContext.defaultParallelism.toLong,
-      (if (knownNnz >= 0L) knownNnz else coo.count()) / 25000L)).toInt
-    graft.GraftSession.withCoreScope(coo.sparkSession, nnzParts) {
-    val edges = SparseOps.rowSorted(coo, nnzParts)
+    // The 4 spmm passes + 2 Gram aggregates are a fixed-shape chain run
+    // once per call, whose exchanges carry ≤ nnz rows (graft.LoopPolicy;
+    // not stepped, so codegen stays as the caller has it: each generated
+    // class compiles once per call). knownNnz ≥ 0 skips the sizing count()
+    // (VERDICT r14 item 10 — callers with a dimension-known fixture thread
+    // it; the width only needs the order of magnitude, but an exact count
+    // is free when the caller has one).
+    val nnz = if (knownNnz >= 0L) knownNnz else coo.count()
+    graft.LoopPolicy.scope(coo.sparkSession, Some(nnz), stepped = false) { parts =>
+    val edges = SparseOps.rowSorted(coo, parts)
     // Ω materialized per distinct column (l hash-gaussians per COLUMN, not
     // per nnz) → Y = AΩ is a plain spmm join. Draws use the xxhash64-based
     // fast gaussian: Ω is never oracle-compared, only its distribution
@@ -1483,7 +1451,7 @@ object SolverOps {
     val t = w.t * sMat * w
     breeze.linalg.eigSym((t + t.t) / 2.0).eigenvalues.toArray.sorted.reverse
       .take(k).map(e => math.sqrt(math.max(e, 0.0))).toSeq
-    } // withCoreScope
+    } // LoopPolicy.scope
   }
 
   /** Single-linkage hierarchical clustering: build the MST, cut the k−1
@@ -1686,12 +1654,12 @@ object SolverOps {
     val und = e0.select(col("a").as("u"), col("b").as("v"))
       .unionByName(e0.select(col("b").as("u"), col("a").as("v")))
       .localCheckpoint(true)
-    // loop knobs (r14, guide §2): width/AQE/codegen track the edge set —
-    // the per-iteration join+aggregates were scheduling 32-task waves with
-    // AQE replanning for a fixture-sized state table. LAZY checkpoints:
+    // a LoopPolicy scope sized by the edge set: at session width the
+    // per-iteration join+aggregates schedule full task waves with AQE
+    // replanning for a fixture-sized state table. LAZY checkpoints:
     // each is materialized by the dot-product aggregate that consumes it
     // (the eigshSharded trick), saving 3 dedicated jobs per iteration.
-    graft.GraftSession.withLoopKnobs(spark, math.max(n, und.count())) {
+    graft.LoopPolicy.scope(spark, Some(math.max(n, und.count())), stepped = true) { _ =>
     val deg = und.groupBy(col("u").as("i")).agg(count(lit(1)).as("dg"))
     val bv = (pmod(TextOps.h32(concat_ws(":", col("i"), lit("cg"))),
       lit(1000L)).cast("double") / 1000.0).as("bv")

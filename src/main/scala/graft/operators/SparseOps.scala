@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{GraftSession, Tables}
+import graft.Tables
 import graft.functions.ArrayMath
 
 /** Sparse ops over the canonical COO table `(row, col, value)` — the
@@ -296,15 +296,13 @@ object SparseOps {
     * once as-is (its count sizes the [[spmmA]] dispatch), and each output
     * row folds its own nonzeros in order, the CSR form of the reference.
     * The result is a lazy checkpoint: its plan is fixed under the core's
-    * confs ([[GraftSession.withCoreScope]]), so it runs the same whenever
+    * confs (an unsized [[graft.LoopPolicy]] scope), so it runs the same whenever
     * the caller consumes it, and the caller's confs are never changed.
     * Nothing is exploded before the aggregate: the checkpoint holds one
     * d-vector per row, exploded to (row, pos, v) scalars on the way out.
     */
   def spmm(coo: DataFrame, b: DataFrame): DataFrame = {
-    val spark = coo.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    GraftSession.withCoreScope(spark, parts) {
+    graft.LoopPolicy.scope(coo.sparkSession, None, stepped = false) { parts =>
       val x = b.select(col("id"), col("vec").as("v")).localCheckpoint(true)
       val sized = x.agg(count(lit(1)), coalesce(max(size(col("v"))), lit(0))).head()
       spmmA(rowSorted(coo, parts), x, sized.getLong(0), sized.getInt(1))
@@ -331,7 +329,7 @@ object SparseOps {
     * checkpoint carries that partitioning and ordering, so neither form of
     * the core exchanges or sorts the edge table again, and the fold order
     * of every output row is fixed. Call inside
-    * [[GraftSession.withCoreScope]]. */
+    * a [[graft.LoopPolicy]] scope. */
   private[graft] def rowSorted(coo: DataFrame, parts: Int): DataFrame =
     coo.select(col("row"), col("col"), col("value"))
       .repartition(parts, col("row")).sortWithinPartitions("row", "col", "value")
@@ -353,7 +351,7 @@ object SparseOps {
     *    a hash aggregate on the row with one exchange of partials. The
     *    join is hinted, because Catalyst sizes an array column as one
     *    element and would broadcast a wide X it thinks is small.
-    * Call inside [[GraftSession.withCoreScope]]. */
+    * Call inside a [[graft.LoopPolicy]] scope. */
   private[graft] def spmmA(edges: DataFrame, x: DataFrame, xRows: Long, width: Int): DataFrame = {
     val xs = x.select(col("id").as("col"), col("v").as("x"))
     val small = xRows * width * 8L <= SpmmBroadcastBytes
@@ -369,7 +367,7 @@ object SparseOps {
     * row like the edges, so the merge-hinted join plans with no exchange
     * and no sort on either side; a partial aggregate on the column (few
     * keys per task) and one small exchange of d-vector partials follow.
-    * Call inside [[GraftSession.withCoreScope]]. */
+    * Call inside a [[graft.LoopPolicy]] scope. */
   private[graft] def spmmAt(edges: DataFrame, x: DataFrame): DataFrame =
     edges.join(x.select(col("id").as("row"), col("v").as("x")).hint("merge"), Seq("row"))
       .groupBy(col("col").as("id"))

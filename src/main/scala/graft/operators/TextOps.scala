@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.{GraftSession, Tables}
+import graft.Tables
 
 /** Text/IR scoring over the `documents` table: tokenize → term-doc COO →
   * TF-IDF / BM25 re-weighting, plus the training-data-pipeline text ops
@@ -194,9 +194,9 @@ object TextOps {
     * A term-keyed enumerator (never a doc×doc cross join) emits
     * p = u_a·u_b per shared term, and a per-pair sum keeps sim ≥ tau.
     * The unit table u is checkpointed once, hash-partitioned on doc_id at
-    * the session's shuffle width, with AQE off
-    * ([[GraftSession.withCoreScope]]: with AQE on, the checkpoint drops
-    * its partitioning).
+    * the session's shuffle width, with AQE off (an unsized
+    * [[graft.LoopPolicy]] scope: with AQE on, the checkpoint drops its
+    * partitioning).
     *
     * Brute enumerates the full vectors and sums each pair where it is
     * enumerated, as All-Pairs does (Bayardo, Ma & Srikant, WWW 2007): it
@@ -232,9 +232,8 @@ object TextOps {
   private[graft] def cosineJoinBounded(docs: DataFrame, tau: Double,
       evalPred: Option[Column], path: CosinePath, broadcastRows: Long): DataFrame = {
     val spark = docs.sparkSession
-    val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val form = evalPred.fold(SelfJoin)(p => crossJoin(docs.where(p).select(col("doc_id"))))
-    val u = GraftSession.withCoreScope(spark, parts) {
+    val u = graft.LoopPolicy.scope(spark, None, stepped = false) { parts =>
       tfidfUnit(docs).repartition(parts, col("doc_id")).localCheckpoint(true)
     }
     // Σ_t nA(t)·nB(t): the volume of an enumerator over t

@@ -35,7 +35,7 @@ class ArrayMatVecSpec extends AnyFunSuite {
       (id.toLong, Array.fill(l)(lane()), Array.fill(rows * l)(lane()), Array.fill(rows)(lane()))
     }
     val df = data.toDF("id", "x", "m", "y").repartition(3).localCheckpoint(true)
-    knobs.foreach { case (k, confs) => GraftSession.withConfs(spark, confs: _*) {
+    knobs.foreach { case (k, confs) => withConfs(spark, confs: _*) {
       val got = df.select(col("id"), ArrayMatVec.matVec(col("x"), col("m")),
           ArrayMatVec.residual(col("y"), col("x"), col("m")))
         .collect().map(row => row.getLong(0) -> (row.getSeq[Double](1), row.getSeq[Double](2)))
@@ -56,7 +56,7 @@ class ArrayMatVecSpec extends AnyFunSuite {
         (Some(Seq(1.0, null)), Seq(1.0, 2.0), Seq(0.0)),           // a null lane
         (None, Seq(1.0, 2.0), Seq(0.0)))                            // a null vector
       .toDF("x", "m", "y").repartition(2).localCheckpoint(true)
-    knobs.foreach { case (k, confs) => GraftSession.withConfs(spark, confs: _*) {
+    knobs.foreach { case (k, confs) => withConfs(spark, confs: _*) {
       val got = df.select(ArrayMatVec.matVec(col("x"), col("m")),
         ArrayMatVec.residual(col("y"), col("x"), col("m"))).collect()
         .map(r => (Option(r.getSeq[Double](0)).map(_.toList), Option(r.getSeq[Double](1))))
@@ -69,7 +69,7 @@ class ArrayMatVecSpec extends AnyFunSuite {
   test("an empty x with an empty M gives the empty array") {
     val df = Seq((Seq.empty[Double], Seq.empty[Double])).toDF("x", "m")
       .repartition(1).localCheckpoint(true)
-    knobs.foreach { case (k, confs) => GraftSession.withConfs(spark, confs: _*) {
+    knobs.foreach { case (k, confs) => withConfs(spark, confs: _*) {
       assert(df.select(ArrayMatVec.matVec(col("x"), col("m"))).head().getSeq[Double](0).isEmpty, k)
     }}
   }

@@ -16,6 +16,14 @@ object TestSpark {
     .getOrCreate()
   val sf: String = "/root/testdata/sf0.001"
 
+  /** Sets `confs` on `s` for `body` and restores them after it, also when
+    * it throws: how a spec runs one case under several conf sets. */
+  def withConfs[T](s: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> s.conf.get(k) }
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body finally prev.foreach { case (k, v) => s.conf.set(k, v) }
+  }
+
   /** Local mirror of TextOps.h32 (first 8 md5 hex chars as a long) for
     * golden-value fixtures that must replay the counter-hash off-Spark. */
   def md5h32(s: String): Long = {
@@ -97,23 +105,6 @@ class EntrySpec extends AnyFunSuite {
       assert(math.abs(a - b) <= 1e-9 * math.max(1.0, math.abs(b)),
         s"$a vs $b")
     }
-  }
-
-  test("withLoopKnobs restores session confs, including on failure") {
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
-    graft.GraftSession.withLoopKnobs(spark, 10L) {
-      assert(spark.conf.get("spark.sql.shuffle.partitions") == "1")
-      assert(spark.conf.get("spark.sql.codegen.wholeStage") == "false")
-    }
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == before)
-    assert(spark.conf.get("spark.sql.codegen.wholeStage") != "false")
-    intercept[RuntimeException] {
-      graft.GraftSession.withLoopKnobs(spark, 10L) {
-        throw new RuntimeException("boom")
-      }
-    }
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == before,
-      "confs must restore when the body throws")
   }
 
   test("every query key has distinct non-null schema and runs on sf0.001") {

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{SolverOps, SparseOps, TextOps}
 
-/** Session confs: the correctness gate and the benchmark resolve the same
-  * SQL confs, and the sparse × dense, Lanczos and cosine cores leave their
-  * caller's confs as they found them. */
+/** Session confs: the correctness gate, the benchmark and the scale probes
+  * resolve the same SQL confs, and the sparse × dense, Lanczos and cosine
+  * cores leave their caller's confs as they found them. */
 class SessionConfsSpec extends AnyFunSuite {
   import TestSpark._
 
@@ -38,6 +38,9 @@ class SessionConfsSpec extends AnyFunSuite {
     val verify = resolved(Verify.session())
     val bench = resolved(Bench.session())
     assert(verify == bench)
+    // the scale probes too (their local-cluster executor settings are not
+    // SQL confs)
+    assert(resolved(ScaleProbe.session()) == verify)
     val cores = sys.env.get("SPARK_GRAFT_CPUS").getOrElse(
       Runtime.getRuntime.availableProcessors.toString)
     assert(verify.get("spark.sql.shuffle.partitions").contains(cores))

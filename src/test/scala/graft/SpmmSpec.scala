@@ -75,10 +75,17 @@ class SpmmSpec extends AnyFunSuite {
     }
   }
 
+  /** `body` in the core's scope (the unsized LoopPolicy scope of
+    * `SparseOps.spmm`) at a session width of `parts`. */
+  private def inCore[T](s: SparkSession, parts: Int)(body: => T): T =
+    withConfs(s, "spark.sql.shuffle.partitions" -> parts.toString) {
+      LoopPolicy.scope(s, None, stepped = false) { w => assert(w == parts); body }
+    }
+
   /** (A·X, Aᵀ·X) through the core on `parts` partitions. */
   private def both(s: SparkSession, es: Seq[Edge], xCols: Map[Long, Array[Double]],
       xRows: Map[Long, Array[Double]], parts: Int) =
-    GraftSession.withCoreScope(s, parts) {
+    inCore(s, parts) {
       val a = SparseOps.rowSorted(cooDf(s, es), parts)
       (collectV(SparseOps.spmmA(a, xDf(s, xCols), xCols.size, Width)),
         collectV(SparseOps.spmmAt(a, xDf(s, xRows))))
@@ -153,11 +160,12 @@ class SpmmSpec extends AnyFunSuite {
       val legs = Seq(atBound, atBound + 1).map { claimed =>
         Instrument.withExclusive {
           val before = Instrument.snapshot()
-          GraftSession.withCoreScope(s, 3) {
+          inCore(s, 3) {
             val a = SparseOps.rowSorted(cooDf(s, es), 3)
             val out = SparseOps.spmmA(a, xDf(s, xc), claimed, Width)
             val plan = out.queryExecution.executedPlan.toString
-            (Instrument.since(before), plan.contains("BroadcastExchange"), collectV(out))
+            (Instrument.since(before).filter(_._1.startsWith("spmm.")),
+              plan.contains("BroadcastExchange"), collectV(out))
           }
         }
       }

@@ -21,7 +21,7 @@ class VectorAggSpec extends AnyFunSuite {
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN"))
 
   private def eachKnob(body: String => Unit): Unit = knobs.foreach { case (name, confs) =>
-    GraftSession.withConfs(spark, confs: _*)(body(name)) }
+    withConfs(spark, confs: _*)(body(name)) }
 
   /** Rows spread over seven decades, so the sum depends on the order the
     * rows are added in; a few lanes are -0.0. Key 3 holds one row whose
