@@ -58,33 +58,28 @@ object ScaleProbe {
     val t0 = System.nanoTime()
     val result: String = mode match {
       case "lap" =>
-        // planted dual certificate (same construction as
-        // solver_lap_planted_big): the noise only needs s ≥ 1 off the
-        // permutation — the closed-form Σu+Σv oracle never replays it —
-        // so it draws from the ~20× cheaper xxhash64 counter hash (at
-        // n=5e4 the n² passes evaluate 5e9 noise draws; the md5 form was
-        // the >40-min wall recorded in round 5's SCALE.md)
-        val u = pmod(col("i") * 13, lit(500L))
-        val v = pmod(col("j") * 7, lit(300L))
-        val noise = pmod(xxhash64(col("i"), col("j"), lit("lapPB")), lit(1000000L)) + 1
-        val c = when(col("j") === pmod(col("i") * 2001L, lit(n)), u + v)
-          .otherwise(u + v + noise)
-        require(BigInt(2001).gcd(BigInt(n)) == 1, s"2001 must be coprime to $n")
-        // optional 3rd arg = topT (kernel width); 0 = the lapTopTAuto
-        // dispatch (VERDICT r11 item 8 — the kernel build is now the
-        // dominant LAP term, so T is a measured knob like eigsh's b)
-        val topT = if (args.length > 2) args(2).toInt else 0
+        // planted dual certificate (SolverQueries.lapPlantedCost, the
+        // solver_lap_planted_big fixture at n: the closed-form Σu + Σv
+        // optimum). Optional 3rd arg = kernel width T (0 = the measured
+        // SolverOps.LapKernelT), 4th = the tier (driver | exec | keyed;
+        // default SolverOps.lapTier's pick). The kernel build is the
+        // dominant LAP term, so T is a measured knob like eigsh's b.
+        import graft.operators.SolverOps
+        import SolverOps.LapTier
+        val topT = if (args.length > 2 && args(2).toInt > 0) args(2).toInt else SolverOps.LapKernelT
+        val tier = args.lift(3).map(name => Seq(LapTier.Driver, LapTier.Exec, LapTier.Keyed)
+          .find(_.name == name).getOrElse(sys.error(s"unknown LAP tier $name (driver | exec | keyed)")))
         graft.Instrument.reset()
-        val row = graft.operators.SolverOps.lapAuctionDistributed(
-          spark, n.toInt, topT = topT, priceJoinThreshold = 0,
-          costExpr = Some(c)).head()
+        val row = SolverOps.lapAuctionDistributed(spark, n.toInt, topT = topT,
+          costExpr = Some(graft.queries.SolverQueries.lapPlantedCost(n)), tier = tier).head()
         val expect = (0L until n).map(i => (i * 13) % 500).sum +
           (0L until n).map(j => (j * 7) % 300).sum
         require(row.getLong(0) == n && row.getLong(1) == expect,
           s"LAP wrong: got (${row.getLong(0)}, ${row.getLong(1)}), want ($n, $expect)")
         val snap = graft.Instrument.snapshot()
-        val tEff = if (topT > 0) topT else graft.operators.SolverOps.lapTopTAuto(n.toInt)
-        s""""mode":"lap","n":$n,"topT":$tEff,"ms_kernel":${snap.getOrElse("lap.ms_kernel", 0L)},"ms_certificate":${snap.getOrElse("lap.ms_certificate", 0L)},"suspect_rows":${snap.getOrElse("lap.certificate_suspect_rows", 0L)},"repair_iters":${snap.getOrElse("lap.repair_iters", 0L)},"total_cost":${row.getLong(1)}"""
+        val tierRun = tier.getOrElse(SolverOps.lapTier(n, topT)).name
+        def c(k: String) = snap.getOrElse(s"lap.$k", 0L)
+        s""""mode":"lap","n":$n,"topT":$topT,"tier":"$tierRun","ms_kernel":${c("ms_kernel")},"ms_auction":${c("ms_auction")},"ms_certificate":${c("ms_certificate")},"phases":${c("phases")},"keyed_rounds":${c("keyed_rounds")},"suspect_rows":${c("certificate_suspect_rows")},"repair_iters":${c("repair_iters")},"keyed_fallbacks":${c("keyed_fallbacks")},"total_cost":${row.getLong(1)}"""
       case "eigsh" =>
         val b = if (args.length > 2) args(2).toInt else 2
         val diag = spark.range(n).select(col("id").as("row"), col("id").as("col"),
@@ -430,72 +425,6 @@ object ScaleProbe {
           require(tb > 0.9 && tb < 1.0, s"lossy slice-8 score out of band: $tb")
           f""""mode":"trust","n":$n,"score":$tb,"batched_sec":$tBatched%.1f,"lossless_score":$tl,"lossless_sec":$tLossless%.1f"""
         }
-      case "lapexec" =>
-        // EXECUTOR-RESIDENT auction (VERDICT r12 item 5): the whole
-        // ε-schedule runs inside the task holding the kernel partition —
-        // one Spark job for all phases+rounds vs keyedPhases' per-round
-        // job bill. Same planted dual, so Σu+Σv verifies exactly; the
-        // keyed certificate still proves optimality independently.
-        val u = pmod(col("i") * 13, lit(500L))
-        val v = pmod(col("j") * 7, lit(300L))
-        val noise = pmod(xxhash64(col("i"), col("j"), lit("lapPB")), lit(1000000L)) + 1
-        val c = when(col("j") === pmod(col("i") * 2001L, lit(n)), u + v)
-          .otherwise(u + v + noise)
-        require(BigInt(2001).gcd(BigInt(n)) == 1, s"2001 must be coprime to $n")
-        graft.Instrument.reset()
-        val row = graft.operators.SolverOps.lapAuctionDistributed(
-          spark, n.toInt, priceJoinThreshold = 0, costExpr = Some(c),
-          execPhases = true).head()
-        val expect = (0L until n).map(i => (i * 13) % 500).sum +
-          (0L until n).map(j => (j * 7) % 300).sum
-        require(row.getLong(0) == n && row.getLong(1) == expect,
-          s"exec LAP wrong: got (${row.getLong(0)}, ${row.getLong(1)}), want ($n, $expect)")
-        val snap = graft.Instrument.snapshot()
-        require(snap.getOrElse("lap.keyed_fallbacks", 0L) == 0L,
-          s"exec solve fell back to the driver: $snap")
-        s""""mode":"lapexec","n":$n,"total_cost":${row.getLong(1)},"exec_phases":${snap.getOrElse("lap.exec_phases", 0L)},"ms_kernel":${snap.getOrElse("lap.ms_kernel", 0L)},"ms_exec_solve":${snap.getOrElse("lap.ms_exec_solve", 0L)},"ms_certificate":${snap.getOrElse("lap.ms_certificate", 0L)}"""
-      case "lapkeyedfull" =>
-        // END-TO-END keyed phases (round 10): every ε-scaling phase runs
-        // with DataFrame-resident state and the kernel is never collected
-        // — same planted dual certificate, so the closed-form Σu+Σv
-        // optimum still verifies exactly. The interesting number is the
-        // phase×round latency bill vs the keyedFinal row at the same n.
-        val u = pmod(col("i") * 13, lit(500L))
-        val v = pmod(col("j") * 7, lit(300L))
-        val noise = pmod(xxhash64(col("i"), col("j"), lit("lapPB")), lit(1000000L)) + 1
-        val c = when(col("j") === pmod(col("i") * 2001L, lit(n)), u + v)
-          .otherwise(u + v + noise)
-        require(BigInt(2001).gcd(BigInt(n)) == 1, s"2001 must be coprime to $n")
-        graft.Instrument.reset()
-        val row = graft.operators.SolverOps.lapAuctionDistributed(
-          spark, n.toInt, priceJoinThreshold = 0, costExpr = Some(c),
-          keyedPhases = true).head()
-        val expect = (0L until n).map(i => (i * 13) % 500).sum +
-          (0L until n).map(j => (j * 7) % 300).sum
-        require(row.getLong(0) == n && row.getLong(1) == expect,
-          s"keyedPhases LAP wrong: got (${row.getLong(0)}, ${row.getLong(1)}), want ($n, $expect)")
-        val snap = graft.Instrument.snapshot()
-        require(snap.getOrElse("lap.keyed_fallbacks", 0L) == 0L,
-          s"keyedPhases fell back to the driver: $snap")
-        s""""mode":"lapkeyedfull","n":$n,"total_cost":${row.getLong(1)},"keyed_phases":${snap.getOrElse("lap.keyed_phases", 0L)},"keyed_rounds":${snap.getOrElse("lap.keyed_rounds", 0L)}"""
-      case "lapkeyed" =>
-        // distributed-state (DataFrame prices/assignments) final auction
-        // phase at n: same planted dual certificate as the `lap` mode, so
-        // the closed-form Σu+Σv optimum verifies the keyed path exactly
-        val u = pmod(col("i") * 13, lit(500L))
-        val v = pmod(col("j") * 7, lit(300L))
-        val noise = pmod(xxhash64(col("i"), col("j"), lit("lapPB")), lit(1000000L)) + 1
-        val c = when(col("j") === pmod(col("i") * 2001L, lit(n)), u + v)
-          .otherwise(u + v + noise)
-        require(BigInt(2001).gcd(BigInt(n)) == 1, s"2001 must be coprime to $n")
-        val row = graft.operators.SolverOps.lapAuctionDistributed(
-          spark, n.toInt, priceJoinThreshold = 0, costExpr = Some(c),
-          keyedFinal = true).head()
-        val expect = (0L until n).map(i => (i * 13) % 500).sum +
-          (0L until n).map(j => (j * 7) % 300).sum
-        require(row.getLong(0) == n && row.getLong(1) == expect,
-          s"keyed LAP wrong: got (${row.getLong(0)}, ${row.getLong(1)}), want ($n, $expect)")
-        s""""mode":"lapkeyed","n":$n,"total_cost":${row.getLong(1)}"""
       case "stream" =>
         // sustained MemoryStream throughput for the stateful streaming
         // operators at a FIXED state budget (VERDICT r8 stretch): n events
@@ -891,7 +820,7 @@ object ScaleProbe {
         require(c2 <= c4 && c4 <= c8 && h2 <= h4 && h4 <= h8,
           s"band refinement monotonicity broken: cand $c2/$c4/$c8 hit $h2/$h4/$h8")
         f""""mode":"phash","n":$nDocs,"planted":$planted,"cand_b2":$c2,"recall_b2":${h2.toDouble / planted}%.3f,"sec_b2":$t2%.1f,"cand_b4":$c4,"recall_b4":${h4.toDouble / planted}%.3f,"sec_b4":$t4%.1f,"cand_b8":$c8,"recall_b8":${h8.toDouble / planted}%.3f,"sec_b8":$t8%.1f"""
-      case other => sys.error(s"unknown mode $other (lap | eigsh | ballcover | graphann | graphopt | lpa | hyperball | silhouette | lanefold | allpairszipf | xcoszipf | lshdedup | zorder | stream | trust | lapkeyed | cg | colranks | colkernel | phash)")
+      case other => sys.error(s"unknown mode $other (lap | eigsh | ballcover | graphann | graphopt | lpa | hyperball | silhouette | lanefold | allpairszipf | xcoszipf | lshdedup | zorder | stream | trust | cg | colranks | colkernel | phash)")
     }
     val dt = (System.nanoTime() - t0) / 1e9
     // drain the listener bus before snapshotting the shuffle counters — a

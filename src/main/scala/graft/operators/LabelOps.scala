@@ -57,8 +57,10 @@ object LabelOps {
     val nnz = sym.count()
     // size dispatch (the reference's kAuto heuristic, select_k-inl.cuh:38):
     // below ~1e6 edges the per-round job overhead dominates — union-find on
-    // the driver gives identical labels (comp = min node id in component)
+    // the driver gives identical labels (comp = min node id in component).
+    // Counts its branch as `cc.tier.local|distributed`.
     if (nnz <= localThreshold) {
+      graft.Instrument.inc("cc.tier.local")
       val spark = edges.sparkSession
       val arr = sym.select(col("src").cast("long"), col("dst").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -79,6 +81,7 @@ object LabelOps {
       val rows = parent.keys.toSeq.sorted.map(n => (n, find(n)))
       return spark.createDataFrame(rows).toDF("node", "comp")
     }
+    graft.Instrument.inc("cc.tier.distributed")
     var labels = sym.select(col("src").as("node")).distinct()
       .withColumn("comp", col("node")).localCheckpoint(true)
     var changed = 1L

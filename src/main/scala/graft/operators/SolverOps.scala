@@ -18,7 +18,7 @@ object SolverOps {
 
   /** Free the blocks behind an (eagerly) localCheckpoint'd DataFrame.
     * Round-loop state tables otherwise accumulate one cached RDD per
-    * round for the life of the query (ADVICE r9, lapKeyedPhase). Only
+    * round for the life of the query (ADVICE r9, lapKeyedPhaseDf). Only
     * safe once every consumer is done with it — in the round loops that
     * means after the SUCCESSOR checkpoint has materialized, because the
     * new LogicalRDD carries no lineage into the old blocks. */
@@ -727,76 +727,128 @@ object SolverOps {
       .toDF("n_assigned", "total_units")
   }
 
-  /** Kernel-width dispatch for [[lapAuctionDistributed]] (the same
-    * floor-measured protocol as [[eigshBlockAuto]]; VERDICT r11 item 8).
-    * The trade: the n² kernel BUILD (`lap.ms_kernel`) is nearly
-    * T-insensitive (the n² generator scan dominates; the bounded heap is
-    * O(T) per partial), but a kernel too THIN starves the auction — its
-    * ε-CS fixed point misses optimal columns, so every phase burns the
-    * full `maxRepair` column-generation re-auctions. Probe floors
-    * (ScaleProbe `lap`, fresh-JVM 2-rep minima, planted-dual fixture;
-    * SCALE.md `laptopt` rows): n=1e4 T=8/16/32/64 →
-    * 19.0/14.4/13.7/14.6 s (T=8: 8 repair iters; others 0); n=2e4
-    * T=8/16/32 → 94.4/19.9/20.7 s (T=8 again 8 repairs — catastrophic,
-    * 4.7× the T=16 floor). T=16 and T=32 tie at 1e4 and T=16 edges at
-    * 2e4 (kernel shuffle volume T·n doubles for no repair win: 7 vs
-    * 13 MB), so the dispatch stays flat at 16 — the knob's value was
-    * proving 8 is a cliff and 32+ buys nothing, not moving the default. */
-  def lapTopTAuto(n: Int): Int = 16
+  /** Kernel width T of [[lapAuctionDistributed]]: each row keeps its T
+    * cheapest columns (plus the diagonal). The n² kernel BUILD
+    * (`lap.ms_kernel`) is nearly T-insensitive (the n² generator scan
+    * dominates; the bounded heap is O(T) per partial), but a kernel too
+    * THIN starves the auction — its ε-CS fixed point misses optimal
+    * columns, so every phase burns the full `maxRepair` column-generation
+    * re-auctions. Probe floors (ScaleProbe `lap n T`, fresh-JVM 2-rep
+    * minima, planted-dual fixture; SCALE.md `laptopt` rows): n=1e4
+    * T=8/16/32/64 → 19.0/14.4/13.7/14.6 s (T=8: 8 repair iters; others 0);
+    * n=2e4 T=8/16/32 → 94.4/19.9/20.7 s (T=8 again 8 repairs — 4.7× the
+    * T=16 floor). T=16 and T=32 tie at 1e4 and T=16 edges at 2e4 (kernel
+    * shuffle volume T·n doubles for no repair win: 7 vs 13 MB): 8 is a
+    * cliff and 32+ buys nothing. */
+  val LapKernelT = 16
+
+  /** Where [[lapAuctionDistributed]] keeps the auction state; `name` is
+    * the `lap.tier.*` counter suffix. Same certified total in every tier. */
+  sealed abstract class LapTier(val name: String)
+  object LapTier {
+    /** Gauss-Seidel on the driver over the collected kernel. */
+    case object Driver extends LapTier("driver")
+    /** The whole ε-schedule inside the one task holding the kernel. */
+    case object Exec extends LapTier("exec")
+    /** Every ε-phase as keyed DataFrame rounds; no node holds the kernel. */
+    case object Keyed extends LapTier("keyed")
+  }
+
+  /** The tier of an n-row solve at kernel width T, by kernel rows n·(T+1)
+    * (the only state any tier materializes):
+    *   ≤ 1e5  → Driver: a collect of ≤ 1e5 rows is cheap and a bid costs
+    *            ns (at n=2000, n·(T+1)=3.4e4, the driver solve beat the
+    *            exec tier's fixed ~4-job latency by ~2×);
+    *   ≤ 1e7  → Exec: one job instead of phases×rounds of them, while the
+    *            kernel fits one executor partition;
+    *   beyond → Keyed. */
+  def lapTier(n: Long, topT: Int): LapTier = {
+    val kernelRows = n * (topT + 1)
+    if (kernelRows <= 100000L) LapTier.Driver
+    else if (kernelRows <= 10000000L) LapTier.Exec
+    else LapTier.Keyed
+  }
+
+  /** The ε-scaling schedule every tier runs: coarse phases from a quarter
+    * of the cost range (costs < 1e6) down by 5× while above the final
+    * ε = 1/(n+1), then the final phase at it. Integer costs and ε < 1/n
+    * make an assignment in ε-CS over the full matrix exactly optimal. */
+  private def lapEpsSchedule(n: Int): Seq[Double] = {
+    val epsF = 1.0 / (n + 1)
+    Iterator.iterate(1000000L / 4.0)(_ / 5.0).takeWhile(_ > epsF).toList :+ epsF
+  }
+
+  private type LapCandidates = Array[scala.collection.mutable.ArrayBuffer[(Int, Double)]]
+
+  /** Each row's kernel columns (j, c), from (i, j, c) kernel rows. */
+  private def lapCandidates(n: Int, kernel: Iterator[org.apache.spark.sql.Row]): LapCandidates = {
+    val cand = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[(Int, Double)])
+    kernel.foreach(r => cand(r.getLong(0).toInt) += ((r.getLong(1).toInt, r.getDouble(2))))
+    cand
+  }
+
+  /** The Gauss-Seidel auction over the kernel (maximize Σ −c): one pass per
+    * ε of `schedule`, each from an empty assignment, raising `prices` in
+    * place so every pass starts warm. Returns row → column. The driver
+    * tier and its repair passes run it on the driver, the exec tier inside
+    * its one task. */
+  private def lapAuction(cand: LapCandidates, prices: Array[Double],
+      schedule: Seq[Double]): Array[Int] = {
+    val n = cand.length
+    var assigned = Array.emptyIntArray
+    schedule.foreach { eps =>
+      assigned = Array.fill(n)(-1)
+      val owner = Array.fill(n)(-1)
+      val queue = scala.collection.mutable.Queue(0 until n: _*)
+      while (queue.nonEmpty) {
+        val i = queue.dequeue()
+        if (assigned(i) < 0) {
+          var bestJ = -1; var w1 = Double.NegativeInfinity; var w2 = Double.NegativeInfinity
+          cand(i).foreach { case (j, c) =>
+            val v = -c - prices(j)
+            if (v > w1) { w2 = w1; w1 = v; bestJ = j } else if (v > w2) w2 = v
+          }
+          // the kernel's diagonal gives every row a candidate; a
+          // kernel-construction regression must surface as a clear error,
+          // not an opaque AIOOBE (ADVICE r13)
+          require(bestJ >= 0, s"auction: row $i has no kernel candidate")
+          val bid = if (w2 == Double.NegativeInfinity) eps else w1 - w2 + eps
+          prices(bestJ) += bid
+          val prev = owner(bestJ)
+          if (prev >= 0) { assigned(prev) = -1; queue.enqueue(prev) }
+          owner(bestJ) = i; assigned(i) = bestJ
+        }
+      }
+    }
+    assigned
+  }
 
   /** Distributed LAP: kernelized auction with a distributed optimality
     * certificate — the scale-out form of the reference's device auction/
     * Hungarian (solver/linear_assignment.cuh:60). The n×n cost matrix is
     * only ever touched by distributed passes:
     *   1. kernel pass — per-row top-T cheapest columns (select_k shape:
-    *      generator + per-row WindowGroupLimit heap, one shuffle on i);
-    *   2. the ε-scaling auction runs driver-side on the O(n·T) kernel
-    *      (state = n prices + n assignments, both tiny);
-    *   3. certificate pass — per-row best profit max_j(−c_ij − p_j) over the
-    *      FULL matrix (one distributed aggregate). Rows violating ε-CS get
-    *      their best column added to the kernel and the auction re-runs
-    *      warm-started (column-generation style); typically 0-2 repairs.
+    *      generator + per-row bounded heap, one shuffle on i);
+    *   2. the ε-scaling auction over the O(n·T) kernel, with its state in
+    *      the tier [[lapTier]] picks (`tier` overrides it for tests and
+    *      probes): the driver, one executor task, or keyed DataFrames;
+    *   3. certificate — per-row best profit max_j(−c_ij − p_j) over the
+    *      FULL matrix, bounded from the kernel so only suspect rows pay an
+    *      exact re-scan. Rows violating ε-CS get their best column added
+    *      to the kernel and the auction re-runs warm-started on the driver
+    *      (column-generation style); typically 0-2 repairs.
     * Costs are integers (hash mod 1e6) and ε < 1/n, so ε-CS over the full
-    * matrix certifies the assignment total is EXACTLY the optimum.
-    * Cost matrix here is expression-generated for the fixture; a stored
-    * (i, j, cost) table drops in unchanged. Certificate prices: small n
-    * ships them as a literal array (no shuffle); past `priceJoinThreshold`
-    * a typedLit of n doubles is an expression-tree bomb, so the pass
-    * becomes a broadcast join against a (j, price) DataFrame — same size
-    * dispatch pattern as the MST/eigsh local paths.
-    *
-    * Three state tiers (the MST/eigsh-style size dispatch, COVERAGE.md
-    * crossover note): default = driver Gauss-Seidel over the collected
-    * O(n·T) kernel (fastest below ~1e4 — per-bid cost is ns, not a Spark
-    * round-trip); `keyedFinal` = final ε-phase + certificate with
-    * DataFrame state (no price array on the driver); `keyedPhases` =
-    * EVERY phase keyed, the kernel never collected — the form for n where
-    * even n·T rows shouldn't visit one node.
+    * matrix certifies the assignment total is EXACTLY the optimum, in
+    * every tier. Cost matrix here is expression-generated for the fixture;
+    * a stored (i, j, cost) table drops in unchanged. Counts its tier as
+    * `lap.tier.driver|exec|keyed`.
     */
-  def lapAuctionDistributed(spark: SparkSession, n: Int, topT: Int = 0,
-      maxRepair: Int = 8, priceJoinThreshold: Int = 10000,
-      costExpr: Option[org.apache.spark.sql.Column] = None,
-      keyedFinal: Boolean = false, keyedPhases: Boolean = false,
-      execPhases: Boolean = false): DataFrame = {
-    val kernelT = if (topT > 0) topT else lapTopTAuto(n)
-    // AUTO TIER DISPATCH (VERDICT r13 item 5 — promote the exec-resident
-    // tier into production): when the caller forces no tier, pick by the
-    // kernel size n·(T+1) (the only state any tier materializes):
-    //   ≤ 1e5  → driver Gauss-Seidel (collect of ≤1e5 rows is cheap and the
-    //            per-bid cost is ns; measured at n=2000/nT=3.4e4 the driver
-    //            tier's whole solve beats the exec tier's fixed ~4-job
-    //            latency by ~2×);
-    //   ≤ 1e7  → exec-resident: the ENTIRE ε-schedule in ONE task that
-    //            holds the coalesced kernel partition — no driver state,
-    //            one job instead of phases×rounds of them;
-    //   beyond → keyedPhases (kernel never sits on one node).
-    // Exactness never depends on the tier: the ε-CS certificate proves the
-    // total optimal over the full matrix either way.
-    val nTKernel = n.toLong * (kernelT + 1)
-    val autoTier = !keyedFinal && !keyedPhases && !execPhases
-    val useExec = execPhases ||
-      (autoTier && nTKernel > 100000L && nTKernel <= 10000000L)
-    val useKeyedPhases = keyedPhases || (autoTier && nTKernel > 10000000L)
+  def lapAuctionDistributed(spark: SparkSession, n: Int, topT: Int = LapKernelT,
+      maxRepair: Int = 8, costExpr: Option[Column] = None,
+      tier: Option[LapTier] = None): DataFrame = {
+    val lapT = tier.getOrElse(lapTier(n, topT))
+    graft.Instrument.inc(s"lap.tier.${lapT.name}")
+    val nTKernel = n.toLong * (topT + 1)
     // The solve is a multi-job chain of fixed shapes (graft.LoopPolicy),
     // sized by the kernel (post-aggregate rows are n·T, never n²); the n²
     // generator scan keeps its full input parallelism, only the exchange
@@ -826,7 +878,7 @@ object SolverOps {
     // where the generator produces the rows, and the diagonal is generated
     // directly (n rows) instead of filtered out of n².
     val topk = fullCosts.groupBy(col("i"))
-      .agg(graft.functions.TopKAgg.topKMin(col("c"), col("j"), kernelT).as("top"))
+      .agg(graft.functions.TopKAgg.topKMin(col("c"), col("j"), topT).as("top"))
       .select(col("i"), explode(graft.functions.TopKAgg.decodeTopK(col("top"))).as("e"))
       .select(col("i"), col("e.j").as("j"), col("e.c").as("c"))
     val diagRows = spark.range(n)
@@ -836,240 +888,54 @@ object SolverOps {
     val kernelDf = topk.unionByName(diagRows)
       .dropDuplicates("i", "j").localCheckpoint(true) // eager: times the n² kernel scan
     graft.Instrument.inc("lap.ms_kernel", (System.nanoTime() - tKern0) / 1000000L)
-    // LAZY: the keyedPhases path never touches this — the kernel is only
-    // collected when a driver auction pass actually runs (driver coarse
-    // phases, or the instrumented fallback)
-    lazy val cand = {
-      val c = Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[(Int, Double)])
-      kernelDf.collect().foreach(r =>
-        c(r.getLong(0).toInt) += ((r.getLong(1).toInt, r.getDouble(2))))
-      c
-    }
+    val schedule = lapEpsSchedule(n)
+    val epsF = schedule.last
+    graft.Instrument.inc("lap.phases", schedule.length.toLong)
+    // LAZY: the exec and keyed tiers never collect the kernel unless their
+    // state fails the certificate and the driver repair loop takes over
+    lazy val cand = lapCandidates(n, kernelDf.collect().iterator)
     val prices = new Array[Double](n)
-    val epsF = 1.0 / (n + 1)
-    // Gauss-Seidel auction over the kernel (maximize Σ −c), prices persist
-    def auctionPass(eps: Double): Array[Int] = {
-      val assigned = Array.fill(n)(-1)
-      val owner = Array.fill(n)(-1)
-      val queue = scala.collection.mutable.Queue(0 until n: _*)
-      while (queue.nonEmpty) {
-        val i = queue.dequeue()
-        if (assigned(i) < 0) {
-          var bestJ = -1; var w1 = Double.NegativeInfinity; var w2 = Double.NegativeInfinity
-          cand(i).foreach { case (j, c) =>
-            val v = -c - prices(j)
-            if (v > w1) { w2 = w1; w1 = v; bestJ = j } else if (v > w2) w2 = v
-          }
-          val bid = if (w2 == Double.NegativeInfinity) eps else w1 - w2 + eps
-          prices(bestJ) += bid
-          val prev = owner(bestJ)
-          if (prev >= 0) { assigned(prev) = -1; queue.enqueue(prev) }
-          owner(bestJ) = i; assigned(i) = bestJ
-        }
-      }
-      assigned
+    var assigned = Array.emptyIntArray
+    val tAuction0 = System.nanoTime()
+    val state: Option[(DataFrame, Long)] = lapT match {
+      case LapTier.Driver => assigned = lapAuction(cand, prices, schedule); None
+      case LapTier.Exec => Some((lapExecState(spark, kernelDf, n, schedule), 0L))
+      case LapTier.Keyed => Some(lapKeyedState(spark, kernelDf, n, schedule))
     }
-    // ε-scaling: coarse phases refine prices, final phase at ε < 1/n.
-    // With keyedFinal the LAST phase runs with DISTRIBUTED state
-    // ([[lapKeyedPhase]]): prices and assignments live in keyed
-    // DataFrames, bids are a per-column max_by, price updates a keyed
-    // join — the driver holds only round counters. This is the
-    // cluster-scale form of the reference's device-resident auction state
-    // (solver/detail/lap_functions.cuh); the warm ε-scaled prices make
-    // the keyed phase converge in a handful of rounds.
-    var eps = costM / 4.0
-    var assigned: Array[Int] = null
-    // Final ε-phase AND certificate run against DataFrame-resident state:
-    // prices/assignments never come back to the driver (VERDICT r9 item
-    // 3 — the previous form collected O(n) prices just to hand them to
-    // the certificate). The certificate consumes the keyed state table
-    // directly; the driver sees round counters and a violation COUNT.
-    // Only the pathological branch (round cap tripped, or ε-CS violations
-    // at the keyed fixed point) pulls state back once and finishes with
-    // the driver repair loop — instrumented so the bench artifact shows
-    // whether a run ever took it. Returns Some(summary) iff certified.
-    def keyedFinish(state: DataFrame, unassignedK: Long): Option[DataFrame] = {
-      val certified: Option[DataFrame] =
-        if (unassignedK == 0L)
-          lapCertifyKeyed(spark, fullCosts, cCol, state, kernelDf, epsF, n)
+    graft.Instrument.inc("lap.ms_auction", (System.nanoTime() - tAuction0) / 1000000L)
+    // The exec and keyed tiers certify against their state table, so
+    // prices/assignments never come back to the driver (VERDICT r9 item 3);
+    // the driver sees a violation COUNT. Only the pathological branch
+    // (round cap tripped, or ε-CS violations at the state's fixed point)
+    // pulls state back once and finishes with the driver repair loop —
+    // instrumented so the bench artifact shows whether a run ever took it.
+    val stateSummary = state.flatMap { case (st, unassigned) =>
+      val out =
+        if (unassigned == 0L) lapCertifyKeyed(spark, fullCosts, cCol, st, kernelDf, epsF, n)
         else None
-      certified match {
-        case Some(summary) =>
-          unpersistCheckpoint(state)
-          unpersistCheckpoint(kernelDf)
-          Some(summary)
-        case None =>
-          graft.Instrument.inc("lap.keyed_fallbacks")
-          val rows = state.collect()
-          unpersistCheckpoint(state)
-          val aOut = Array.fill(n)(-1)
-          rows.foreach { r =>
-            val j = r.getLong(0).toInt
-            prices(j) = r.getDouble(1)
-            val i = r.getLong(2)
-            if (i >= 0) aOut(i.toInt) = j
-          }
-          // safety: if the round cap tripped, finish the stragglers driver-side
-          assigned = if (aOut.contains(-1)) auctionPass(epsF) else aOut
-          None
-      }
-    }
-    if (useExec) {
-      // EXECUTOR-RESIDENT auction (VERDICT r12 item 5): the keyed-phase
-      // tier's honest deployment cost was a per-ROUND Spark-job latency
-      // constant that no cluster size shrinks (×2.8 multi-JVM). The fix is
-      // the block-Lanczos lever — fewer, fatter round-trips — taken to its
-      // fixed point: the ENTIRE ε-scaling schedule (every phase, every
-      // Gauss-Seidel round) runs inside the ONE task that holds the
-      // coalesced O(n·T) kernel partition. One Spark job replaces
-      // phases×rounds of them; the kernel is never collected, no price
-      // array exists on the driver, and the sub-quadratic keyed
-      // certificate consumes the state table exactly as in keyedPhases.
-      // Tier dispatch: driver Gauss-Seidel below ~1e4 (kernel collect is
-      // cheap, per-bid cost ns); THIS tier while n·T kernel rows fit one
-      // executor partition (~1e7 rows); keyedPhases beyond. The auction
-      // loop is the same algorithm as auctionPass, and exactness never
-      // depends on that: the certificate proves ε-CS over the FULL matrix,
-      // so any certified total is exactly optimal (planted-dual probes
-      // re-verify, ScaleProbe `lapexec`).
-      val nLoc = n
-      val eps0 = costM / 4.0
-      val epsFLoc = epsF
-      val tExec0 = System.nanoTime()
-      val stateRdd = kernelDf.coalesce(1).rdd.mapPartitions { it =>
-        val candL = Array.fill(nLoc)(
-          scala.collection.mutable.ArrayBuffer.empty[(Int, Double)])
-        it.foreach(r =>
-          candL(r.getLong(0).toInt) += ((r.getLong(1).toInt, r.getDouble(2))))
-        val pricesL = new Array[Double](nLoc)
-        def pass(eps: Double): Array[Int] = {
-          val assignedL = Array.fill(nLoc)(-1)
-          val ownerL = Array.fill(nLoc)(-1)
-          val queue = scala.collection.mutable.Queue(0 until nLoc: _*)
-          while (queue.nonEmpty) {
-            val i = queue.dequeue()
-            if (assignedL(i) < 0) {
-              var bestJ = -1
-              var w1 = Double.NegativeInfinity
-              var w2 = Double.NegativeInfinity
-              candL(i).foreach { case (j, c) =>
-                val v = -c - pricesL(j)
-                if (v > w1) { w2 = w1; w1 = v; bestJ = j } else if (v > w2) w2 = v
-              }
-              // the diagRows union guarantees every row a candidate; a
-              // kernel-construction regression must surface as a clear
-              // error, not an opaque AIOOBE in the task (ADVICE r13)
-              require(bestJ >= 0, s"exec auction: row $i has no kernel candidate")
-              val bid = if (w2 == Double.NegativeInfinity) eps else w1 - w2 + eps
-              pricesL(bestJ) += bid
-              val prev = ownerL(bestJ)
-              if (prev >= 0) { assignedL(prev) = -1; queue.enqueue(prev) }
-              ownerL(bestJ) = i
-              assignedL(i) = bestJ
-            }
-          }
-          assignedL
+      if (out.isEmpty) {
+        graft.Instrument.inc("lap.keyed_fallbacks")
+        val aOut = Array.fill(n)(-1)
+        st.collect().foreach { r =>
+          val j = r.getLong(0).toInt
+          prices(j) = r.getDouble(1)
+          if (r.getLong(2) >= 0) aOut(r.getLong(2).toInt) = j
         }
-        var epsL = eps0
-        while (epsL > epsFLoc) { pass(epsL); epsL /= 5.0 }
-        val assignedL = pass(epsFLoc)
-        val ownerOut = Array.fill(nLoc)(-1L)
-        var i = 0
-        while (i < nLoc) { ownerOut(assignedL(i)) = i.toLong; i += 1 }
-        Iterator.tabulate(nLoc)(j =>
-          org.apache.spark.sql.Row(j.toLong, pricesL(j), ownerOut(j)))
+        // if the round cap tripped, finish the stragglers driver-side
+        assigned = if (aOut.contains(-1)) lapAuction(cand, prices, Seq(epsF)) else aOut
       }
-      val stSchema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("j",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("p",
-          org.apache.spark.sql.types.DoubleType, nullable = false),
-        org.apache.spark.sql.types.StructField("i",
-          org.apache.spark.sql.types.LongType, nullable = false)))
-      val state = spark.createDataFrame(stateRdd, stSchema).localCheckpoint(true)
-      // phase count is a pure function of the ε schedule — record it
-      // driver-side (the closure runs on an executor; counters there
-      // wouldn't survive a real cluster)
-      val execPhaseCount = {
-        var e = eps0; var k = 0
-        while (e > epsFLoc) { e /= 5.0; k += 1 }
-        k + 1
-      }
-      graft.Instrument.inc("lap.exec_phases", execPhaseCount.toLong)
-      graft.Instrument.inc("lap.ms_exec_solve", (System.nanoTime() - tExec0) / 1000000L)
-      keyedFinish(state, 0L) match {
-        case Some(summary) => return summary
-        case None => ()
-      }
-    } else if (useKeyedPhases) {
-      // END-TO-END distributed state (VERDICT r9 item 6, first option):
-      // every ε-scaling phase runs keyed, phase k+1's warm prices are a
-      // PROJECTION of phase k's state table — the kernel is never
-      // collected, no price array exists, and the certificate consumes
-      // the final state. A coarse phase that trips its round cap is fine:
-      // its (monotone) prices are still a valid warm start, only the
-      // FINAL phase must fully assign. The cost is phase×round scheduler
-      // latency, which is why the driver Gauss-Seidel remains the small-n
-      // dispatch (see COVERAGE.md crossover note).
-      // phase-local kernel + row set materialized ONCE for ALL ε-phases
-      // (ADVICE r10: the per-phase localCheckpoint re-copied the whole
-      // kernel ~9× per solve at exactly the n this mode targets)
-      val prep = (
-        (if (n <= 10000) kernelDf.coalesce(1) else kernelDf)
-          .localCheckpoint(true),
-        spark.range(0, n, 1, math.max(1, n / 10000))
-          .select(col("id").as("i")).localCheckpoint(true))
-      var phasePrices = spark.range(n).select(col("id").as("j"), lit(0.0).as("p"))
-      var prevState: DataFrame = null
-      var phases = 0
-      while (eps > epsF) {
-        val (st, _, rounds) =
-          lapKeyedPhaseDf(spark, kernelDf, phasePrices, eps, n, prepared = Some(prep))
-        graft.Instrument.inc("lap.keyed_rounds", rounds.toLong)
-        if (prevState != null) unpersistCheckpoint(prevState)
-        prevState = st
-        phasePrices = st.select(col("j"), col("p"))
-        phases += 1
-        eps /= 5.0
-      }
-      graft.Instrument.inc("lap.keyed_phases", phases.toLong)
-      val (state, unassignedK, rounds) =
-        lapKeyedPhaseDf(spark, kernelDf, phasePrices, epsF, n, prepared = Some(prep))
-      graft.Instrument.inc("lap.keyed_rounds", rounds.toLong)
-      if (prevState != null) unpersistCheckpoint(prevState)
-      unpersistCheckpoint(prep._1)
-      unpersistCheckpoint(prep._2)
-      keyedFinish(state, unassignedK) match {
-        case Some(summary) => return summary
-        case None => ()
-      }
-    } else {
-      var coarse = 0
-      val tCoarse0 = System.nanoTime()
-      while (eps > epsF) { assigned = auctionPass(eps); eps /= 5.0; coarse += 1 }
-      graft.Instrument.inc("lap.ms_coarse", (System.nanoTime() - tCoarse0) / 1000000L)
-      graft.Instrument.inc("lap.coarse_phases", coarse.toLong)
-      if (keyedFinal) {
-        val tKeyed0 = System.nanoTime()
-        val (state, unassignedK, rounds) =
-          lapKeyedPhase(spark, kernelDf, prices.clone(), epsF, n)
-        graft.Instrument.inc("lap.ms_keyed_phase", (System.nanoTime() - tKeyed0) / 1000000L)
-        graft.Instrument.inc("lap.keyed_rounds", rounds.toLong)
-        keyedFinish(state, unassignedK) match {
-          case Some(summary) => return summary
-          case None => ()
-        }
-      } else assigned = auctionPass(epsF)
+      unpersistCheckpoint(st)
+      out
     }
-    // 2.-3. certificate / repair loop. Key cost control (VERDICT r8
+    val summary = stateSummary.getOrElse {
+    // 2.-3. driver certificate / repair loop. Key cost control (VERDICT r8
     // item 2): auction prices are MONOTONE NON-DECREASING, so a row's
     // full-matrix best profit max_j(−c_ij − p_j) can only FALL between
     // passes — the first scan's per-row best is a standing upper bound.
     // After each repair the ε-CS check runs driver-side against that
     // bound (O(n), no job); only rows whose BOUND violates re-scan, and
-    // the re-scan generates |violators|·n entries, not n². Typical runs
-    // therefore pay exactly ONE n² certificate scan; pathological ones
-    // pay the full scan once plus thin row-slices.
+    // the re-scan generates |violators|·n entries, not n². Prices join
+    // the scan as a broadcast (j, p) table, as in [[lapCertifyKeyed]].
     def bestProfit(rowSubset: Option[Seq[Int]]) = {
       // falsifiable cost model (VERDICT r9 item 1): record whether this
       // pass is the one full n² scan or a thin violator re-scan, and how
@@ -1089,21 +955,11 @@ object SolverOps {
             .select(col("i"), col("j"), cCol.as("c"))
         case None => fullCosts
       }
-      val scored =
-        if (n > priceJoinThreshold) {
-          val pricesDf = spark.createDataFrame(
-            prices.toSeq.zipWithIndex.map { case (p, j) => (j.toLong, p) })
-            .toDF("j", "p")
-          costs.join(broadcast(pricesDf), Seq("j"))
-            .select(col("i"),
-              struct((-col("c") - col("p")).as("v"), col("j"), col("c")).as("s"))
-        } else {
-          val pLit = typedLit(prices.toSeq)
-          costs.select(col("i"), struct(
-            (-col("c") - element_at(pLit, col("j").cast("int") + 1)).as("v"),
-            col("j"), col("c")).as("s"))
-        }
-      scored.groupBy(col("i")).agg(max(col("s")).as("m"))
+      val pricesDf = spark.createDataFrame(
+        prices.toSeq.zipWithIndex.map { case (p, j) => (j.toLong, p) }).toDF("j", "p")
+      costs.join(broadcast(pricesDf), Seq("j"))
+        .select(col("i"), struct((-col("c") - col("p")).as("v"), col("j"), col("c")).as("s"))
+        .groupBy(col("i")).agg(max(col("s")).as("m"))
         .select(col("i"), col("m.v").as("v"), col("m.j").as("j"), col("m.c").as("c"))
         .collect()
     }
@@ -1161,19 +1017,79 @@ object SolverOps {
           }
         }
         if (violations == 0) certified = true
-        else { graft.Instrument.inc("lap.repair_iters"); assigned = auctionPass(epsF) }
+        else { graft.Instrument.inc("lap.repair_iters"); assigned = lapAuction(cand, prices, Seq(epsF)) }
       }
       it += 1
     }
-    // cand is realized by now (capLocal forced it), but keep the unpersist
-    // AFTER the last cand use so the lifetime never depends on the repair
-    // loop having run (ADVICE r10)
     val costOf = cand.map(_.toMap)
-    unpersistCheckpoint(kernelDf)
     val total = (0 until n).map(i => costOf(i)(assigned(i)).toLong).sum
     val nAssigned = assigned.distinct.length.toLong
     spark.createDataFrame(Seq((nAssigned, total))).toDF("n_assigned", "total_cost")
+    } // stateSummary.getOrElse
+    // after the last `cand` use, so the kernel's lifetime never depends on
+    // which branch ran (ADVICE r10)
+    unpersistCheckpoint(kernelDf)
+    summary
     } // LoopPolicy.scope
+  }
+
+  /** The exec tier's auction (VERDICT r12 item 5): the keyed tier's
+    * deployment cost is a per-ROUND Spark-job latency that no cluster size
+    * shrinks (×2.8 multi-JVM). This takes the block-Lanczos lever — fewer,
+    * fatter round-trips — to its fixed point: the ENTIRE ε-schedule (every
+    * phase, every Gauss-Seidel round) runs inside the ONE task that holds
+    * the coalesced O(n·T) kernel, so one Spark job replaces phases×rounds
+    * of them, the kernel is never collected and no price array exists on
+    * the driver. Returns the (j, p, owner i) state table
+    * [[lapCertifyKeyed]] consumes. */
+  private def lapExecState(spark: SparkSession, kernelDf: DataFrame, n: Int,
+      schedule: Seq[Double]): DataFrame = {
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+    val stateRdd = kernelDf.coalesce(1).rdd.mapPartitions { rows =>
+      val prices = new Array[Double](n)
+      val assigned = SolverOps.lapAuction(SolverOps.lapCandidates(n, rows), prices, schedule)
+      val owner = Array.fill(n)(-1L)
+      var i = 0
+      while (i < n) { owner(assigned(i)) = i.toLong; i += 1 }
+      Iterator.tabulate(n)(j => org.apache.spark.sql.Row(j.toLong, prices(j), owner(j)))
+    }
+    spark.createDataFrame(stateRdd, StructType(Seq(
+      StructField("j", LongType, nullable = false),
+      StructField("p", DoubleType, nullable = false),
+      StructField("i", LongType, nullable = false)))).localCheckpoint(true)
+  }
+
+  /** The keyed tier's auction (VERDICT r9 item 6): every ε-phase runs as
+    * [[lapKeyedPhaseDf]] rounds and phase k+1's warm prices are a
+    * PROJECTION of phase k's state table — the kernel is never collected
+    * and no price array exists. A coarse phase that trips its round cap is
+    * fine: its (monotone) prices are still a valid warm start; only the
+    * final phase must fully assign. Returns (state (j, p, owner i or −1),
+    * #unassigned after the final phase). */
+  private def lapKeyedState(spark: SparkSession, kernelDf: DataFrame, n: Int,
+      schedule: Seq[Double]): (DataFrame, Long) = {
+    // the phase-local kernel and row set, materialized ONCE for all
+    // ε-phases (ADVICE r10). Rounds are latency-bound, not volume-bound:
+    // below ~1e4 kernel rows per-stage task overhead dominates, so the
+    // kernel collapses to one partition (a cluster-size n keeps its
+    // natural partitioning).
+    val kern = (if (n <= 10000) kernelDf.coalesce(1) else kernelDf).localCheckpoint(true)
+    val allI = spark.range(0, n, 1, math.max(1, n / 10000))
+      .select(col("id").as("i")).localCheckpoint(true)
+    var prices = spark.range(n).select(col("id").as("j"), lit(0.0).as("p"))
+    var state: DataFrame = null
+    var unassigned = 0L
+    schedule.foreach { eps =>
+      val (st, un, rounds) = lapKeyedPhaseDf(kern, allI, prices, eps, n)
+      graft.Instrument.inc("lap.keyed_rounds", rounds.toLong)
+      if (state != null) unpersistCheckpoint(state)
+      state = st
+      unassigned = un
+      prices = st.select(col("j"), col("p"))
+    }
+    unpersistCheckpoint(kern)
+    unpersistCheckpoint(allI)
+    (state, unassigned)
   }
 
   /** Distributed ε-CS certificate that CONSUMES the keyed auction state
@@ -1264,15 +1180,15 @@ object SolverOps {
   }
 
   /** One auction ε-phase with DISTRIBUTED state — the Jacobi (all-at-once)
-    * form of [[lapAuctionDistributed]]'s Gauss-Seidel driver loop, and the
-    * scale path for its last remaining driver-resident arrays (VERDICT r8
-    * item 6; reference keeps the same state device-side,
+    * form of [[lapAuction]]'s Gauss-Seidel loop, run by the keyed tier
+    * (VERDICT r8 item 6; reference keeps the same state device-side,
     * solver/detail/lap_functions.cuh). Per round, entirely as keyed
-    * DataFrame ops over the O(n·T) kernel:
+    * DataFrame ops over the O(n·T) kernel `kern`:
     *
-    *  - bids: unassigned rows (one anti-join) score every kernel column at
-    *    current prices; per-row best/second-best via the bounded-heap
-    *    TopKAgg (map-side partials, no window sort); bid = w1 − w2 + ε;
+    *  - bids: unassigned rows (one anti-join against the row set `allI`)
+    *    score every kernel column at current prices; per-row best/second-
+    *    best via the bounded-heap TopKAgg (map-side partials, no window
+    *    sort); bid = w1 − w2 + ε;
     *  - winners: per-column max_by(bid) — one keyed aggregate;
     *  - state update: ONE left join rewriting the column-keyed (j, price,
     *    owner) table — price += winning bid, owner := winner; eviction is
@@ -1281,29 +1197,13 @@ object SolverOps {
     *
     * The parallel-bid variant preserves ε-CS (a winner's post-increment
     * value is w2 − ε ≥ every alternative − ε, and other prices only rise),
-    * so the phase composes with the ε-scaling warm start and the full-
-    * matrix certificate exactly like the driver phase. The driver touches
-    * only round counters: the state TABLE is the return value, and the
-    * certificate consumes it directly ([[lapCertifyKeyed]]) — no price or
-    * assignment array ever reaches the driver (VERDICT r9 item 3).
-    * Returns (state (j, price, owner i or −1), #unassigned, rounds run);
-    * #unassigned > 0 means the safety round-cap tripped.
+    * so the phase composes with the ε-scaling warm start (`prices0Df`, a
+    * (j, p) table) and the full-matrix certificate exactly like the driver
+    * phase. Returns (state (j, price, owner i or −1), #unassigned, rounds
+    * run); #unassigned > 0 means the safety round-cap tripped.
     */
-  def lapKeyedPhase(spark: SparkSession, kernelDf: DataFrame,
-      prices0: Array[Double], eps: Double, n: Int,
-      maxRounds: Int = 300): (DataFrame, Long, Int) =
-    lapKeyedPhaseDf(spark, kernelDf,
-      spark.createDataFrame(prices0.toSeq.zipWithIndex.map { case (p, j) => (j.toLong, p) })
-        .toDF("j", "p"), eps, n, maxRounds)
-
-  /** [[lapKeyedPhase]] with the warm-start prices as a DATAFRAME — the
-    * form that chains ε-phases end-to-end without prices ever visiting
-    * the driver (keyedPhases mode: phase k+1's prices0Df is phase k's
-    * state projection). */
-  def lapKeyedPhaseDf(spark: SparkSession, kernelDf: DataFrame,
-      prices0Df: DataFrame, eps: Double, n: Int,
-      maxRounds: Int = 300,
-      prepared: Option[(DataFrame, DataFrame)] = None): (DataFrame, Long, Int) = {
+  private def lapKeyedPhaseDf(kern: DataFrame, allI: DataFrame,
+      prices0Df: DataFrame, eps: Double, n: Int): (DataFrame, Long, Int) = {
     import graft.functions.TopKAgg
     // ONE state table, keyed by column: (j, price, owning row or −1).
     // Column-keyed state makes eviction implicit — a re-won column simply
@@ -1312,17 +1212,6 @@ object SolverOps {
     // the already-materialized checkpoint for the termination test).
     var state = prices0Df.select(col("j"), col("p"), lit(-1L).as("i"))
       .localCheckpoint(true)
-    // rounds are latency-bound, not volume-bound: below ~1e4 kernel rows
-    // per-stage task overhead dominates, so collapse the kernel to one
-    // partition (a cluster-size n keeps its natural partitioning).
-    // `prepared` lets a multi-phase caller (keyedPhases) materialize the
-    // phase-local kernel + row set ONCE instead of re-copying the whole
-    // kernel per ε-phase (ADVICE r10) — the caller then owns the unpersist.
-    val (kern, allI) = prepared.getOrElse((
-      (if (n <= 10000) kernelDf.coalesce(1) else kernelDf)
-        .localCheckpoint(true),
-      spark.range(0, n, 1, math.max(1, n / 10000))
-        .select(col("id").as("i")).localCheckpoint(true)))
     // the rounds are micro-jobs over checkpointed inputs with explicit
     // broadcasts, run inside lapAuctionDistributed's LoopPolicy scope (AQE
     // off: its per-shuffle re-plan measured ~1.3 s/round against ~0.6 s
@@ -1336,7 +1225,7 @@ object SolverOps {
     // key, so those co-partition after the first round)
     val bcast: DataFrame => DataFrame =
       if (n <= 5000000) df => broadcast(df) else identity
-    while (unassigned > 0 && round < maxRounds) {
+    while (unassigned > 0 && round < 300) { // the safety round cap
       val unI = allI
         .join(bcast(state.where(col("i") >= 0).select(col("i"))), Seq("i"), "left_anti")
       val bids = kern.join(bcast(unI), Seq("i"))
@@ -1364,10 +1253,6 @@ object SolverOps {
       unpersistCheckpoint(prev)
       unassigned = n - state.where(col("i") >= 0).count()
       round += 1
-    }
-    if (prepared.isEmpty) {
-      unpersistCheckpoint(kern)
-      unpersistCheckpoint(allI)
     }
     (state, unassigned, round)
   }
@@ -1493,8 +1378,10 @@ object SolverOps {
     import spark.implicits._
     // size dispatch (kAuto heuristic): below ~1e6 edges the O(log n)
     // distributed rounds are pure job overhead — Kruskal on the driver with
-    // the same (value, src, dst) tie-break produces the same forest
+    // the same (value, src, dst) tie-break produces the same forest.
+    // Counts its branch as `mst.tier.local|distributed`.
     if (edges.count() <= localThreshold) {
+      graft.Instrument.inc("mst.tier.local")
       val arr = edges.select(col("src").cast("long"), col("dst").cast("long"),
           col("value").cast("double")).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -1516,6 +1403,7 @@ object SolverOps {
         (s, d, BigDecimal(v).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble) })
         .toDF("src", "dst", "value")
     }
+    graft.Instrument.inc("mst.tier.distributed")
     var comp = edges.select(col("src").as("node"))
       .unionByName(edges.select(col("dst").as("node")))
       .distinct().withColumn("comp", col("node")).localCheckpoint(true)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.SolverOps
 
@@ -78,6 +78,22 @@ object SolverQueries extends QueryGroup {
     s.range(100000).select(col("id").as("row"), col("id").as("col"),
       when(col("id") < 3, col("id").cast("double") + 1.0)
         .otherwise(lit(1000.0) + pmod(col("id"), lit(17)).cast("double")).as("value"))
+
+  /** Planted-dual LAP cost over (i, j) at size n: c = u_i + v_j + s(i, j)
+    * with u = 13i mod 500, v = 7j mod 300, s = 0 on the permutation
+    * π(i) = 2001·i mod n and s ∈ [1, 1e6] off it, so by LP duality the
+    * optimal total is EXACTLY Σu + Σv. The noise only needs s ≥ 1 off π —
+    * the closed-form oracle never replays it — so it draws from the ~20×
+    * cheaper xxhash64 counter hash instead of the md5 oracle hash (the
+    * RandomOps.hashUFast rule: internal draws that are never value-compared
+    * may use the fast path). */
+  private[graft] def lapPlantedCost(n: Long): Column = {
+    require(BigInt(2001).gcd(BigInt(n)) == 1, s"2001 must be coprime to $n")
+    val u = pmod(col("i") * 13, lit(500L))
+    val v = pmod(col("j") * 7, lit(300L))
+    val noise = pmod(xxhash64(col("i"), col("j"), lit("lapPB")), lit(1000000L)) + 1
+    when(col("j") === pmod(col("i") * 2001, lit(n)), u + v).otherwise(u + v + noise)
+  }
 
   private def eigsDf(s: SparkSession, ev: Seq[Double]): DataFrame =
     s.createDataFrame(ev.zipWithIndex.map { case (v, i) =>
@@ -253,11 +269,10 @@ object SolverQueries extends QueryGroup {
       eigsDf(s, SolverOps.eigshSmallestAuto(bigDiagFixture(s), 100000L, 3))
     }),
     "solver_lap" -> ((s, d) => SolverOps.lapAssignmentSummary(s, 50)),
-    // auto tier (r14): n·T = 8.5e3 → driver Gauss-Seidel + typedLit-price
-    // certificate. The previous keyedFinal=true spent ~7 s in 16 keyed
-    // Jacobi rounds on a 500-row problem — pure per-round job latency; the
-    // keyed-phase path stays covered by Solver2Spec, and the certificate
-    // guarantees the same exact optimum in every tier.
+    // n·(T+1) = 8.5e3 kernel rows → the driver tier (SolverOps.lapTier); it
+    // certifies from the kernel bound, with no distributed certificate scan.
+    // The other tiers reach the same exact optimum (the certificate proves
+    // it in every tier), pinned by Solver2Spec.
     "solver_lap_dist" -> ((s, d) =>
       SolverOps.lapAuctionDistributed(s, 500)),
     "solver_lap_planted" -> ((s, d) => {
@@ -268,46 +283,25 @@ object SolverQueries extends QueryGroup {
       // closed form in SQL, no external solver needed (the n=500 row's
       // constant needed one). The planted edge costs ≤ 800 vs ~1e6 hash
       // noise, so it lands in every row's top-T kernel; the certificate
-      // pass scans all n² entries through the broadcast-join price form
-      // (priceJoinThreshold=0 — the form that scales; the typedLit path
-      // stays covered by solver_lap_dist). n=2000 keeps the n²=4e6-row
-      // md5 cost-generation affordable per round; the n=5e4 certificate
-      // pass is the one-off run recorded in SCALE.md.
+      // pass joins the prices as a broadcast (j, p) table. n=2000 keeps the
+      // n²=4e6-row md5 cost-generation affordable per round; the n=5e4
+      // certificate pass is the one-off run recorded in SCALE.md.
       val u = pmod(col("i") * 13, lit(500L))
       val v = pmod(col("j") * 7, lit(300L))
       val noise = pmod(graft.operators.TextOps.h32(
         concat_ws(":", col("i"), col("j"), lit("lapP"))), lit(1000000L)) + 1
       val c = when(col("j") === pmod(col("i") * 2001, lit(2000L)), u + v)
         .otherwise(u + v + noise)
-      SolverOps.lapAuctionDistributed(s, 2000, priceJoinThreshold = 0,
-        costExpr = Some(c))
+      SolverOps.lapAuctionDistributed(s, 2000, costExpr = Some(c))
     }),
-    "solver_lap_planted_big" -> ((s, d) => {
-      // the 5×-bigger certificate row (VERDICT r6 item 6): same planted
-      // dual construction at n=10000 (1e8-entry cost matrix, kernel
-      // collect = n·topT ≈ 1.7e5 rows — the one driver object that grows
-      // with n, exercised at 5× the per-round size; the 2e4/5e4 one-off
-      // runs live in SCALE.md). The s(i,j) noise only needs s ≥ 1 off the
-      // permutation — the CLOSED-FORM oracle (Σu + Σv by LP duality) never
-      // replays it — so it draws from the ~20× cheaper xxhash64 counter
-      // hash instead of the md5 oracle hash (the RandomOps.hashUFast rule:
-      // internal draws that are never value-compared may use the fast
-      // path). 2001 ⊥ 10000 so π is a permutation.
-      val nB = 10000L
-      val u = pmod(col("i") * 13, lit(500L))
-      val v = pmod(col("j") * 7, lit(300L))
-      val noise = pmod(xxhash64(col("i"), col("j"), lit("lapPB")), lit(1000000L)) + 1
-      val c = when(col("j") === pmod(col("i") * 2001, lit(nB)), u + v)
-        .otherwise(u + v + noise)
-      // auto tier (r14, VERDICT r13 item 5): n·T = 1.7e5 → the exec-resident
-      // auction — the WHOLE ε-schedule in one task holding the coalesced
-      // kernel, no price array on the driver (the property keyedFinal=true
-      // bought), but ONE Spark job instead of coarse driver phases + 7 keyed
-      // Jacobi rounds (~5.5 s of round-trip latency at this n). The keyed
-      // certificate still consumes the state table directly.
-      SolverOps.lapAuctionDistributed(s, nB.toInt, priceJoinThreshold = 0,
-        costExpr = Some(c))
-    }),
+    "solver_lap_planted_big" -> ((s, d) =>
+      // the 5×-bigger certificate row (VERDICT r6 item 6): the planted dual
+      // at n=10000 (1e8-entry cost matrix, n·(T+1) = 1.7e5 kernel rows, 5×
+      // the per-round size; the 2e4/5e4 one-off runs live in SCALE.md).
+      // That kernel size takes the exec tier (SolverOps.lapTier): the whole
+      // ε-schedule in one task holding the coalesced kernel, no price array
+      // on the driver, and the certificate consumes the state table directly.
+      SolverOps.lapAuctionDistributed(s, 10000, costExpr = Some(lapPlantedCost(10000L)))),
     "solver_rsvd_sparse" -> ((s, d) => {
       // closed-form rank-8 fixture (exact σ, SQL oracle); the real-data
       // variant (cooOrdersParts, 20k-column Ω) lives in Solver2Spec

@@ -22,6 +22,15 @@ object DispatchProps extends Properties("SizeDispatch") {
 
   private lazy val spark = TestSpark.spark
 
+  /** `body`'s result and the `prefix` counters it added: the tier a size
+    * dispatch took. */
+  private def tierCounted[T](prefix: String)(body: => T): (T, Map[String, Long]) =
+    Instrument.withExclusive {
+      val before = Instrument.snapshot()
+      val out = body
+      (out, Instrument.since(before).filter(_._1.startsWith(prefix)))
+    }
+
   private val edgeGen: Gen[List[(Long, Long)]] =
     Gen.choose(5, 40).flatMap { n =>
       Gen.choose(n - 1, 3 * n).flatMap { m =>
@@ -37,12 +46,15 @@ object DispatchProps extends Properties("SizeDispatch") {
     forAll(edgeGen) { edges =>
       import spark.implicits._
       val df = edges.toDF("src", "dst")
-      def labels(threshold: Long) =
+      def labels(threshold: Long) = tierCounted("cc.tier.") {
         LabelOps.connectedComponents(df, localThreshold = threshold)
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val local = labels(Long.MaxValue)
-      val dist = labels(-1L)
-      Prop(local == dist) :| s"local=$local dist=$dist"
+      }
+      val (local, localTier) = labels(Long.MaxValue)
+      val (dist, distTier) = labels(-1L)
+      Prop(local == dist) :| s"local=$local dist=$dist" &&
+        Prop(localTier == Map("cc.tier.local" -> 1L)) :| s"local branch counted $localTier" &&
+        Prop(distTier == Map("cc.tier.distributed" -> 1L)) :| s"distributed branch counted $distTier"
     }
 
   property("MST: local Kruskal == distributed Boruvka (same tie-break)") =
@@ -55,13 +67,16 @@ object DispatchProps extends Properties("SizeDispatch") {
             + lit(0.001)).as("value"))
       val sym = df.unionByName(
         df.select(col("dst").as("src"), col("src").as("dst"), col("value")))
-      def forest(threshold: Long) =
+      def forest(threshold: Long) = tierCounted("mst.tier.") {
         SolverOps.boruvkaMst(sym, localThreshold = threshold)
           .collect().map(r => (r.getLong(0), r.getLong(1),
             math.rint(r.getDouble(2) * 1e9))).toSet
-      val local = forest(Long.MaxValue)
-      val dist = forest(-1L)
-      Prop(local == dist) :| s"local=$local dist=$dist"
+      }
+      val (local, localTier) = forest(Long.MaxValue)
+      val (dist, distTier) = forest(-1L)
+      Prop(local == dist) :| s"local=$local dist=$dist" &&
+        Prop(localTier == Map("mst.tier.local" -> 1L)) :| s"local branch counted $localTier" &&
+        Prop(distTier == Map("mst.tier.distributed" -> 1L)) :| s"distributed branch counted $distTier"
     }
 
   // VERDICT r10 item 3: the block-width lever now has a dispatch rule,
@@ -83,14 +98,19 @@ object DispatchProps extends Properties("SizeDispatch") {
     Prop(SolverOps.eigshBlockAuto(1000000L, 1000000L, 22, 25) == 1) :| "k-room clamp",
     Prop(SolverOps.eigshBlockAuto(1000000L, 1000000L, 3, 5) == 1) :| "m-room clamp")
 
-  // VERDICT r11 item 8: LAP kernel width T, floor-measured (SCALE.md
-  // round-12 `laptopt`): T=8 starves the auction into maxRepair
-  // column-generation loops (4.7x cliff at n=2e4), T=32+ doubles kernel
-  // shuffle volume for zero repair win — T=16 is floor-best flat.
-  property("LAP kernel-width dispatch: measured flat 16") =
-    forAll(Gen.choose(1, 10000000)) { n =>
-      Prop(SolverOps.lapTopTAuto(n) == 16) :| s"n=$n"
-    }
+  // The LAP tier is a function of kernel rows n·(T+1) alone: driver up
+  // to 1e5, exec up to 1e7, keyed past it. T = 0 puts the boundary rows
+  // on exact n; the T = 16 cells are the queries' own sizes.
+  property("LAP tier dispatch: kernel-row boundaries 1e5 and 1e7") = {
+    import SolverOps.{lapTier, LapTier}
+    Prop.all(
+      Prop(lapTier(100000L, 0) == LapTier.Driver) :| "1e5 rows",
+      Prop(lapTier(100001L, 0) == LapTier.Exec) :| "1e5+1 rows",
+      Prop(lapTier(10000000L, 0) == LapTier.Exec) :| "1e7 rows",
+      Prop(lapTier(10000001L, 0) == LapTier.Keyed) :| "1e7+1 rows",
+      Prop(lapTier(2000L, SolverOps.LapKernelT) == LapTier.Driver) :| "solver_lap_planted",
+      Prop(lapTier(10000L, SolverOps.LapKernelT) == LapTier.Exec) :| "solver_lap_planted_big")
+  }
 
   property("eigshSmallestAuto: small-nnz tier equals the driver-local path") = {
     // 30-node chain Laplacian — closed-form spectrum; auto must take the

@@ -4,6 +4,7 @@ import breeze.linalg.{svd => bsvd, DenseMatrix, DenseVector, eigSym}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.SolverOps
+import graft.operators.SolverOps.LapTier
 
 /** Golden-value checks for QR/lstsq/rSVD/Lanczos/LAP against Breeze and
   * brute force (the reference's pytest-vs-scipy tier).
@@ -115,46 +116,31 @@ class Solver2Spec extends AnyFunSuite {
     assert(rows.map(_.getInt(1)).distinct.length == 50)
   }
 
-  test("distributed auction LAP total matches Hungarian exactly") {
-    val Array(row) = SolverOps.lapAuctionDistributed(spark, 60, topT = 8).collect()
-    // same integer cost matrix rebuilt driver-side, solved with Hungarian
+  /** The exact optimum of [[SolverOps.lapAuctionDistributed]]'s default
+    * n×n cost matrix (md5 h32 of "i:j:lap" mod 1e6), rebuilt driver-side
+    * and solved with Hungarian. */
+  private def hungarianTotal(n: Int): Long = {
     def h32(s: String): Long = {
       val hex = java.security.MessageDigest.getInstance("MD5")
         .digest(s.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
       java.lang.Long.parseLong(hex, 16)
     }
-    val cost = Array.tabulate(60, 60)((i, j) =>
-      (h32(s"$i:$j:lap") % 1000000L).toDouble)
-    val (_, total) = SolverOps.hungarian(cost)
-    assert(row.getLong(0) == 60L, "assignment must be a perfect matching")
-    assert(row.getLong(1) == total.toLong,
-      s"auction total ${row.getLong(1)} vs Hungarian ${total.toLong}")
+    val cost = Array.tabulate(n, n)((i, j) => (h32(s"$i:$j:lap") % 1000000L).toDouble)
+    SolverOps.hungarian(cost)._2.toLong
   }
 
-  test("keyed (DataFrame-state) final auction phase reaches the exact optimum") {
-    // keyedFinal routes the last ε-phase through lapKeyedPhase — Jacobi
-    // bids + per-column max_by with prices/assignments as DataFrames; the
-    // driver Gauss-Seidel form is the oracle via Hungarian equality
-    val Array(row) = SolverOps.lapAuctionDistributed(spark, 60, topT = 8,
-      keyedFinal = true).collect()
-    def h32(s: String): Long = {
-      val hex = java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(hex, 16)
-    }
-    val cost = Array.tabulate(60, 60)((i, j) =>
-      (h32(s"$i:$j:lap") % 1000000L).toDouble)
-    val (_, total) = SolverOps.hungarian(cost)
+  test("distributed auction LAP total matches Hungarian exactly") {
+    val Array(row) = SolverOps.lapAuctionDistributed(spark, 60, topT = 8).collect()
     assert(row.getLong(0) == 60L, "assignment must be a perfect matching")
-    assert(row.getLong(1) == total.toLong,
-      s"keyed-phase auction ${row.getLong(1)} vs Hungarian ${total.toLong}")
+    val want = hungarianTotal(60)
+    assert(row.getLong(1) == want, s"auction total ${row.getLong(1)} vs Hungarian $want")
   }
 
   ctest("keyed LAP frees its per-round checkpoints and certifies sub-quadratically") {
     graft.Instrument.reset()
     val before = spark.sparkContext.getPersistentRDDs.size
     val Array(row) = SolverOps.lapAuctionDistributed(spark, 60, topT = 8,
-      keyedFinal = true).collect()
+      tier = Some(LapTier.Keyed)).collect()
     assert(row.getLong(0) == 60L)
     val after = spark.sparkContext.getPersistentRDDs.size
     // every round's state checkpoint, the phase-local kernel/allI copies,
@@ -178,28 +164,21 @@ class Solver2Spec extends AnyFunSuite {
   }
 
   ctest("end-to-end keyed phases (kernel never collected) reach the exact optimum") {
-    // keyedPhases chains every ε-phase through DataFrame-resident state —
+    // the keyed tier chains every ε-phase through DataFrame-resident state —
     // prices flow phase-to-phase as projections, no driver arrays at all
     graft.Instrument.reset()
     val Array(row) = SolverOps.lapAuctionDistributed(spark, 60, topT = 8,
-      keyedPhases = true).collect()
-    def h32(s: String): Long = {
-      val hex = java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(hex, 16)
-    }
-    val cost = Array.tabulate(60, 60)((i, j) =>
-      (h32(s"$i:$j:lap") % 1000000L).toDouble)
-    val (_, total) = SolverOps.hungarian(cost)
+      tier = Some(LapTier.Keyed)).collect()
     assert(row.getLong(0) == 60L, "assignment must be a perfect matching")
-    assert(row.getLong(1) == total.toLong,
-      s"keyedPhases auction ${row.getLong(1)} vs Hungarian ${total.toLong}")
+    val want = hungarianTotal(60)
+    assert(row.getLong(1) == want, s"keyed auction ${row.getLong(1)} vs Hungarian $want")
     val snap = graft.Instrument.snapshot()
-    assert(snap.getOrElse("lap.keyed_phases", 0L) > 0L, s"phases not keyed: $snap")
-    assert(snap.getOrElse("lap.coarse_phases", 0L) == 0L,
-      s"driver coarse phases must not run in keyedPhases mode: $snap")
+    assert(snap.getOrElse("lap.tier.keyed", 0L) == 1L && !snap.contains("lap.tier.driver"),
+      s"the solve must run in the keyed tier only: $snap")
+    assert(snap.getOrElse("lap.keyed_rounds", 0L) >= snap.getOrElse("lap.phases", 0L),
+      s"every phase must run keyed rounds: $snap")
     assert(snap.getOrElse("lap.keyed_fallbacks", 0L) == 0L,
-      s"keyedPhases must certify without the driver fallback: $snap")
+      s"the keyed tier must certify without the driver fallback: $snap")
   }
 
   ctest("driver-path certificate certifies from the local kernel bound, sub-quadratically") {
@@ -209,62 +188,48 @@ class Solver2Spec extends AnyFunSuite {
     // strictly sub-quadratic generated certificate work
     graft.Instrument.reset()
     val Array(row) = SolverOps.lapAuctionDistributed(spark, 80, topT = 8).collect()
-    def h32(s: String): Long = {
-      val hex = java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(hex, 16)
-    }
-    val cost = Array.tabulate(80, 80)((i, j) =>
-      (h32(s"$i:$j:lap") % 1000000L).toDouble)
-    val (_, total) = SolverOps.hungarian(cost)
     assert(row.getLong(0) == 80L)
-    assert(row.getLong(1) == total.toLong,
-      s"bound-certified auction ${row.getLong(1)} vs Hungarian ${total.toLong}")
+    val want = hungarianTotal(80)
+    assert(row.getLong(1) == want, s"bound-certified auction ${row.getLong(1)} vs Hungarian $want")
     val snap = graft.Instrument.snapshot()
+    assert(snap.getOrElse("lap.tier.driver", 0L) == 1L, s"n·(T+1) = 720 is a driver solve: $snap")
     assert(snap.getOrElse("lap.certificate_full_scans", 0L) == 0L,
       s"driver path must certify without the full n2 scan: $snap")
     assert(snap.getOrElse("lap.certificate_entries", 0L) < 80L * 80L,
       s"certificate work must stay sub-quadratic: $snap")
   }
 
-  test("auction LAP price-join certificate path matches the literal-array path") {
-    // priceJoinThreshold=0 forces the broadcast-join certificate (the
-    // beyond-driver-literal-scale form); same fixture, same exact optimum
-    val Array(row) = SolverOps.lapAuctionDistributed(spark, 60, topT = 8,
-      priceJoinThreshold = 0).collect()
-    def h32(s: String): Long = {
-      val hex = java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(hex, 16)
-    }
-    val cost = Array.tabulate(60, 60)((i, j) =>
-      (h32(s"$i:$j:lap") % 1000000L).toDouble)
-    val (_, total) = SolverOps.hungarian(cost)
-    assert(row.getLong(0) == 60L)
-    assert(row.getLong(1) == total.toLong,
-      s"price-join auction ${row.getLong(1)} vs Hungarian ${total.toLong}")
-  }
-
-  ctest("keyedFinal repairs through the instrumented driver fallback on a starved kernel") {
-    // topT=2 starves the kernel, so the keyed phase converges on a
+  ctest("the exec tier repairs through the instrumented driver fallback on a starved kernel") {
+    // topT=2 starves the kernel, so the in-task auction converges on a
     // kernel-optimal assignment the full-matrix certificate must REJECT —
     // forcing the one pathological path the green queries never take:
     // collect state once, column-generate driver-side, still exact
     graft.Instrument.reset()
     val Array(row) = SolverOps.lapAuctionDistributed(spark, 40, topT = 2,
-      maxRepair = 30, keyedFinal = true).collect()
-    def h32(s: String): Long = {
-      val hex = java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(hex, 16)
-    }
-    val cost = Array.tabulate(40, 40)((i, j) =>
-      (h32(s"$i:$j:lap") % 1000000L).toDouble)
-    val (_, total) = SolverOps.hungarian(cost)
+      maxRepair = 30, tier = Some(LapTier.Exec)).collect()
     assert(row.getLong(0) == 40L)
-    assert(row.getLong(1) == total.toLong,
-      s"fallback-repaired auction ${row.getLong(1)} vs Hungarian ${total.toLong}")
+    val want = hungarianTotal(40)
+    assert(row.getLong(1) == want, s"fallback-repaired auction ${row.getLong(1)} vs Hungarian $want")
     val snap = graft.Instrument.snapshot()
+    assert(snap.getOrElse("lap.keyed_fallbacks", 0L) == 1L,
+      s"starved kernel must take the fallback exactly once: $snap")
+    assert(snap.getOrElse("lap.repair_iters", 0L) > 0L,
+      s"fallback must column-generate: $snap")
+  }
+
+  ctest("keyedFinal repairs through the instrumented driver fallback on a starved kernel") {
+    // the keyed tier runs its final ε-phase (every phase, in fact) as a
+    // keyed DataFrame-state auction; on a starved kernel that final phase
+    // converges on a kernel-optimal assignment the certificate must reject,
+    // so the keyed state is collected once and repaired driver-side
+    graft.Instrument.reset()
+    val Array(row) = SolverOps.lapAuctionDistributed(spark, 40, topT = 2,
+      maxRepair = 30, tier = Some(LapTier.Keyed)).collect()
+    assert(row.getLong(0) == 40L)
+    val want = hungarianTotal(40)
+    assert(row.getLong(1) == want, s"fallback-repaired auction ${row.getLong(1)} vs Hungarian $want")
+    val snap = graft.Instrument.snapshot()
+    assert(snap.getOrElse("lap.tier.keyed", 0L) == 1L, s"the solve must run keyed: $snap")
     assert(snap.getOrElse("lap.keyed_fallbacks", 0L) == 1L,
       s"starved kernel must take the fallback exactly once: $snap")
     assert(snap.getOrElse("lap.repair_iters", 0L) > 0L,
@@ -276,17 +241,9 @@ class Solver2Spec extends AnyFunSuite {
     // certificate must detect the violations and column-generate until exact
     val Array(row) = SolverOps.lapAuctionDistributed(spark, 40, topT = 2,
       maxRepair = 30).collect()
-    def h32(s: String): Long = {
-      val hex = java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(hex, 16)
-    }
-    val cost = Array.tabulate(40, 40)((i, j) =>
-      (h32(s"$i:$j:lap") % 1000000L).toDouble)
-    val (_, total) = SolverOps.hungarian(cost)
     assert(row.getLong(0) == 40L)
-    assert(row.getLong(1) == total.toLong,
-      s"repaired auction ${row.getLong(1)} vs Hungarian ${total.toLong}")
+    val want = hungarianTotal(40)
+    assert(row.getLong(1) == want, s"repaired auction ${row.getLong(1)} vs Hungarian $want")
   }
 
   test("sharded-basis Lanczos matches planted spectrum at n=1e5, driver memory flat") {

@@ -53,7 +53,7 @@ class TopKAggSpec extends AnyFunSuite {
     val c = when(col("j") === pmod(col("i") * 7, lit(300L)), u + v)
       .otherwise(u + v + noise)
     val row = graft.operators.SolverOps.lapAuctionDistributed(
-      spark, 300, priceJoinThreshold = 0, costExpr = Some(c)).head()
+      spark, 300, costExpr = Some(c)).head()
     val expect = (0L until 300L).map(i => (i * 13) % 500).sum +
       (0L until 300L).map(j => (j * 7) % 300).sum
     assert(row.getLong(0) === 300L)
